@@ -1448,7 +1448,8 @@ def _semantic_dedup_kernel_screen(
     int64 Q @ Q.T plus the identical sqrt/divide IEEE ops reproduce
     every cosine bit-for-bit. Returns None (caller keeps the relational
     path) when the force hook is set, the unit is non-default, or any
-    cluster exceeds the matrix-memory gate — the gate reads a k-row
+    cluster exceeds the matrix-memory gate or mixes vector lengths (a
+    ragged group cannot pack into one matrix) — the gate reads a k-row
     aggregate over the persisted carry relation, the bounded-action
     rule."""
     if _KMEANS_FORCE_RELATIONAL or unit != 10**6:
@@ -1462,8 +1463,16 @@ def _semantic_dedup_kernel_screen(
         ),
         "_id",
     ).persist()
-    sizes = carry.groupBy("cid").agg(F.count(F.lit(1)).alias("_n")).collect()
-    if not sizes or max(r["_n"] for r in sizes) > _SEMDEDUP_KERNEL_MAX_CLUSTER:
+    sizes = carry.groupBy("cid").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.min(F.size("_v")).alias("_lo"),
+        F.max(F.size("_v")).alias("_hi"),
+    ).collect()
+    if (
+        not sizes
+        or max(r["_n"] for r in sizes) > _SEMDEDUP_KERNEL_MAX_CLUSTER
+        or any(r["_lo"] != r["_hi"] for r in sizes)
+    ):
         carry.unpersist()
         return None
     thr = float(threshold)

@@ -59,6 +59,42 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
+_PIN_STORE: dict[tuple[str, str, str], object] = {}
+_PINS: dict[str, Callable[[SparkSession, str], object]] = {}
+
+
+def _pinned(name: str):
+    """Shared evidence: a relation several queries consume, built once per
+    (SparkContext, sf_dir) and returned as the same object on every later
+    call. Each body pins the expensive relation it builds with
+    ``localCheckpoint(eager=True)``, so the first call runs the corpus pass
+    and a hit does no Spark work beyond the ``applicationId`` read. The result is the relation each consumer would
+    build itself, so sharing it is result-invisible.
+
+    Each call first drops entries of other applications: a stopped
+    context's localCheckpoint blocks are gone, so a stale entry would
+    raise on first use, and keeping it pins dead references for the
+    process lifetime (ADVICE r10). A build that raises stores nothing.
+    ``_PINS`` keeps definition order, which ``bench.py`` uses to time each
+    pin's own marginal build (a pin that calls another is defined after
+    it)."""
+
+    def deco(build):
+        def pin(spark: SparkSession, sf_dir: str):
+            app = spark.sparkContext.applicationId
+            for k in [k for k in _PIN_STORE if k[0] != app]:
+                del _PIN_STORE[k]
+            key = (app, sf_dir, name)
+            if key not in _PIN_STORE:
+                _PIN_STORE[key] = build(spark, sf_dir)
+            return _PIN_STORE[key]
+
+        _PINS[name] = pin
+        return pin
+
+    return deco
+
+
 # canonical CSV/JSON copies for the source-reader queries, written at most
 # once per (format, sf_dir) per process — re-invocations (oracle loops,
 # bench repeats) reuse the cached path instead of leaking temp dirs
@@ -3056,41 +3092,24 @@ def q_winnow_verified(spark, sf_dir):
 # Four queries consume the SAME blocked-Jaccard(0.3) near-dup evidence
 # (ngram_jaccard_pairs, dedup_clusters, dedup_cluster_canonical,
 # golden_record_docs) — the blocked pair join dominates each (~12.6 s at
-# sf0.1, r9 bench). Build the pair table and its connected-component
-# closure ONCE per (SparkContext, sf_dir), localCheckpoint-pinned
-# (the _scan_sigma pattern); results are hash-identical to the unshared
-# form — the cache stores the same relation each query would build.
-_NEAR_DUP_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# sf0.1, r9 bench). The pair table and its connected-component closure
+# are two pins; the closure builds on the pair pin.
+@_pinned("near_dup_pairs")
+def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.jaccard_pairs(
+        _t(spark, sf_dir, "documents"),
+        block_col="source",
+        shingle_n=1,
+        threshold=0.3,
+    ).localCheckpoint(eager=True)
 
 
-def _evict_stale(cache: dict, app: str) -> None:
-    """Drop shared-evidence cache entries whose applicationId no longer
-    matches the live SparkContext: a stopped context's localCheckpoint
-    blocks are gone, so a stale entry would raise on first use — and
-    keeping it pins dead references for the process lifetime (ADVICE
-    r10). Keyed eviction keeps the caches O(live-app entries)."""
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
-
-
-def _near_dup_evidence(spark: SparkSession, sf_dir: str, what: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    _evict_stale(_NEAR_DUP_CACHE, app)
-    key = (app, sf_dir, what)
-    df = _NEAR_DUP_CACHE.get(key)
-    if df is None:
-        docs = _t(spark, sf_dir, "documents")
-        if what == "pairs":
-            df = dedup.jaccard_pairs(
-                docs, block_col="source", shingle_n=1, threshold=0.3
-            ).localCheckpoint(eager=True)
-        else:
-            df = dedup.near_dup_clusters(
-                docs.select("doc_id"),
-                _near_dup_evidence(spark, sf_dir, "pairs"),
-            ).localCheckpoint(eager=True)
-        _NEAR_DUP_CACHE[key] = df
-    return df
+@_pinned("near_dup_clusters")
+def _near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.near_dup_clusters(
+        _t(spark, sf_dir, "documents").select("doc_id"),
+        _near_dup_pairs(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -3112,7 +3131,7 @@ def _near_dup_evidence(spark: SparkSession, sf_dir: str, what: str) -> DataFrame
     "Exact token-set Jaccard for blocked candidate pairs (never all-pairs)",
 )
 def q_ngram_jaccard(spark, sf_dir):
-    return _near_dup_evidence(spark, sf_dir, "pairs")
+    return _near_dup_pairs(spark, sf_dir)
 
 
 @register(
@@ -3148,7 +3167,7 @@ def q_ngram_jaccard(spark, sf_dir):
     "the same closure with a recursive CTE",
 )
 def q_dedup_clusters(spark, sf_dir):
-    return _near_dup_evidence(spark, sf_dir, "clusters")
+    return _near_dup_clusters(spark, sf_dir)
 
 
 @register(
@@ -5352,16 +5371,6 @@ def q_pagerank(spark, sf_dir):
     return pr.select(_dec_numstr("node"), "rank_units", "rank")
 
 
-# pagerank / label_propagation / ppr_seeded all iterate over the SAME
-# symmetrized co-occurrence edge list; each was rebuilding (basket
-# explode + canonical distinct) and re-pinning it separately. Build it
-# ONCE per (SparkContext, sf_dir), pinned — the _scan_sigma pattern,
-# 4th instance; result-invisible (identical relation). This is also the
-# honest 100 TB shape: materialize the co-occurrence graph once, run
-# the graph algorithms against the materialization.
-_SYM_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 # Node ids are numeric partkey strings (the basket text contract), and
 # the iterative graph rounds re-shuffle id-keyed state every round.
 # Several outputs are id-ORDER-bearing (min-label communities, the BFS
@@ -5415,20 +5424,19 @@ def _dec_numstr(c: str):
     ).alias(c)
 
 
+# pagerank, label propagation, seeded PPR, k-core peeling and sampled
+# triangle counting iterate over the SAME symmetrized co-occurrence edge
+# list (basket explode + canonical distinct over lineitem, ~3.4 s at
+# sf0.1). This is also the honest 100 TB shape: materialize the
+# co-occurrence graph once, run the graph algorithms against it.
+@_pinned("cooc_sym_edges")
 def _cooc_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import graph
 
-    app = spark.sparkContext.applicationId
-    _evict_stale(_SYM_EDGES_CACHE, app)
-    key = (app, sf_dir)
-    df = _SYM_EDGES_CACHE.get(key)
-    if df is None:
-        baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-        df = graph.symmetric_edges(basket.basket_pairs(baskets)).localCheckpoint(
-            eager=True
-        )
-        _SYM_EDGES_CACHE[key] = df
-    return df
+    baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
+    return graph.symmetric_edges(basket.basket_pairs(baskets)).localCheckpoint(
+        eager=True
+    )
 
 
 @register(
@@ -6517,7 +6525,7 @@ def q_hybrid_rrf(spark, sf_dir):
 )
 def q_dedup_canonical(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    clusters = _near_dup_evidence(spark, sf_dir, "clusters")
+    clusters = _near_dup_clusters(spark, sf_dir)
     q = docs.select("doc_id", text.quality_expr(F.col("text")).alias("quality"))
     j = clusters.join(q, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
@@ -7521,23 +7529,11 @@ def _bpe_oracle(
 # (bpe_learn_merges, bpe_encode_vocab, wordpiece_encode_bpe_vocab) —
 # the loop is 12 driver-synchronous rounds of explode + hash-agg +
 # argmax + rewrite over the distinct-word table (~2.4 s at sf0.1,
-# dominated by round latency, not data). Run it ONCE per
-# (SparkContext, sf_dir), pinned — the _scan_sigma / _pca_scatter
-# pattern; result-invisible (the helper returns the identical
-# (merges, seqs) pair each query would build internally; both are
-# already localCheckpoint-backed by _bpe_rounds itself).
-_BPE_ROUNDS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# dominated by round latency, not data). The (merges, seqs) pair is
+# already localCheckpoint-backed by _bpe_rounds itself.
+@_pinned("bpe_evidence")
 def _bpe_evidence(spark: SparkSession, sf_dir: str):
-    app = spark.sparkContext.applicationId
-    _evict_stale(_BPE_ROUNDS_CACHE, app)
-    key = (app, sf_dir)
-    pair = _BPE_ROUNDS_CACHE.get(key)
-    if pair is None:
-        pair = text._bpe_rounds(_t(spark, sf_dir, "documents"), 12, "text")
-        _BPE_ROUNDS_CACHE[key] = pair
-    return pair
+    return text._bpe_rounds(_t(spark, sf_dir, "documents"), 12, "text")
 
 
 @register(
@@ -8247,9 +8243,7 @@ def q_containment_trigram(spark, sf_dir):
 )
 def q_golden_record(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return dedup.golden_record(
-        docs, _near_dup_evidence(spark, sf_dir, "clusters")
-    )
+    return dedup.golden_record(docs, _near_dup_clusters(spark, sf_dir))
 
 
 @register(
@@ -10960,26 +10954,14 @@ def q_schema_drift(spark, sf_dir):
 
 # Three queries consume the SAME DSIR importance model over the same
 # target predicate (dsir_importance_en, dsir_select_gumbel100,
-# dsir_weight_ess) — each was re-running the corpus-sized tokenize +
-# unigram/bigram explode + hashed-bucket aggregation (~1.9 s of each
-# 1.9/2.1/2.0 s wall at sf0.1). Build the doc-count-sized log-weight
-# table ONCE per (SparkContext, sf_dir), pinned — the _scan_sigma /
-# _pca_scatter pattern; result-invisible (the helper returns the
-# identical relation each query builds internally).
-_DSIR_LW_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# dsir_weight_ess): a corpus-sized tokenize + unigram/bigram explode +
+# hashed-bucket aggregation (~1.9 s of each 1.9/2.1/2.0 s wall at
+# sf0.1), reduced to a doc-count-sized log-weight table.
+@_pinned("dsir_lw")
 def _dsir_lw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    _evict_stale(_DSIR_LW_CACHE, app)
-    key = (app, sf_dir)
-    df = _DSIR_LW_CACHE.get(key)
-    if df is None:
-        df = text.dsir_importance(
-            _t(spark, sf_dir, "documents"), F.col("lang") == "en"
-        ).localCheckpoint(eager=True)
-        _DSIR_LW_CACHE[key] = df
-    return df
+    return text.dsir_importance(
+        _t(spark, sf_dir, "documents"), F.col("lang") == "en"
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -11603,21 +11585,10 @@ def _pca_multi_oracle(
 # The PCA pair (pca_top_component_embeddings + pca_two_components_
 # embeddings) both start from the SAME n*d^2 corpus pass (the centered
 # scatter matrix) — the dominant cost of each (~3-4 s of their 4.0/5.5 s
-# r12 walls). Build it ONCE per (SparkContext, sf_dir), pinned, like
-# _scan_sigma; injection is result-invisible (the helper returns the
-# identical relation each operator would build internally).
-_PCA_SCATTER_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# r12 walls).
+@_pinned("pca_scatter")
 def _pca_scatter(spark: SparkSession, sf_dir: str):
-    app = spark.sparkContext.applicationId
-    _evict_stale(_PCA_SCATTER_CACHE, app)
-    key = (app, sf_dir)
-    pair = _PCA_SCATTER_CACHE.get(key)
-    if pair is None:
-        pair = similarity.pca_corpus_scatter(_t(spark, sf_dir, "embeddings"))
-        _PCA_SCATTER_CACHE[key] = pair
-    return pair
+    return similarity.pca_corpus_scatter(_t(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -12888,24 +12859,12 @@ def q_substring_spans(spark, sf_dir):
 # dedup_substring_spans (the span REPORT) and dedup_cut_spans (the
 # APPLY step) both run the identical corpus 8-gram hash + corpus-wide
 # duplicate count + islands merge (~2.5 s of each ~2.9 s wall at
-# sf0.1). Build the duplicated-content-sized span table ONCE per
-# (SparkContext, sf_dir), pinned — the _scan_sigma / _pca_scatter
-# pattern; result-invisible (the helper returns the identical relation
-# each query builds internally).
-_SUBSTR_SPANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# sf0.1), reduced to a duplicated-content-sized span table.
+@_pinned("substr_spans")
 def _substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    _evict_stale(_SUBSTR_SPANS_CACHE, app)
-    key = (app, sf_dir)
-    df = _SUBSTR_SPANS_CACHE.get(key)
-    if df is None:
-        df = dedup.duplicated_substring_spans(
-            _t(spark, sf_dir, "documents"), gram=8
-        ).localCheckpoint(eager=True)
-        _SUBSTR_SPANS_CACHE[key] = df
-    return df
+    return dedup.duplicated_substring_spans(
+        _t(spark, sf_dir, "documents"), gram=8
+    ).localCheckpoint(eager=True)
 
 
 
@@ -14992,33 +14951,23 @@ _SCAN_SIM_CTES = f"""
     )"""
 
 
-# The SCAN pair (scan_edge_similarity_items + scan_clusters_items) share
-# the sigma table — the oriented-wedge build is the dominant cost of both
-# (r9 bench: 13.4 s + 25.6 s with sigma built twice). Build it ONCE per
-# (SparkContext, sf_dir), localCheckpoint-pinned; keyed on applicationId
-# so a restarted context never serves a dead checkpoint. Results are
-# hash-identical to the unshared form: the cache stores the same pinned
-# relation scan_clusters would pin internally.
-_SCAN_SIGMA_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# The SCAN pair (scan_edge_similarity_items + scan_clusters_items),
+# truss peeling, clustering coefficients, transitivity and exact
+# triangle counts share the sigma table and its per-edge triangle
+# counts — the oriented-wedge build is the dominant cost of each (r9
+# bench: 13.4 s + 25.6 s with sigma built twice; 805 MB of shuffle at
+# sf0.1, the suite's largest).
+@_pinned("scan_sigma_tri")
 def _scan_sigma_tri(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     from .operators import graph
 
-    app = spark.sparkContext.applicationId
-    _evict_stale(_SCAN_SIGMA_CACHE, app)
-    key = (app, sf_dir)
-    pair = _SCAN_SIGMA_CACHE.get(key)
-    if pair is None:
-        baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-        sig, tri = graph.scan_edge_similarity(
-            basket.basket_pairs(baskets), return_triangles=True
-        )
-        pair = (sig.localCheckpoint(eager=True), tri)
-        _SCAN_SIGMA_CACHE[key] = pair
-    return pair
+    baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
+    sig, tri = graph.scan_edge_similarity(
+        basket.basket_pairs(baskets), return_triangles=True
+    )
+    return (sig.localCheckpoint(eager=True), tri)
 
 
 def _scan_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16673,28 +16622,12 @@ def _ordered() -> dict[str, Query]:
 
 
 def shared_evidence_builders() -> dict[str, Callable[[SparkSession, str], object]]:
-    """Ordered inventory of every per-(SparkContext, sf_dir) shared-evidence
-    pin. Calling a builder forces the COLD build (each pin is
-    localCheckpoint(eager=True)-backed, so the call runs the corpus pass);
-    a second call is a dict hit. ``bench.py`` times these once per full
-    run and reports them as first-class ``pin_builds`` rows next to the
-    per-query marginal walls (r12 VERDICT item 1): the timed per-query
-    figures exclude pin construction by design (warmup-absorbed), so the
-    pin walls are the missing piece of the cold-session total.
-
-    Order matters only for cost attribution: ``near_dup_clusters`` builds
-    on ``near_dup_pairs`` and is timed after it, so each row is the pin's
-    own marginal build."""
-    return {
-        "near_dup_pairs": lambda s, d: _near_dup_evidence(s, d, "pairs"),
-        "near_dup_clusters": lambda s, d: _near_dup_evidence(s, d, "clusters"),
-        "cooc_sym_edges": _cooc_sym_edges,
-        "scan_sigma_tri": _scan_sigma_tri,
-        "pca_scatter": _pca_scatter,
-        "dsir_lw": _dsir_lw,
-        "bpe_evidence": _bpe_evidence,
-        "substr_spans": _substr_spans,
-    }
+    """Every ``_pinned`` shared-evidence builder, in definition order.
+    Calling one forces the COLD build; a second call is a store hit.
+    ``bench.py`` times these once per full run and reports them as
+    ``pin_builds`` rows next to the per-query marginal walls, which
+    exclude pin construction by design (warmup-absorbed)."""
+    return dict(_PINS)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -59,6 +59,20 @@ def test_kernel_semantic_dedup_bit_equals_relational(spark, monkeypatch):
     assert fast == slow
 
 
+def test_kernel_semantic_dedup_ragged_equals_relational(spark, monkeypatch):
+    # a cluster mixing vector lengths cannot pack into one matrix: the
+    # screen must refuse the kernel and answer through the self-join
+    df = _vecs(spark, ragged=True)
+    fast = _collect_sorted(
+        similarity.semantic_dedup(df, k=4, iters=2, threshold=0.35)
+    )
+    monkeypatch.setattr(similarity, "_KMEANS_FORCE_RELATIONAL", True)
+    slow = _collect_sorted(
+        similarity.semantic_dedup(df, k=4, iters=2, threshold=0.35)
+    )
+    assert fast == slow and len(fast) == 60
+
+
 def test_ragged_seed_vectors_fall_back_to_relational(spark):
     # seed draw is md5-based: make EVERY vector ragged so whichever ids
     # are drawn, seed lengths differ and the gate must refuse to pack

@@ -77,28 +77,32 @@ def test_scan_edge_similarity_pins_canon(spark):
     assert explain.unbounded_single_partition_exchanges(df) == []
 
 
+def _pin_names():
+    return sorted(k[2] for k in registry._PIN_STORE)
+
+
 def test_scan_sigma_cache_shared_between_pair(spark, sf_smoke):
-    registry._SCAN_SIGMA_CACHE.clear()
+    registry._PIN_STORE.clear()
     a = registry._scan_sigma(spark, sf_smoke)
     b = registry._scan_sigma(spark, sf_smoke)
     assert a is b
-    # scan_clusters consumes the cached sigma without rebuilding it
-    assert len(registry._SCAN_SIGMA_CACHE) == 1
+    # scan_clusters consumes the pinned sigma without rebuilding it
+    assert _pin_names() == ["scan_sigma_tri"]
     registry.REGISTRY["scan_clusters_items"].fn(spark, sf_smoke)
-    assert len(registry._SCAN_SIGMA_CACHE) == 1
+    assert _pin_names() == ["scan_sigma_tri"]
 
 
 def test_near_dup_evidence_cache_shared(spark, sf_smoke):
-    registry._NEAR_DUP_CACHE.clear()
-    p1 = registry._near_dup_evidence(spark, sf_smoke, "pairs")
-    c1 = registry._near_dup_evidence(spark, sf_smoke, "clusters")
-    assert registry._near_dup_evidence(spark, sf_smoke, "pairs") is p1
-    assert registry._near_dup_evidence(spark, sf_smoke, "clusters") is c1
-    # all four consumers resolve to the two cached relations
-    assert len(registry._NEAR_DUP_CACHE) == 2
+    registry._PIN_STORE.clear()
+    p1 = registry._near_dup_pairs(spark, sf_smoke)
+    c1 = registry._near_dup_clusters(spark, sf_smoke)
+    assert registry._near_dup_pairs(spark, sf_smoke) is p1
+    assert registry._near_dup_clusters(spark, sf_smoke) is c1
+    # all four consumers resolve to the two pinned relations
+    assert _pin_names() == ["near_dup_clusters", "near_dup_pairs"]
     registry.REGISTRY["golden_record_docs"].fn(spark, sf_smoke)
     registry.REGISTRY["dedup_cluster_canonical"].fn(spark, sf_smoke)
-    assert len(registry._NEAR_DUP_CACHE) == 2
+    assert _pin_names() == ["near_dup_clusters", "near_dup_pairs"]
 
 
 def _rowset(df):
@@ -115,10 +119,10 @@ def test_near_dup_cache_equals_uncached(spark, sf_smoke):
     fresh = dedup.jaccard_pairs(
         docs, block_col="source", shingle_n=1, threshold=0.3
     )
-    cached = registry._near_dup_evidence(spark, sf_smoke, "pairs")
+    cached = registry._near_dup_pairs(spark, sf_smoke)
     assert _rowset(cached) == _rowset(fresh)
     fresh_cl = dedup.near_dup_clusters(docs.select("doc_id"), fresh)
-    cached_cl = registry._near_dup_evidence(spark, sf_smoke, "clusters")
+    cached_cl = registry._near_dup_clusters(spark, sf_smoke)
     assert _rowset(cached_cl) == _rowset(fresh_cl)
 
 

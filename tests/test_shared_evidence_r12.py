@@ -89,3 +89,8 @@ def test_registry_caches_return_identical_relation(spark, sf_smoke):
     direct_merges, direct_seqs = text._bpe_rounds(d, 12, "text")
     assert _rows(merges, ["round"]) == _rows(direct_merges, ["round"])
     assert _rows(seqs, ["word"]) == _rows(direct_seqs, ["word"])
+
+    # exactly one store entry per pin name, however often it was called
+    names = [k[2] for k in registry._PIN_STORE]
+    for pin in ("dsir_lw", "substr_spans", "bpe_evidence"):
+        assert names.count(pin) == 1
