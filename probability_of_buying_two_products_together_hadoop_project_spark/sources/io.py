@@ -92,37 +92,49 @@ def write_reference_pairs_layout(pairs: DataFrame, out_dir: str) -> list[str]:
     the reference's TextOutputFormat used, so files are byte-equal to the
     committed goldens. Returns the three file paths (part-r-00000..2).
 
+    The upstream plan runs once: every row carries its range id
+    ``_part``, one global sort on (``_part``, item, neighbor) puts the
+    rows in file order, one ``collect`` brings them back, and the driver
+    splits them into the three files (all three are written, even when a
+    range is empty). There is no ``coalesce(1)``: the ordered collect
+    already yields file order, and a coalesce before the sort would
+    funnel the marginal window through one task.
+
+    Item ids go through ANSI ``cast("int")``, so a non-numeric or
+    out-of-range id raises, as the reference's ``Integer.parseInt`` does
+    (:100).
+
     This is a parity artifact, not a scale path: real output goes to
-    Parquet. The per-partition ``coalesce(1)`` mirrors the reference's
-    one-file-per-reducer contract.
+    Parquet.
     """
     import os
 
+    rows = _reference_layout_query(pairs).collect()
+    os.makedirs(out_dir, exist_ok=True)
+    paths = []
+    for idx in range(3):
+        p = os.path.join(out_dir, f"part-r-{idx:05d}")
+        with open(p, "w") as f:
+            f.writelines(r["line"] + "\n" for r in rows if r["_part"] == idx)
+        paths.append(p)
+    return paths
+
+
+def _reference_layout_query(pairs: DataFrame) -> DataFrame:
+    """(``_part``, ``line``) rows of the reference layout, in file order."""
     from pyspark.sql import functions as F
 
+    item_int = F.col("item").cast("int")
+    part = F.when(item_int < 30, 0).when(item_int < 60, 1).otherwise(2).alias("_part")
     line = F.concat(
         F.lit("["), F.col("item"), F.lit(", "), F.col("neighbor"),
         F.lit("]\t"), F.col("prob").cast("string"),
     ).alias("line")
-    item_int = F.col("item").cast("int")
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for idx, pred in enumerate(
-        [item_int < 30, (item_int >= 30) & (item_int < 60), item_int >= 60]
-    ):
-        rows = (
-            pairs.filter(pred)
-            .orderBy("item", "neighbor")
-            .select(line)
-            .coalesce(1)
-            .collect()
-        )
-        p = os.path.join(out_dir, f"part-r-{idx:05d}")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(r["line"] + "\n")
-        paths.append(p)
-    return paths
+    return (
+        pairs.select(part, "item", "neighbor", "prob")
+        .orderBy("_part", "item", "neighbor")
+        .select("_part", line)
+    )
 
 
 def write_zordered(

@@ -7,8 +7,17 @@ FIXTURES.md §1a. Pair probabilities must be bit-equal doubles.
 """
 
 import math
+import os
+import uuid
+
+import pytest
 
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
+from probability_of_buying_two_products_together_hadoop_project_spark.plans.explain import (
+    formatted_plan,
+    unbounded_single_partition_exchanges,
+)
+from probability_of_buying_two_products_together_hadoop_project_spark.sources import io
 
 INPUT_LINES = [
     "Mary 34 56 29 12 34 56 92 29 34 12",
@@ -52,6 +61,14 @@ GOLDEN_PAIRS = {
     ("92", "56"): 0.08333333333333333,
     ("92", "79"): 0.08333333333333333,
 }
+
+
+def golden_input_file(tmp_path) -> str:
+    """INPUT_LINES written as a text file: the reference's input, read
+    through a file scan."""
+    path = tmp_path / "input"
+    path.write_text("\n".join(INPUT_LINES) + "\n")
+    return str(path)
 
 
 def _baskets(spark):
@@ -135,14 +152,8 @@ def test_golden_stripe_and_hybrid_files_as_maps(spark):
 def test_reference_layout_byte_equal(spark, tmp_path):
     """Full-stack parity: partitioning (O7), sort order (O8), and text
     format (O13) reproduce the committed golden part files byte-for-byte."""
-    import os
-
-    from probability_of_buying_two_products_together_hadoop_project_spark.sources import io
-
     ref_dir = "/root/reference/output/CrystalBallPair"
     if not os.path.isdir(ref_dir):
-        import pytest
-
         pytest.skip("reference goldens not available")
     pairs = basket.cooccurrence_pairs(_baskets(spark))
     out = io.write_reference_pairs_layout(pairs, str(tmp_path / "golden_layout"))
@@ -151,6 +162,78 @@ def test_reference_layout_byte_equal(spark, tmp_path):
             os.path.join(ref_dir, f"part-r-{idx:05d}"), "rb"
         ) as f_want:
             assert f_got.read() == f_want.read(), f"part-r-{idx:05d} differs"
+
+
+def _golden_layout_lines():
+    """The three reference part files built from GOLDEN_PAIRS: ranges
+    <30 / 30-59 / >=60, each sorted by (item, neighbor) as strings. Python
+    ``repr`` prints these 34 doubles with the same digits as Java
+    ``Double.toString`` (checked against the three-collect sink, whose
+    files byte-equal the committed goldens)."""
+    parts = [[], [], []]
+    for (i, n), p in sorted(GOLDEN_PAIRS.items()):
+        parts[0 if int(i) < 30 else 1 if int(i) < 60 else 2].append(f"[{i}, {n}]\t{p!r}\n")
+    return ["".join(lines) for lines in parts]
+
+
+def _read_parts(paths):
+    assert [os.path.basename(p) for p in paths] == [f"part-r-{i:05d}" for i in range(3)]
+    out = []
+    for p in paths:
+        with open(p) as f:
+            out.append(f.read())
+    return out
+
+
+def test_reference_layout_embedded_golden(spark, tmp_path):
+    """The sink's three files over the embedded fixture byte-equal the
+    golden layout, without the reference checkout."""
+    pairs = basket.cooccurrence_pairs(_baskets(spark))
+    out = io.write_reference_pairs_layout(pairs, str(tmp_path / "layout"))
+    assert _read_parts(out) == _golden_layout_lines()
+
+
+def test_reference_layout_writes_empty_ranges(spark, tmp_path):
+    """All items < 30: part-r-00001 and part-r-00002 exist and are empty."""
+    df = spark.createDataFrame([("A 1 2 3 1 29",), ("B 29 2",)], ["value"])
+    pairs = basket.cooccurrence_pairs(basket.baskets_from_text(df))
+    got = _read_parts(io.write_reference_pairs_layout(pairs, str(tmp_path / "low")))
+    assert got[0].startswith("[1, 2]\t") and got[1:] == ["", ""]
+
+
+@pytest.mark.parametrize("bad", ["a", "99999999999"])
+def test_reference_layout_rejects_non_int_item(spark, tmp_path, bad):
+    """The reference's range partitioner runs ``Integer.parseInt`` on the
+    item and throws on a non-numeric or out-of-range id (SURVEY §1.3); the
+    sink's ANSI ``cast("int")`` raises instead of routing it to a file."""
+    df = spark.createDataFrame([(f"C {bad} 12 34",)], ["value"])
+    pairs = basket.cooccurrence_pairs(basket.baskets_from_text(df))
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        io.write_reference_pairs_layout(pairs, str(tmp_path / "bad"))
+
+
+def test_reference_layout_runs_plan_once(spark, tmp_path):
+    """Structural guard: the sink runs the upstream plan once (the
+    three-collect sink launched 15 jobs on this input), and its
+    sorted query has no unbounded single-partition exchange. That check
+    does not see a ``coalesce(1)``, which is no exchange, so the test also
+    asserts a range-partitioned sort and no Coalesce. The input is a text
+    file, so the plan's leaf is a file scan, not a local table."""
+    src = golden_input_file(tmp_path)
+    pairs = basket.cooccurrence_pairs(basket.read_baskets_text(spark, src))
+    query = io._reference_layout_query(pairs)
+    assert unbounded_single_partition_exchanges(query) == []
+    plan = formatted_plan(query)
+    assert "rangepartitioning(_part" in plan and "Coalesce" not in plan
+    sc = spark.sparkContext
+    group = f"reference-layout-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = io.write_reference_pairs_layout(pairs, str(tmp_path / "layout"))
+    finally:
+        sc.setJobGroup("", "", False)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    assert _read_parts(out) == _golden_layout_lines()
 
 
 def test_last_only_item_never_a_key(spark):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from probability_of_buying_two_products_together_hadoop_project_spark.sources import io
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
+from tests.test_basket_golden import golden_input_file
 
 
 def _nation(spark, sf_smoke):
@@ -145,7 +146,7 @@ def test_basket_text_datasource_write_roundtrip(spark, tmp_path):
         basket_datasource,
     )
 
-    src = basket_datasource.read_baskets(spark, "/root/reference/input/input")
+    src = basket_datasource.read_baskets(spark, golden_input_file(tmp_path))
     out = str(tmp_path / "out")
     src.write.format("basket_text").option("path", out).mode("append").save()
     import os
@@ -169,7 +170,7 @@ def test_basket_text_datasource_overwrite_and_stragglers(spark, tmp_path):
     )
 
     out = str(tmp_path / "out")
-    src = basket_datasource.read_baskets(spark, "/root/reference/input/input")
+    src = basket_datasource.read_baskets(spark, golden_input_file(tmp_path))
     src.write.format("basket_text").option("path", out).mode("append").save()
     n_first = len(os.listdir(out))
     assert n_first > 0
