@@ -1895,11 +1895,11 @@ def fs_em(
     0/1, and it keeps every denominator positive).
 
     Scale: the ONLY corpus-sized work is one aggregation of the pair
-    relation into <= 2^F pattern-count rows; all ``iters`` EM rounds run
-    over that tiny table with 1-row parameter state (checkpointed per
-    round — the k-core lineage lesson). Output: one row per field
-    ``(field, m_units, u_units, p_units, m, u, p)`` with the floats
-    derived by one exact division each.
+    relation into <= 2^F pattern-count rows; all ``iters`` EM rounds
+    fold into one expression over that tiny table, one job. Output: one
+    row per field ``(field, m_units, u_units, p_units, m, u, p)`` with
+    the floats derived by one exact division each. An empty pair
+    relation gives every parameter the upper clamp 1e6 - 1.
     """
     pat, params = _fs_em_loop(
         pairs, flag_cols, iters, p0_units, m0_units, u0_units
@@ -1936,13 +1936,6 @@ def _fs_em_products(nf: int, dec: str) -> tuple[Column, Column]:
     return num_m, num_u
 
 
-# Test hook: False forces the relational round-per-job EM (the
-# equality test pins fold == rounds); the fold is otherwise always
-# applicable — its input is the <= 2^F-row pattern table by
-# construction, never corpus-sized.
-_FS_EM_EXPR_FOLD = True
-
-
 def _fs_em_loop(
     pairs: DataFrame,
     flag_cols: list[str],
@@ -1970,7 +1963,6 @@ def _fs_em_loop(
         if not 0 < v < P6:
             raise ValueError(f"{name}_units must be in (0, 1e6), got {v}")
     dec = "decimal(38,0)"
-    spark = pairs.sparkSession
     pat = (
         pairs.groupBy(
             *[F.col(c).cast("boolean").alias(f"_g{i}") for i, c in enumerate(flag_cols)]
@@ -1978,165 +1970,101 @@ def _fs_em_loop(
         .agg(F.count(F.lit(1)).alias("_n"))
         .localCheckpoint(eager=True)
     )
-    params = spark.range(1).select(
-        F.lit(p0_units).cast(dec).alias("_p"),
-        *[F.lit(m0_units).cast(dec).alias(f"_m{i}") for i in range(nf)],
-        *[F.lit(u0_units).cast(dec).alias(f"_u{i}") for i in range(nf)],
+    # The rounds iterate over <= 2^F pattern rows, so the whole EM —
+    # every E-step likelihood, posterior weight, M-step sum and clamp —
+    # folds into one expression over the collected pattern list (the
+    # markov_removal lesson): DECIMAL(38,0) products, truncating
+    # divisions, then the [1, 1e6-1] clamp (Python-mirror-tested).
+    pats1 = pat.agg(
+        F.collect_list(
+            F.struct(
+                F.array(*[F.col(f"_g{i}") for i in range(nf)]).alias("g"),
+                F.col("_n").cast(dec).alias("n"),
+            )
+        ).alias("_pats")
+    )
+    czero = f"CAST(0 AS {dec})"
+
+    def lik(start: str, off: int) -> str:
+        # Π over fields of (g_i ? param_i : 1e6 - param_i), seeded
+        # with `start` — the _fs_em_products left-to-right order
+        return (
+            f"aggregate(sequence(0, {nf - 1}), {start}, (ac, i) -> "
+            f"CAST(ac * (CASE WHEN element_at(x.g, i + 1) "
+            f"THEN element_at(pp, i + {off}) "
+            f"ELSE CAST({P6} AS {dec}) - element_at(pp, i + {off}) "
+            f"END) AS {dec}))"
+        )
+
+    nm = lik("element_at(pp, 1)", 2)
+    nu = lik(f"CAST({P6} AS {dec}) - element_at(pp, 1)", nf + 2)
+    zero_vec = f"transform(sequence(0, {nf - 1}), z -> {czero})"
+    sums = (
+        f"aggregate(_pats, named_struct("
+        f"'tw', {czero}, 'tnw', {czero}, 'nn', {czero}, "
+        f"'am', {zero_vec}, 'au', {zero_vec}), (s, x) -> "
+        f"aggregate(array({nm}), s, (s1, nmv) -> "
+        f"aggregate(array({nu}), s1, (s2, nuv) -> "
+        f"aggregate(array((nmv * CAST({P12} AS {dec})) div (nmv + nuv)), "
+        f"s2, (s3, wv) -> named_struct("
+        f"'tw', CAST(s3.tw + x.n * wv AS {dec}), "
+        f"'tnw', CAST(s3.tnw + x.n * (CAST({P12} AS {dec}) - wv) "
+        f"AS {dec}), "
+        f"'nn', CAST(s3.nn + x.n AS {dec}), "
+        f"'am', zip_with(s3.am, sequence(0, {nf - 1}), (a, i) -> "
+        f"CAST(a + CASE WHEN element_at(x.g, i + 1) THEN x.n * wv "
+        f"ELSE {czero} END AS {dec})), "
+        f"'au', zip_with(s3.au, sequence(0, {nf - 1}), (a, i) -> "
+        f"CAST(a + CASE WHEN element_at(x.g, i + 1) "
+        f"THEN x.n * (CAST({P12} AS {dec}) - wv) "
+        f"ELSE {czero} END AS {dec})))))))"
     )
 
-    def clamp(c: Column) -> Column:
-        return F.greatest(
-            F.lit(1).cast(dec), F.least(F.lit(P6 - 1).cast(dec), c)
+    def cl(v: str) -> str:
+        return (
+            f"greatest(CAST(1 AS {dec}), "
+            f"least(CAST({P6 - 1} AS {dec}), CAST({v} AS {dec})))"
         )
 
-    if _FS_EM_EXPR_FOLD and not pat.isEmpty():
-        # Small-pattern fast path (the markov_removal lesson): the
-        # rounds iterate over <= 2^F pattern rows, so the whole EM —
-        # every E-step likelihood, posterior weight, M-step sum and
-        # clamp — folds into one expression over the collected pattern
-        # list, replicating the relational rounds' DECIMAL(38,0)
-        # products, truncating divisions and clamp order exactly
-        # (equality-tested). An EMPTY pattern table keeps the
-        # relational rounds (their NULL-aggregate clamp semantics).
-        pats1 = pat.agg(
-            F.collect_list(
-                F.struct(
-                    F.array(*[F.col(f"_g{i}") for i in range(nf)]).alias("g"),
-                    F.col("_n").cast(dec).alias("n"),
-                )
-            ).alias("_pats")
+    new_p = cl(
+        f"(s.tw * CAST({P6} AS {dec})) div (s.nn * CAST({P12} AS {dec}))"
+    )
+    new_m = (
+        f"transform(sequence(0, {nf - 1}), i -> "
+        + cl(f"(element_at(s.am, i + 1) * CAST({P6} AS {dec})) div s.tw")
+        + ")"
+    )
+    new_u = (
+        f"transform(sequence(0, {nf - 1}), i -> "
+        + cl(f"(element_at(s.au, i + 1) * CAST({P6} AS {dec})) div s.tnw")
+        + ")"
+    )
+    # no pattern rows: every M-step sum is empty, so every parameter
+    # clamps to the upper bound (the NULL-sum clamp of SQL rounds)
+    top = f"array_repeat(CAST({P6 - 1} AS {dec}), {2 * nf + 1})"
+    init = ", ".join(
+        [f"CAST({p0_units} AS {dec})"]
+        + [f"CAST({m0_units} AS {dec})"] * nf
+        + [f"CAST({u0_units} AS {dec})"] * nf
+    )
+    fold = (
+        f"aggregate(sequence(1, {iters}), array({init}), (pp, it) -> "
+        f"aggregate(array({sums}), pp, (q, s) -> "
+        f"CASE WHEN s.nn = {czero} THEN {top} "
+        f"ELSE concat(array({new_p}), {new_m}, {new_u}) END))"
+    )
+    params = (
+        pats1.select(F.expr(fold).alias("_pp"))
+        .select(
+            F.expr("element_at(_pp, 1)").alias("_p"),
+            *[F.expr(f"element_at(_pp, {i + 2})").alias(f"_m{i}") for i in range(nf)],
+            *[
+                F.expr(f"element_at(_pp, {nf + i + 2})").alias(f"_u{i}")
+                for i in range(nf)
+            ],
         )
-        czero = f"CAST(0 AS {dec})"
-
-        def lik(start: str, off: int) -> str:
-            # Π over fields of (g_i ? param_i : 1e6 - param_i), seeded
-            # with `start` — the _fs_em_products left-to-right order
-            return (
-                f"aggregate(sequence(0, {nf - 1}), {start}, (ac, i) -> "
-                f"CAST(ac * (CASE WHEN element_at(x.g, i + 1) "
-                f"THEN element_at(pp, i + {off}) "
-                f"ELSE CAST({P6} AS {dec}) - element_at(pp, i + {off}) "
-                f"END) AS {dec}))"
-            )
-
-        nm = lik("element_at(pp, 1)", 2)
-        nu = lik(f"CAST({P6} AS {dec}) - element_at(pp, 1)", nf + 2)
-        zero_vec = f"transform(sequence(0, {nf - 1}), z -> {czero})"
-        sums = (
-            f"aggregate(_pats, named_struct("
-            f"'tw', {czero}, 'tnw', {czero}, 'nn', {czero}, "
-            f"'am', {zero_vec}, 'au', {zero_vec}), (s, x) -> "
-            f"aggregate(array({nm}), s, (s1, nmv) -> "
-            f"aggregate(array({nu}), s1, (s2, nuv) -> "
-            f"aggregate(array((nmv * CAST({P12} AS {dec})) div (nmv + nuv)), "
-            f"s2, (s3, wv) -> named_struct("
-            f"'tw', CAST(s3.tw + x.n * wv AS {dec}), "
-            f"'tnw', CAST(s3.tnw + x.n * (CAST({P12} AS {dec}) - wv) "
-            f"AS {dec}), "
-            f"'nn', CAST(s3.nn + x.n AS {dec}), "
-            f"'am', zip_with(s3.am, sequence(0, {nf - 1}), (a, i) -> "
-            f"CAST(a + CASE WHEN element_at(x.g, i + 1) THEN x.n * wv "
-            f"ELSE {czero} END AS {dec})), "
-            f"'au', zip_with(s3.au, sequence(0, {nf - 1}), (a, i) -> "
-            f"CAST(a + CASE WHEN element_at(x.g, i + 1) "
-            f"THEN x.n * (CAST({P12} AS {dec}) - wv) "
-            f"ELSE {czero} END AS {dec})))))))"
-        )
-
-        def cl(v: str) -> str:
-            return (
-                f"greatest(CAST(1 AS {dec}), "
-                f"least(CAST({P6 - 1} AS {dec}), CAST({v} AS {dec})))"
-            )
-
-        new_p = cl(
-            f"(s.tw * CAST({P6} AS {dec})) div (s.nn * CAST({P12} AS {dec}))"
-        )
-        new_m = (
-            f"transform(sequence(0, {nf - 1}), i -> "
-            + cl(f"(element_at(s.am, i + 1) * CAST({P6} AS {dec})) div s.tw")
-            + ")"
-        )
-        new_u = (
-            f"transform(sequence(0, {nf - 1}), i -> "
-            + cl(f"(element_at(s.au, i + 1) * CAST({P6} AS {dec})) div s.tnw")
-            + ")"
-        )
-        init = ", ".join(
-            [f"CAST({p0_units} AS {dec})"]
-            + [f"CAST({m0_units} AS {dec})"] * nf
-            + [f"CAST({u0_units} AS {dec})"] * nf
-        )
-        fold = (
-            f"aggregate(sequence(1, {iters}), array({init}), (pp, it) -> "
-            f"aggregate(array({sums}), pp, (q, s) -> "
-            f"concat(array({new_p}), {new_m}, {new_u})))"
-        )
-        params = (
-            pats1.select(F.expr(fold).alias("_pp"))
-            .select(
-                F.expr("element_at(_pp, 1)").alias("_p"),
-                *[
-                    F.expr(f"element_at(_pp, {i + 2})").alias(f"_m{i}")
-                    for i in range(nf)
-                ],
-                *[
-                    F.expr(f"element_at(_pp, {nf + i + 2})").alias(f"_u{i}")
-                    for i in range(nf)
-                ],
-            )
-            .localCheckpoint(eager=True)
-        )
-        return pat, params
-
-    for _ in range(iters):
-        j = pat.crossJoin(F.broadcast(params))
-        num_m, num_u = _fs_em_products(nf, dec)
-        w = j.select(
-            "*",
-            num_m.alias("_num_m"),
-            num_u.alias("_num_u"),
-        ).select(
-            "*",
-            F.expr(
-                f"(_num_m * CAST({P12} AS {dec})) div (_num_m + _num_u)"
-            ).cast(dec).alias("_w"),
-        )
-        aggs = [
-            F.sum(F.col("_n") * F.col("_w")).cast(dec).alias("_tw"),
-            F.sum(
-                F.col("_n") * (F.lit(P12).cast(dec) - F.col("_w"))
-            ).cast(dec).alias("_tnw"),
-            F.sum("_n").cast(dec).alias("_nn"),
-        ]
-        for i in range(nf):
-            gi = F.when(F.col(f"_g{i}"), F.lit(1)).otherwise(F.lit(0))
-            aggs.append(
-                F.sum(gi * F.col("_n") * F.col("_w")).cast(dec).alias(f"_am{i}")
-            )
-            aggs.append(
-                F.sum(
-                    gi * F.col("_n") * (F.lit(P12).cast(dec) - F.col("_w"))
-                ).cast(dec).alias(f"_au{i}")
-            )
-        s = w.agg(*aggs)
-        new_cols = [
-            clamp(
-                F.expr(f"(_tw * CAST({P6} AS {dec})) div (_nn * CAST({P12} AS {dec}))").cast(dec)
-            ).alias("_p")
-        ]
-        for i in range(nf):
-            new_cols.append(
-                clamp(
-                    F.expr(f"(_am{i} * CAST({P6} AS {dec})) div _tw").cast(dec)
-                ).alias(f"_m{i}")
-            )
-            new_cols.append(
-                clamp(
-                    F.expr(f"(_au{i} * CAST({P6} AS {dec})) div _tnw").cast(dec)
-                ).alias(f"_u{i}")
-            )
-        params = s.select(*new_cols).localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
     return pat, params
 
 

@@ -41,8 +41,9 @@ dangling-mass redistribution term.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -132,6 +133,36 @@ def pagerank(
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
+
+    def uniform(nodes: DataFrame):
+        n = nodes.count()
+        if n == 0:
+            return None
+        # python floor division == SQL `div` for the non-negative ints
+        return (
+            F.lit(UNITS // n),
+            F.lit((100 - damping_pct) * UNITS // (100 * n)),
+        )
+
+    return _rank_rounds(edges, uniform, iters, damping_pct, broadcast_ranks)
+
+
+def _rank_rounds(
+    edges: DataFrame,
+    prior: Callable[[DataFrame], tuple[Column, Column] | None],
+    iters: int,
+    damping_pct: int,
+    broadcast_ranks: bool,
+) -> DataFrame:
+    """(internal) The one PageRank round loop, shared by
+    :func:`pagerank` and :func:`personalized_pagerank`: pin the edges,
+    the degrees and the node set, then ``iters`` rounds of
+    ``rank_units div _deg`` on the node-sized relation, the broadcast
+    join against the edges, the per-``dst`` sum and the damping step.
+
+    ``prior(nodes)`` returns the (start rank, teleport) columns — both
+    in 1e-12 units, evaluated per node — or None for an empty graph,
+    which yields every node at rank 0."""
     maybe_bcast = F.broadcast if broadcast_ranks else (lambda df: df)
     if not broadcast_ranks:
         edges = edges.repartition("src")
@@ -144,17 +175,16 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     nodes = deg.select(F.col("src").alias("node")).localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:
+    cols = prior(nodes)
+    if cols is None:
         return nodes.select(
             "node",
             F.lit(0).cast("long").alias("rank_units"),
             F.lit(0.0).alias("rank"),
         )
-    # python floor division == SQL `div` for the non-negative ints here
-    teleport_units = (100 - damping_pct) * UNITS // (100 * n)
+    start, teleport = cols
     ranks = nodes.select(
-        "node", F.lit(UNITS // n).cast("long").alias("rank_units")
+        "node", start.cast("long").alias("rank_units")
     ).localCheckpoint(eager=True)
     for _ in range(iters):
         # rank_units div _deg is per-src constant: computing it in the
@@ -177,7 +207,7 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(teleport_units)
+                    teleport
                     + F.expr(f"({damping_pct} * coalesce(_s, 0L)) div 100")
                 ).cast("long").alias("rank_units"),
             )
@@ -1293,6 +1323,10 @@ def scan_clusters(
 
     if mu < 1 or label_rounds < 1:
         raise ValueError("mu and label_rounds must be >= 1")
+    if not (1 <= eps_rank_num < eps_rank_den):
+        raise ValueError(
+            f"need 1 <= eps_rank_num < eps_rank_den, got {eps_rank_num}/{eps_rank_den}"
+        )
     if sim is None:
         sim = scan_edge_similarity(pairs, a_col, b_col).localCheckpoint(
             eager=True
@@ -1494,7 +1528,9 @@ def truss_peel(
     On the ``tri0`` path with integral node ids in [0, 2^31), the
     (lo, hi) pairs additionally pack into single-long edge keys for
     the round loop (guide §2.3 — half the triangle-list shuffle
-    bytes); the pair loop is kept verbatim for any other id domain.
+    bytes); the pair loop is kept verbatim for any other id domain. A
+    ``tri0`` id outside [0, 2^31) on the packed path raises when the
+    triangle list is first read (round 2) instead of aliasing edges.
     Output is hash-identical along every path: round-1 support on the
     same edges IS the sigma support, filtered-triangle counts equal
     recomputed subgraph counts by definition, and packing is a
@@ -1570,7 +1606,16 @@ def truss_peel(
         _p = F.lit(1 << 32).cast("long")
 
         def _pk(lo: str, hi: str):
-            return F.col(lo).cast("long") * _p + F.col(hi).cast("long")
+            # the gate bounded sup's ids only: a caller's tri0 id outside
+            # [0, 2^31) would alias another edge's key ((0, 2^32) packs
+            # like (1, 0)), so every pack checks its ids and fails loud
+            # inside the jobs that already read them — no extra job
+            top = (1 << 31) - 1
+            ok = F.col(lo).between(0, top) & F.col(hi).between(0, top)
+            msg = "truss_peel edge id outside [0, 2^31): (%s, %s)"
+            return F.when(
+                ~ok, F.raise_error(F.format_string(msg, lo, hi))
+            ).otherwise(F.col(lo).cast("long") * _p + F.col(hi).cast("long"))
 
         keyed_sup = sup.select(_pk("lo", "hi").alias("e"), "sup")
         tri = tri.select(
@@ -1872,53 +1917,16 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
-    maybe_bcast = F.broadcast if broadcast_ranks else (lambda df: df)
-    if not broadcast_ranks:
-        edges = edges.repartition("src")
-    edges = edges.localCheckpoint(eager=True)
-    # deg pinned once; per-round division folded into the node-sized
-    # broadcast relation — the pagerank round shape (identical integers)
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = deg.select(F.col("src").alias("node")).localCheckpoint(eager=True)
     s = len(seeds)
     is_seed = F.col("node").isin(*seeds)
     teleport_units = (100 - damping_pct) * UNITS // (100 * s)
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(UNITS // s))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_units"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        per_src = (
-            ranks.withColumnRenamed("node", "src")
-            .join(deg, "src")
-            .select("src", F.expr("rank_units div _deg").alias("_c"))
-        )
-        contribs = (
-            edges.join(maybe_bcast(per_src), "src")
-            .select(F.col("dst").alias("node"), "_c")
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_s"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(teleport_units)).otherwise(F.lit(0))
-                    + F.expr(f"({damping_pct} * coalesce(_s, 0L)) div 100")
-                ).cast("long").alias("rank_units"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(
-        "node",
-        "rank_units",
-        (F.col("rank_units").cast("double") / F.lit(float(UNITS))).alias("rank"),
+    return _rank_rounds(
+        edges,
+        lambda nodes: (
+            F.when(is_seed, F.lit(UNITS // s)).otherwise(F.lit(0)),
+            F.when(is_seed, F.lit(teleport_units)).otherwise(F.lit(0)),
+        ),
+        iters,
+        damping_pct,
+        broadcast_ranks,
     )

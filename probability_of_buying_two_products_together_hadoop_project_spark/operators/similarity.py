@@ -1908,9 +1908,36 @@ def pca_top_component(
 ) -> DataFrame:
     """Top principal component of the embedding corpus by the power
     method — the first step of PCA whitening / dimensionality triage
-    ("is there one dominant direction?"), computed as pure dataflow:
-    one pass builds the d×d centered scatter matrix, then fixed
-    iterations of v ← S·v normalized on the TINY d²-row table.
+    ("is there one dominant direction?"): :func:`pca_components` with
+    ``n_components=1``, same fixed-point contract, same single fold job
+    on dense small-d scatters.
+
+    Output: one row per embedding position — (pos, loading_units,
+    loading, eigenvalue_str, var_ratio, n_vecs); empty when no usable
+    vector exists.
+    """
+    return pca_components(
+        embeddings, 1, iters, vec_col, id_col, unit, scatter_mu
+    ).drop("component")
+
+
+def pca_components(
+    embeddings: DataFrame,
+    n_components: int = 2,
+    iters: int = 6,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    unit: int = 10**6,
+    scatter_mu: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """The leading ``n_components`` principal components of the
+    embedding corpus by power iteration WITH DEFLATION, computed as pure
+    dataflow: one pass builds the d×d centered scatter matrix
+    (:func:`pca_corpus_scatter`), then fixed iterations of v ← S·v
+    normalized on the TINY d²-row table. After each component, the
+    scatter deflates ``S ← S − (λ·v_i·v_j) div (v·v)`` (exact integer
+    Hotelling deflation on the fixed-point loadings) and the next power
+    run finds the next direction.
 
     Fixed-point contract end to end (PageRank/HITS rules):
 
@@ -1928,133 +1955,23 @@ def pca_top_component(
       sign-ambiguous; the pin makes the output a function of the data);
     - the eigenvalue is the integer Rayleigh quotient
       ``(v·Sv) div (v·v)`` in scatter units, transported as VARCHAR;
-      explained ratio = eigenvalue/trace, one double division.
+      var_ratio is each λ over the ORIGINAL trace (the
+      explained-variance convention), one double division; residual
+      eigenvalues shrink monotonically.
+
+    Two paths, same bits: a dense scatter with d ≤ _PCA_EXPR_DIM_MAX
+    runs the whole recursion in one job (:func:`_pca_power_fold`);
+    larger d or a ragged scatter runs the relational rounds,
+    checkpointed per round (lineage lesson).
 
     Scale: the scatter build is the classic d² cost — one self-join on
     the row id producing n·d² deviation products (map-side combined to
     d² partial sums per partition); for d in the hundreds use a sketch
-    first. Everything after the one corpus-sized pass runs on d²/d-row
-    tables, checkpointed per round (lineage lesson).
-    """
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    dec = "decimal(38,0)"
-    scatter, mu = scatter_mu or pca_corpus_scatter(
-        embeddings, vec_col, id_col, unit
-    )
-    spark = embeddings.sparkSession
-    ndim = _embedding_dim(embeddings, vec_col)
-    if ndim is None:
-        return spark.createDataFrame(
-            [],
-            "pos int, loading_units long, loading double, "
-            "eigenvalue_str string, var_ratio double, n_vecs long",
-        )
-    if ndim <= _PCA_EXPR_DIM_MAX and scatter.count() == ndim * ndim:
-        # dense small-d scatter: the whole recursion in one job (the
-        # count guard — one action on the pinned d²-row relation —
-        # protects the fold's positional indexing from ragged inputs)
-        return _pca_power_fold(scatter, mu, ndim, 1, iters, unit).drop(
-            "component"
-        )
-    v = spark.range(ndim).select(
-        F.col("id").cast("int").alias("j"),
-        F.lit(unit).cast("long").alias("_vu"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        t = (
-            scatter.join(F.broadcast(v), "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("_s") * F.col("_vu").cast(dec)).cast(dec).alias("_t"))
-        )
-        m = t.agg(F.max(F.abs(F.col("_t"))).cast(dec).alias("_m"))
-        v = (
-            t.crossJoin(F.broadcast(m))
-            .select(
-                F.col("i").alias("j"),
-                F.when(F.col("_m") == 0, F.lit(0).cast("long"))
-                .otherwise(
-                    F.expr(f"(_t * CAST({unit} AS {dec})) div _m").cast("long")
-                )
-                .alias("_vu"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    # deterministic sign pin: flip if the lowest-indexed nonzero loading
-    # is negative (1-row broadcast, no driver logic)
-    first_nz = (
-        v.filter(F.col("_vu") != 0)
-        .orderBy("j")
-        .limit(1)
-        .select(F.signum(F.col("_vu").cast("double")).cast("long").alias("_sg"))
-    )
-    sg = first_nz.select(
-        F.coalesce(F.col("_sg"), F.lit(1)).alias("_sg")
-    )
-    v_pinned = (
-        v.crossJoin(F.broadcast(sg))
-        .select("j", (F.col("_vu") * F.col("_sg")).cast("long").alias("_vu"))
-        .localCheckpoint(eager=True)
-    )
-    t_final = (
-        scatter.join(F.broadcast(v_pinned), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("_s") * F.col("_vu").cast(dec)).cast(dec).alias("_t"))
-    )
-    ray = (
-        t_final.join(F.broadcast(v_pinned.withColumnRenamed("j", "i")), "i")
-        .agg(
-            F.expr(
-                f"sum(_t * CAST(_vu AS {dec})) div sum(CAST(_vu AS {dec})"
-                f" * CAST(_vu AS {dec}))"
-            ).cast(dec).alias("_lam")
-        )
-    )
-    trace = scatter.filter(F.col("i") == F.col("j")).agg(
-        F.sum("_s").cast(dec).alias("_tr")
-    )
-    n1 = mu.agg(F.max("_n").cast("long").alias("n_vecs"))
-    return (
-        v_pinned.crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(trace))
-        .crossJoin(F.broadcast(n1))
-        .select(
-            F.col("j").cast("int").alias("pos"),
-            F.col("_vu").alias("loading_units"),
-            (F.col("_vu").cast("double") / F.lit(float(unit))).alias("loading"),
-            F.col("_lam").cast("string").alias("eigenvalue_str"),
-            F.when(
-                F.col("_tr") != 0,
-                F.col("_lam").cast("double") / F.col("_tr").cast("double"),
-            ).alias("var_ratio"),
-            "n_vecs",
-        )
-    )
+    first. Everything after the one corpus-sized pass stays d²-sized.
 
-
-def pca_components(
-    embeddings: DataFrame,
-    n_components: int = 2,
-    iters: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    unit: int = 10**6,
-    scatter_mu: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """The leading ``n_components`` principal components by power
-    iteration WITH DEFLATION — :func:`pca_top_component` generalized:
-    after each component converges, the scatter deflates
-    ``S ← S − (λ·v_i·v_j) div (v·v)`` (exact integer Hotelling
-    deflation on the fixed-point loadings), and the next power run
-    finds the next direction. Same quantize / trunc-div / sign-pin /
-    Rayleigh contracts as the top-component operator; residual
-    eigenvalues shrink monotonically, and var_ratio is each λ over the
-    ORIGINAL trace (the explained-variance convention).
-
-    Output: one row per (component, pos) with the same columns as
-    :func:`pca_top_component` plus the leading ``component`` index.
-    Deflation is a 64x64-table projection per component — everything
-    after the one corpus pass stays d²-sized.
+    Output: one row per (component, pos) — (component, pos,
+    loading_units, loading, eigenvalue_str, var_ratio, n_vecs); empty
+    when no usable vector exists.
     """
     if n_components < 1:
         raise ValueError(f"n_components must be >= 1, got {n_components}")

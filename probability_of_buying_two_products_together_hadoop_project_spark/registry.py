@@ -16583,6 +16583,23 @@ _ROTATION_TAIL.update({
     "entropy_screen_docs": "r12-local",
 })
 
+# Implementations touched in r14: the PCA pair shares one power loop
+# (pca_top_component is pca_components with n_components=1), PageRank
+# and personalized PageRank share one round loop, FS-EM lost its
+# relational twin and empty-pattern gate, scan_clusters validates its
+# eps rank, and truss_peel's tri0 pack fails loud out of range. All are
+# result-identical; re-verified like the r12 pins.
+_ROTATION_TAIL.update({
+    "pca_top_component_embeddings": "r14-local",
+    "pca_two_components_embeddings": "r14-local",
+    "pagerank_cooccurrence": "r14-local",
+    "ppr_seeded_cooccurrence": "r14-local",
+    "record_linkage_em": "r14-local",
+    "record_linkage_em_fit": "r14-local",
+    "scan_clusters_items": "r14-local",
+    "truss_peel_items": "r14-local",
+})
+
 # Rows-only entries (`err = no_oracle`) whose last driver row is stale
 # (r03/r04). Their `_verified` oracle twins are green, but the judge wants
 # CURRENT driver rows acknowledging the rows-only contract, so they get a

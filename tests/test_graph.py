@@ -711,3 +711,26 @@ def test_truss_peel_validation(spark):
         graph.truss_peel(pairs, rounds=0)
     with pytest.raises(ValueError):
         graph.truss_peel(pairs, t_rank_num=4, t_rank_den=4)
+
+
+def test_truss_peel_rejects_out_of_range_tri0_id(spark):
+    # sup0's ids pass the packing gate, but a caller-supplied triangle
+    # carrying an id >= 2^31 would alias another edge's packed key
+    # ((0, 2^32) packs like (1, 0)): the pack must raise, not alias
+    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
+    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    sig, tri = graph.scan_edge_similarity(pairs, return_triangles=True)
+    sup0 = sig.select(
+        F.col("item_a").cast("long").alias("lo"),
+        F.col("item_b").cast("long").alias("hi"),
+        (F.col("common_closed") - 2).cast("long").alias("sup"),
+    )
+    tri_long = tri.select(*[F.col(c).cast("long").alias(c) for c in tri.columns])
+    bad = spark.createDataFrame(
+        [(0, 1 << 32, 0, 2, 1, 2)],
+        "lo1 long, hi1 long, lo2 long, hi2 long, lo3 long, hi3 long",
+    )
+    with pytest.raises(Exception, match="edge id outside"):
+        graph.truss_peel(
+            pairs, rounds=3, sup0=sup0, tri0=tri_long.unionByName(bad)
+        ).collect()

@@ -192,16 +192,39 @@ def test_pca_fold_equals_relational_rounds(spark, monkeypatch):
             for r in out.collect()
         )
 
-    fast = rowset(similarity.pca_components(df, n_components=2, iters=5))
-    fast_top = sorted(
-        (r.pos, r.loading_units, r.eigenvalue_str, r.var_ratio)
-        for r in similarity.pca_top_component(df, iters=5).collect()
-    )
+    def top_rows(out):
+        return sorted(
+            (r.pos, r.loading_units, r.loading, r.eigenvalue_str,
+             r.var_ratio, r.n_vecs)
+            for r in out.collect()
+        )
+
+    def snap():
+        top = similarity.pca_top_component(df, iters=5)
+        one = similarity.pca_components(df, n_components=1, iters=5)
+        assert top.columns == one.drop("component").columns
+        # the top component IS pca_components(n=1) without `component`
+        assert top_rows(top) == top_rows(one)
+        return rowset(similarity.pca_components(df, n_components=2, iters=5))
+
+    fast = snap()
     monkeypatch.setattr(similarity, "_PCA_EXPR_DIM_MAX", 0)
-    slow = rowset(similarity.pca_components(df, n_components=2, iters=5))
-    slow_top = sorted(
-        (r.pos, r.loading_units, r.eigenvalue_str, r.var_ratio)
-        for r in similarity.pca_top_component(df, iters=5).collect()
-    )
+    slow = snap()
     assert fast == slow
-    assert fast_top == slow_top
+
+
+@pytest.mark.parametrize("rows", [[], [(1, None), (2, [])]])
+def test_pca_top_component_no_usable_vector(spark, rows):
+    # no vector with a dimension: an empty frame with the documented
+    # six-column schema, not an error
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    out = similarity.pca_top_component(df, iters=3)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("pos", "int"),
+        ("loading_units", "bigint"),
+        ("loading", "double"),
+        ("eigenvalue_str", "string"),
+        ("var_ratio", "double"),
+        ("n_vecs", "bigint"),
+    ]
+    assert out.collect() == []

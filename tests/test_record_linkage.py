@@ -334,11 +334,12 @@ def test_reciprocal_best_match_one_to_one(spark):
     assert len({b for _, b in got}) == len(got)
 
 
-def test_fs_em_fold_equals_relational_rounds(spark, monkeypatch):
-    """The one-expression EM fold must match the round-per-job
-    relational path unit for unit — params (via fs_em) and the
-    pattern diagnostics (via fs_em_fit) both."""
+def test_fs_em_and_fit_match_python_mirror_three_flags(spark):
+    """fs_em's parameters and fs_em_fit's expected counts, residuals
+    and posteriors equal the pure-Python mirror unit for unit on a
+    random three-flag corpus (all 2^3 patterns present)."""
     import random
+    from collections import Counter
 
     rng = random.Random(5)
     rows = [
@@ -346,19 +347,42 @@ def test_fs_em_fold_equals_relational_rounds(spark, monkeypatch):
         for _ in range(300)
     ]
     df = spark.createDataFrame(rows, "a boolean, b boolean, c boolean")
+    flags = ["a", "b", "c"]
+    em = sorted(
+        (r.field, r.m_units, r.u_units, r.p_units)
+        for r in dedup.fs_em(df, flags, iters=4).collect()
+    )
+    fit = sorted(
+        (r.pattern, r.n_obs, r.expected_n, r.residual, r.match_post_units,
+         r.match_post)
+        for r in dedup.fs_em_fit(df, flags, iters=4).collect()
+    )
+    pc = Counter(rows)
+    assert len(pc) == 8
+    p, m, u = _py_fs_em(pc, nf=3, iters=4)
+    assert em == sorted((f, m[i], u[i], p) for i, f in enumerate(flags))
+    nn = len(rows)
+    want = []
+    for g, n in pc.items():
+        num_m, num_u = p, P6 - p
+        for i in range(3):
+            num_m *= m[i] if g[i] else P6 - m[i]
+            num_u *= u[i] if g[i] else P6 - u[i]
+        expected = (nn * (num_m + num_u)) // P6**4
+        post = (num_m * P12) // (num_m + num_u)
+        pattern = "".join("1" if x else "0" for x in g)
+        want.append((pattern, n, expected, n - expected, post, post / 1e12))
+    assert fit == sorted(want)
 
-    def snap():
-        em = sorted(
-            (r.field, r.m_units, r.u_units, r.p_units)
-            for r in dedup.fs_em(df, ["a", "b", "c"], iters=4).collect()
-        )
-        fit = sorted(
-            (r.pattern, r.n_obs, r.expected_n, r.residual, r.match_post_units)
-            for r in dedup.fs_em_fit(df, ["a", "b", "c"], iters=4).collect()
-        )
-        return em, fit
 
-    fast = snap()
-    monkeypatch.setattr(dedup, "_FS_EM_EXPR_FOLD", False)
-    slow = snap()
-    assert fast == slow
+def test_fs_em_empty_relation_contract(spark):
+    """An empty pair relation has no pattern rows: every parameter
+    clamps to the upper bound 1e6 - 1 (the M-step sums are empty), and
+    the fit diagnostics have no pattern to report."""
+    df = spark.createDataFrame([], "a boolean, b boolean")
+    got = sorted(
+        (r.field, r.m_units, r.u_units, r.p_units)
+        for r in dedup.fs_em(df, ["a", "b"], iters=3).collect()
+    )
+    assert got == [("a", P6 - 1, P6 - 1, P6 - 1), ("b", P6 - 1, P6 - 1, P6 - 1)]
+    assert dedup.fs_em_fit(df, ["a", "b"], iters=3).collect() == []

@@ -7,6 +7,8 @@ import math
 import random
 from itertools import combinations
 
+import pytest
+
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import graph
 
 
@@ -89,3 +91,22 @@ def test_scan_clusters_rejects_bad_params(spark):
     df = spark.createDataFrame([("a", "b")], "item string, neighbor string")
     with pytest.raises(ValueError):
         graph.scan_clusters(df, mu=0)
+
+
+@pytest.mark.parametrize("num,den", [(4, 4), (5, 4), (0, 4)])
+def test_scan_clusters_rejects_bad_eps_rank(spark, num, den):
+    # an eps rank outside [1, den) names no order statistic; it must be
+    # refused at entry, before any Spark job runs
+    rng = random.Random(3)
+    nodes = [f"n{i}" for i in range(6)]
+    pairs = {(a, b) for a, b in combinations(nodes, 2) if rng.random() < 0.7}
+    df = spark.createDataFrame(sorted(pairs), "item string, neighbor string")
+    sc = spark.sparkContext
+    group = f"scan-bad-eps-{num}-{den}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="1 <= eps_rank_num < eps_rank_den"):
+            graph.scan_clusters(df, eps_rank_num=num, eps_rank_den=den)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
