@@ -854,49 +854,132 @@ def quantize_int8(
     )
 
 
-# Arrow-kernel gate for the Lloyd rounds (guide §4.2, the entropy
-# precedent): centroid state is k x dim integers held by the driver
-# between rounds — bounded by PARAMETERS, not data — so cap the cells
-# and keep the relational loop for anything larger (or for ragged seed
-# vectors, whose per-position join semantics the dense matrix cannot
-# reproduce). _KMEANS_FORCE_RELATIONAL is the test hook pinning
-# kernel-vs-relational bit-equality (the FS-EM fold precedent).
-_KMEANS_KERNEL_MAX_CELLS = 65536
-_KMEANS_FORCE_RELATIONAL = False
+# Row-chunk budget of the k-means kernels (Lloyd partials, assignment,
+# SemDeDup screen): a per-chunk temp — the rows x k distance matrix,
+# the squared rows, a screen block of dot products — holds at most this
+# many cells (32 MB of int64). It bounds memory and selects no path.
+_KMEANS_CHUNK_CELLS = 1 << 22
+_INT64_MAX = 2**63 - 1
 
 
-def _kmeans_trunc_div(s: int, n: int) -> int:
-    """Truncating integer division matching Spark/DuckDB ``div`` for
-    negative sums (Python ``//`` floors; ``div`` truncates toward 0)."""
-    return s // n if s >= 0 else -((-s) // n)
-
-
-def _kmeans_quantize(vals) -> "object":
-    """floor(float32 -> float64 widen * unit) as int64 — the exact same
-    three IEEE ops the relational path's quantize expression performs."""
+def _kmeans_quantize(vals, unit: int):
+    """floor(float32 -> float64 widen * unit): the same three IEEE ops
+    as SQL ``floor(cast(v as double) * unit)``. Stays float64 (integral
+    values) so that the caller can range-check before the int64 cast."""
     import numpy as np
 
-    return np.floor(
-        np.asarray(vals, dtype=np.float64) * 1.0e6
-    ).astype(np.int64)
+    return np.floor(np.asarray(vals, dtype=np.float64) * float(unit))
 
 
-def _kmeans_kernel_state(
+def _kmeans_groups(ids, vecs, unit: int, dim: int | None = None, cmax: int = 0):
+    """Quantize one batch's vectors, grouped by length in first-seen
+    order: yields (rows, Q), Q the int64 (len(rows), L) matrix of the
+    rows of that length. NULL and empty vectors have no positions and
+    are skipped. Checks the two input contracts, naming the vector id:
+
+    - a NULL (or NaN) element raises ``ValueError``;
+    - ``OverflowError`` when a sum of squares over min(L, dim) positions
+      of |q| + cmax — a squared distance to a centroid whose components
+      are at most cmax, or with cmax = 0 a dot product or norm — can
+      exceed int64, the bound that keeps every kernel sum exact."""
+    import numpy as np
+
+    bylen: dict[int, list[int]] = {}
+    for r, v in enumerate(vecs):
+        if v is not None and len(v):
+            bylen.setdefault(len(v), []).append(r)
+    for L, rows in bylen.items():
+        X = _kmeans_quantize([vecs[r] for r in rows], unit)
+        bad = np.isnan(X).any(axis=1)
+        if bad.any():
+            raise ValueError(
+                f"kmeans: vector {ids[rows[int(np.argmax(bad))]]} has a NULL "
+                "or NaN element"
+            )
+        top = np.abs(X).max(axis=1)
+        r = int(np.argmax(top))
+        n = L if dim is None else min(L, dim)
+        if not np.isfinite(top[r]) or n * (int(top[r]) + cmax) ** 2 > _INT64_MAX:
+            raise OverflowError(
+                f"kmeans: vector {ids[rows[r]]}: squared distances and dot "
+                f"products over {n} positions of floor(v * {unit}) can "
+                "exceed int64; use a smaller unit"
+            )
+        yield rows, X.astype(np.int64)
+
+
+def _kmeans_collect(df: DataFrame) -> list:
+    """``collect()``, re-raising a kernel's declared input error
+    (``_kmeans_groups``) on the driver with its own type and message."""
+    import re
+
+    from pyspark.errors import PythonException
+
+    try:
+        return df.collect()
+    except PythonException as e:
+        m = re.search(r"^(ValueError|OverflowError): (kmeans: .*)$", str(e), re.M)
+        if m is None:
+            raise
+        err = ValueError if m.group(1) == "ValueError" else OverflowError
+        raise err(m.group(2)) from e
+
+
+class _Centroids:
+    """The Lloyd state the driver holds between passes, bounded by the
+    parameters (k x dim), never by the data: int64 units ``M`` zero-padded
+    to the longest seed, each centroid's own length ``lens``, and its
+    ``cid``. Centroid i has the positions p < lens[i] only."""
+
+    def __init__(self, M, lens, cids):
+        import numpy as np
+
+        self.M, self.lens, self.cids = M, lens, cids
+        # P: the position mask; C2[:, L] = sum of c^2 over p < min(L, len)
+        self.P = (np.arange(M.shape[1])[None, :] < lens[:, None]).astype(np.int64)
+        self.C2 = np.concatenate(
+            [np.zeros((len(M), 1), dtype=np.int64), np.cumsum(M * M, axis=1)], axis=1
+        )
+        self.cmax = int(np.abs(M).max()) if M.size else 0
+
+    def groups(self, ids, vecs, unit: int):
+        """``_kmeans_groups`` checked against these centroids."""
+        return _kmeans_groups(ids, vecs, unit, self.M.shape[1], self.cmax)
+
+    def nearest(self, Q):
+        """(index, d2) of each row's nearest centroid: d2 = sum of
+        (v - c)^2 over p < min(len(v), len(c)), ties to the smaller cid
+        (the first minimum; cids ascend). Computed as (V∘V)·Pᵀ − 2·V·Mᵀ
+        + Σc² in int64 — exact, ``_kmeans_groups`` bounding the true
+        value — in row chunks, with no rows x k x dim temp."""
+        import numpy as np
+
+        L = min(Q.shape[1], self.M.shape[1])
+        V, M, P = Q[:, :L], self.M[:, :L], self.P[:, :L]
+        step = max(1, _KMEANS_CHUNK_CELLS // max(L, len(M)))
+        idx = np.empty(len(V), dtype=np.int64)
+        d2 = np.empty(len(V), dtype=np.int64)
+        for a in range(0, len(V), step):
+            v = V[a : a + step]
+            D = (v * v) @ P.T - 2 * (v @ M.T) + self.C2[:, L]
+            idx[a : a + step] = np.argmin(D, axis=1)
+            d2[a : a + step] = D[np.arange(len(v)), idx[a : a + step]]
+        return idx, d2
+
+
+def _kmeans_seeds(
     embeddings: DataFrame,
     k: int,
     id_col: str,
     vec_col: str,
     unit: int,
     seed_tag: str,
-):
-    """Collect the md5-draw seed vectors (<= k rows, bounded) and build
-    the dense int64 centroid matrix, or return None when the kernel
-    gate fails (non-1e6 unit, ragged/NULL seeds, k*dim over the cap,
-    empty input) — the caller then uses the relational loop."""
+) -> _Centroids:
+    """Collect the k md5-draw seeds (one bounded collect). cid is the
+    seed's draw rank; a seed whose vector is NULL or empty yields no
+    centroid, so the cids can have gaps and there can be none."""
     import numpy as np
 
-    if _KMEANS_FORCE_RELATIONAL or unit != 10**6:
-        return None
     draw = F.md5(
         F.concat(F.lit(seed_tag + "|"), F.col(id_col).cast("string"))
     )
@@ -911,107 +994,93 @@ def _kmeans_kernel_state(
             .alias("cid"),
         )
     )
-    seed_rows = (
+    seed_rows = sorted(
         embeddings.join(seeds, embeddings[id_col] == seeds["_id"])
-        .select("cid", F.col(vec_col).alias("_v"))
-        .collect()
+        .select("cid", "_id", F.col(vec_col).alias("_v"))
+        .collect(),
+        key=lambda r: r["cid"],
     )
-    if not seed_rows:
-        return None
-    lens = {len(r["_v"]) for r in seed_rows if r["_v"] is not None}
-    if len(lens) != 1 or any(r["_v"] is None for r in seed_rows):
-        return None  # ragged/NULL seeds: per-position join semantics
-    dim = lens.pop()
-    if dim == 0 or len(seed_rows) * dim > _KMEANS_KERNEL_MAX_CELLS:
-        return None
-    cid_arr = np.array(sorted(r["cid"] for r in seed_rows), dtype=np.int64)
-    M = np.zeros((len(cid_arr), dim), dtype=np.int64)
-    by_cid = {int(r["cid"]): r["_v"] for r in seed_rows}
-    for i, c in enumerate(cid_arr):
-        M[i] = _kmeans_quantize(by_cid[int(c)])
-    return M, cid_arr
+    vecs = [r["_v"] for r in seed_rows]
+    ids = [r["_id"] for r in seed_rows]
+    lens = np.array([len(v) if v else 0 for v in vecs], dtype=np.int64)
+    M = np.zeros((len(vecs), int(lens.max()) if len(vecs) else 0), dtype=np.int64)
+    for rows, Q in _kmeans_groups(ids, vecs, unit):
+        M[rows, : Q.shape[1]] = Q
+    keep = lens > 0
+    cids = np.array([r["cid"] for r in seed_rows], dtype=np.int64)
+    return _Centroids(M[keep], lens[keep], cids[keep])
 
 
-def _kmeans_kernel_partials(M, cid_arr):
-    """mapInPandas closure: per batch, quantize the raw vectors, take
-    the exact int64 argmin (first occurrence = smallest cid — rows are
-    cid-sorted), and emit k x dim partial (count, sum) rows. Positions
-    beyond min(len(v), dim) contribute nothing, matching the relational
-    per-position inner join on ragged points."""
+def _kmeans_partials(cents: _Centroids, unit: int):
+    """mapInPandas closure over (id, vector) batches: assign each vector
+    to its nearest centroid and emit, per (cid, pos) with members, the
+    member count and the sum of the members' quantized components over
+    p < min(len(v), len(c))."""
     import numpy as np
     import pandas as pd
 
-    dim = M.shape[1]
+    k, dim = cents.M.shape
 
     def fn(batches):
         for pdf in batches:
-            out_c, out_p, out_n, out_s = [], [], [], []
-            bylen: dict[int, list] = {}
-            for v in pdf.iloc[:, 0].tolist():
-                if v is None or len(v) == 0:
-                    continue
-                bylen.setdefault(len(v), []).append(v)
-            for L, vs in bylen.items():
-                Lc = min(L, dim)
-                V = _kmeans_quantize(vs)
-                D = ((V[:, None, :Lc] - M[None, :, :Lc]) ** 2).sum(axis=2)
-                a = np.argmin(D, axis=1)
-                for ci in range(len(cid_arr)):
-                    mask = a == ci
-                    n = int(mask.sum())
-                    if n == 0:
-                        continue
-                    s = V[mask][:, :Lc].sum(axis=0)
-                    c = int(cid_arr[ci])
-                    for p in range(Lc):
-                        out_c.append(c)
-                        out_p.append(p)
-                        out_n.append(n)
-                        out_s.append(int(s[p]))
+            S = np.zeros((k, dim), dtype=np.int64)
+            N = np.zeros((k, dim), dtype=np.int64)
+            ids = pdf.iloc[:, 0].tolist()
+            for _, Q in cents.groups(ids, pdf.iloc[:, 1].tolist(), unit):
+                L = min(Q.shape[1], dim)
+                idx, _ = cents.nearest(Q)
+                np.add.at(S[:, :L], idx, Q[:, :L])
+                N[:, :L] += np.bincount(idx, minlength=k)[:, None] * cents.P[:, :L]
+            i, p = np.nonzero(N)
             yield pd.DataFrame(
-                {"cid": out_c, "pos": out_p, "_n": out_n, "_s": out_s}
+                {"cid": cents.cids[i], "pos": p, "_n": N[i, p], "_s": S[i, p]}
             )
 
     return fn
 
 
-def _kmeans_kernel_rounds(
+def _kmeans_train(
     embeddings: DataFrame,
-    M,
-    cid_arr,
+    k: int,
     iters: int,
+    id_col: str,
     vec_col: str,
+    unit: int,
+    seed_tag: str,
 ):
-    """Run ``iters`` Lloyd rounds: one Arrow corpus pass emitting k x
-    dim partial sums + one small Spark aggregate per round; the
-    trunc-div update runs on the driver over the bounded state. Returns
-    (M, n_members) after the final round."""
+    """Seed, then run ``iters`` Lloyd rounds: one Arrow corpus pass
+    emitting k x dim partial sums plus one small Spark aggregate per
+    round, collected; the trunc-div update runs on the driver over the
+    bounded state. Returns the final centroids and the (k, dim)
+    n_members of the last round."""
     import numpy as np
 
-    vec_only = embeddings.select(vec_col)
-    nm = np.zeros(M.shape, dtype=np.int64)
+    if k < 1 or iters < 1:
+        raise ValueError(f"kmeans_lloyd: k and iters must be >= 1 ({k=}, {iters=})")
+    cents = _kmeans_seeds(embeddings, k, id_col, vec_col, unit, seed_tag)
+    N = np.zeros_like(cents.M)
+    if not len(cents.cids):
+        return cents, N
+    points = embeddings.select(id_col, vec_col)
     for _ in range(iters):
-        upd = (
-            vec_only.mapInPandas(
-                _kmeans_kernel_partials(M, cid_arr),
+        upd = _kmeans_collect(
+            points.mapInPandas(
+                _kmeans_partials(cents, unit),
                 "cid long, pos int, _n long, _s long",
             )
             .groupBy("cid", "pos")
             .agg(F.sum("_n").alias("_n"), F.sum("_s").alias("_s"))
-            .collect()
         )
-        got = {(int(r["cid"]), int(r["pos"])): (int(r["_n"]), int(r["_s"])) for r in upd}
-        newM = M.copy()
-        nm = np.zeros(M.shape, dtype=np.int64)
-        for i, c in enumerate(cid_arr):
-            for p in range(M.shape[1]):
-                hit = got.get((int(c), p))
-                if hit is not None:
-                    n, s = hit
-                    newM[i, p] = _kmeans_trunc_div(s, n)
-                    nm[i, p] = n
-        M = newM
-    return M, nm
+        S, N = np.zeros_like(cents.M), np.zeros_like(cents.M)
+        i = np.searchsorted(cents.cids, [r["cid"] for r in upd]).astype(np.int64)
+        p = np.array([r["pos"] for r in upd], dtype=np.int64)
+        S[i, p] = [r["_s"] for r in upd]
+        N[i, p] = [r["_n"] for r in upd]
+        # truncating division, as Spark/DuckDB ``div`` (Python // floors)
+        n = np.maximum(N, 1)
+        q = np.where(S >= 0, S // n, -(-S // n))
+        cents = _Centroids(np.where(N > 0, q, cents.M), cents.lens, cents.cids)
+    return cents, N
 
 
 def kmeans_lloyd(
@@ -1026,8 +1095,8 @@ def kmeans_lloyd(
     """Distributed k-means (Lloyd's algorithm) with a fixed iteration
     count, deterministic seeding, and FIXED-POINT arithmetic end to end
     — the clustering primitive behind IVF list training, corpus
-    bucketing, and semantic-diversity sampling, here as a pure dataflow
-    loop an external engine can replay bit-for-bit.
+    bucketing, and semantic-diversity sampling, with a contract an
+    external engine can replay bit-for-bit.
 
     Determinism (the PageRank lesson applied to Lloyd's):
 
@@ -1044,106 +1113,39 @@ def kmeans_lloyd(
       ``md5(seed_tag || '|' || id)`` — the repo's coordination-free
       deterministic draw, reproducible by the oracle.
 
-    Scale shape: the point table explodes once to (id, pos, qv) rows
-    and is checkpointed (at 100 TB: persisted); each round is [join
-    with the BROADCAST (k x dim) centroid table -> per-(point,
-    candidate) integer sum -> argmin window -> one hash agg for the
-    update]. Shuffled bytes per round are the per-pair partial sums
-    (∝ points x k, 16-byte rows) and the update partials (∝ k x dim x
-    partitions) — never the raw vectors. Centroid state is k x dim
-    rows, checkpointed per round (the k-core lineage lesson).
+    Ragged input: a NULL or empty vector is never assigned, and a drawn
+    seed with one yields no centroid (fewer than ``k`` rows per
+    position, possibly none). A centroid keeps its seed's length;
+    distances and updates run over the positions p < min(len(v),
+    len(c)), and ``n_members`` is counted per (cid, pos).
 
-    Overflow bound: requires unit^2 * dim * max(v)^2 < 2^63 — with the
-    1e6 default and unit-scale embeddings, safe to ~8000 dims.
+    Input errors, raised on the driver and naming the vector id: a NULL
+    (or NaN) element inside a vector raises ``ValueError``; a vector
+    whose squared distance to a centroid can exceed int64 raises
+    ``OverflowError`` (the bound is dim * (max|q| + max|c|)^2 < 2^63,
+    with the 1e6 default and unit-scale embeddings safe to ~500k dims).
+
+    Execution: eager. One bounded seed collect, then per round one
+    Arrow ``mapInPandas`` pass over the corpus that assigns each vector
+    and emits per-(cid, pos) partial (count, sum) rows, one small
+    aggregate, and one collect; the trunc-div update runs on the driver
+    over the k x dim state. Shuffle per round is the partial rows
+    (k x dim per batch), never the raw vectors.
 
     Returns the LONG-form centroid table after ``iters`` rounds:
     (cid, pos, centroid_units, centroid, n_members), n_members from the
     final assignment.
     """
-    if k < 1 or iters < 1:
-        raise ValueError(f"kmeans_lloyd: k and iters must be >= 1 ({k=}, {iters=})")
-    state = _kmeans_kernel_state(embeddings, k, id_col, vec_col, unit, seed_tag)
-    if state is not None:
-        import numpy as np
-
-        M0, cid_arr = state
-        M, nm = _kmeans_kernel_rounds(embeddings, M0, cid_arr, iters, vec_col)
-        spark = embeddings.sparkSession
-        rows = [
-            (int(c), p, int(M[i, p]), int(M[i, p]) / float(unit), int(nm[i, p]))
-            for i, c in enumerate(cid_arr)
-            for p in range(M.shape[1])
-        ]
-        return spark.createDataFrame(
-            rows,
-            "cid long, pos long, centroid_units long, centroid double, "
-            "n_members long",
-        )
-    pts = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_v"),
-    ).select(
-        "_id",
-        "pos",
-        F.floor(F.col("_v").cast("double") * F.lit(float(unit)))
-        .cast("long")
-        .alias("qv"),
-    ).localCheckpoint(eager=True)
-    draw = F.md5(
-        F.concat(F.lit(seed_tag + "|"), F.col(id_col).cast("string"))
-    )
-    seeds = (
-        embeddings.select(F.col(id_col).alias("_id"), draw.alias("_draw"))
-        .orderBy("_draw")
-        .limit(k)
-        .select(
-            "_id",
-            (F.row_number().over(Window.orderBy("_draw")) - 1)
-            .cast("long")
-            .alias("cid"),
-        )
-    )
-    centroids = (
-        pts.join(seeds, "_id")
-        .select("cid", "pos", F.col("qv").alias("qc"), F.lit(0).cast("long").alias("n_members"))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("_d2").asc(), F.col("cid").asc())
-    for _ in range(iters):
-        diff = F.col("qv") - F.col("qc")
-        d = (
-            pts.join(F.broadcast(centroids.select("cid", "pos", "qc")), "pos")
-            .select("_id", "cid", (diff * diff).alias("_t"))
-            .groupBy("_id", "cid")
-            .agg(F.sum("_t").alias("_d2"))
-        )
-        assign = (
-            d.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("_id", "cid")
-        )
-        upd = (
-            pts.join(assign, "_id")
-            .groupBy("cid", "pos")
-            .agg(F.count(F.lit(1)).alias("_n"), F.sum("qv").alias("_s"))
-            .select("cid", "pos", F.expr("_s div _n").alias("_qc_new"), "_n")
-        )
-        centroids = (
-            centroids.join(upd, ["cid", "pos"], "left")
-            .select(
-                "cid",
-                "pos",
-                F.coalesce("_qc_new", "qc").alias("qc"),
-                F.coalesce("_n", F.lit(0)).cast("long").alias("n_members"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return centroids.select(
-        "cid",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("qc").cast("long").alias("centroid_units"),
-        (F.col("qc").cast("double") / F.lit(float(unit))).alias("centroid"),
-        "n_members",
+    cents, N = _kmeans_train(embeddings, k, iters, id_col, vec_col, unit, seed_tag)
+    rows = [
+        (int(c), p, int(cents.M[i, p]), int(cents.M[i, p]) / float(unit), int(N[i, p]))
+        for i, c in enumerate(cents.cids)
+        for p in range(int(cents.lens[i]))
+    ]
+    return embeddings.sparkSession.createDataFrame(
+        rows,
+        "cid long, pos long, centroid_units long, centroid double, "
+        "n_members long",
     )
 
 
@@ -1362,165 +1364,39 @@ def kmeans_assign(
     assigning every vector to its trained centroid (ties to the smaller
     cid) — the deterministic (id, cid, _d2) assignment table that
     SemDeDup, cluster labeling, and IVF-style bucketing all start from.
-    Centroids (k x dim) broadcast; shuffle is the per-(point, cid)
-    integer partial sums, never raw vectors."""
-    state = _kmeans_kernel_state(embeddings, k, id_col, vec_col, unit, seed_tag)
-    if state is not None:
-        import numpy as np
-        import pandas as pd
+    ``_d2`` is the squared distance over p < min(len(v), len(c)); NULL
+    and empty vectors get no row. A NULL (or NaN) element raises
+    ``ValueError`` and a vector whose squared distance can exceed int64
+    raises ``OverflowError``, both naming the vector id (see
+    ``kmeans_lloyd``).
 
-        M0, cid_arr = state
-        M, _ = _kmeans_kernel_rounds(embeddings, M0, cid_arr, iters, vec_col)
-        dim = M.shape[1]
-
-        def assign_fn(batches):
-            for pdf in batches:
-                ids, cids, d2s = [], [], []
-                bylen: dict[int, list] = {}
-                for _id, v in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
-                    if v is None or len(v) == 0:
-                        continue
-                    bylen.setdefault(len(v), []).append((_id, v))
-                for L, pairs in bylen.items():
-                    Lc = min(L, dim)
-                    V = _kmeans_quantize([v for _, v in pairs])
-                    D = ((V[:, None, :Lc] - M[None, :, :Lc]) ** 2).sum(axis=2)
-                    a = np.argmin(D, axis=1)
-                    best = D[np.arange(len(pairs)), a]
-                    for j, (_id, _) in enumerate(pairs):
-                        ids.append(_id)
-                        cids.append(int(cid_arr[a[j]]))
-                        d2s.append(int(best[j]))
-                yield pd.DataFrame({"_id": ids, "cid": cids, "_d2": d2s})
-
-        id_type = dict(embeddings.dtypes)[id_col]
-        return embeddings.select(
-            F.col(id_col).alias("_id"), F.col(vec_col)
-        ).mapInPandas(assign_fn, f"_id {id_type}, cid long, _d2 long")
-    cents = kmeans_lloyd(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        unit=unit, seed_tag=seed_tag,
-    ).select("cid", "pos", F.col("centroid_units").alias("qc"))
-    pts = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "_v"),
-    ).select(
-        "_id",
-        "pos",
-        F.floor(F.col("_v").cast("double") * F.lit(float(unit)))
-        .cast("long")
-        .alias("qv"),
-    )
-    diff = F.col("qv") - F.col("qc")
-    d = (
-        pts.join(F.broadcast(cents), "pos")
-        .select("_id", "cid", (diff * diff).alias("_t"))
-        .groupBy("_id", "cid")
-        .agg(F.sum("_t").alias("_d2"))
-    )
-    w_assign = Window.partitionBy("_id").orderBy(F.col("_d2").asc(), F.col("cid").asc())
-    return (
-        d.withColumn("_rk", F.row_number().over(w_assign))
-        .filter(F.col("_rk") == 1)
-        .select("_id", "cid", "_d2")
-    )
-
-
-# Memory gate for the Arrow pair screen: a group's m x m cosine matrix
-# is float64, so 4096 members = 128 MB per task — anything larger keeps
-# the relational self-join, which streams instead of materializing the
-# group (the SemDeDup design keeps clusters ~n/k, far below this).
-_SEMDEDUP_KERNEL_MAX_CLUSTER = 4096
-
-
-def _semantic_dedup_kernel_screen(
-    assign: DataFrame,
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    unit: int,
-):
-    """SemDeDup's greedy upper-triangular screen as ONE applyInPandas
-    pass per cluster (guide §4.2): the relational pair self-join
-    evaluates an interpreted higher-order dot per candidate pair (no
-    codegen for HOFs — measured 3.2 s of the 5.3 s wall at sf0.1);
-    int64 Q @ Q.T plus the identical sqrt/divide IEEE ops reproduce
-    every cosine bit-for-bit. Returns None (caller keeps the relational
-    path) when the force hook is set, the unit is non-default, or any
-    cluster exceeds the matrix-memory gate or mixes vector lengths (a
-    ragged group cannot pack into one matrix) — the gate reads a k-row
-    aggregate over the persisted carry relation, the bounded-action
-    rule."""
-    if _KMEANS_FORCE_RELATIONAL or unit != 10**6:
-        return None
-    import numpy as np
+    Execution: training is eager (``kmeans_lloyd``: a seed collect plus
+    one collect per round, which raise those errors on the driver); the
+    returned assignment is one lazy Arrow ``mapInPandas`` pass with the
+    k x dim centroids in its closure — no shuffle, no join. Its own
+    range check, against the trained centroids, can only fire in the
+    action that reads it."""
     import pandas as pd
 
-    carry = assign.join(
-        embeddings.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        ),
-        "_id",
-    ).persist()
-    sizes = carry.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.min(F.size("_v")).alias("_lo"),
-        F.max(F.size("_v")).alias("_hi"),
-    ).collect()
-    if (
-        not sizes
-        or max(r["_n"] for r in sizes) > _SEMDEDUP_KERNEL_MAX_CLUSTER
-        or any(r["_lo"] != r["_hi"] for r in sizes)
-    ):
-        carry.unpersist()
-        return None
-    thr = float(threshold)
+    cents, _ = _kmeans_train(embeddings, k, iters, id_col, vec_col, unit, seed_tag)
+    schema = f"_id {dict(embeddings.dtypes)[id_col]}, cid long, _d2 long"
+    if not len(cents.cids):
+        return embeddings.sparkSession.createDataFrame([], schema)
 
-    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rank = (d2 to own centroid DESC, id ASC) — row_number order
-        pdf = pdf.sort_values(
-            ["_d2", "_id"], ascending=[False, True], kind="mergesort"
-        ).reset_index(drop=True)
-        m = len(pdf)
-        Q = _kmeans_quantize(pdf["_v"].tolist()) if m else None
-        out_sim = [None] * m
-        if m:
-            nq = (Q * Q).sum(axis=1)  # int64, exact by the overflow bound
-            D = Q @ Q.T  # exact int64 dots
-            sq = np.sqrt(nq.astype(np.float64))
-            valid = nq > 0
-            for i in range(1, m):
-                if not valid[i]:
-                    continue  # zero-norm: cosines NULL, always kept
-                js = np.nonzero(valid[:i])[0]
-                if len(js) == 0:
-                    continue
-                # the same two IEEE ops as the SQL expression, in the
-                # same order: int dot -> double, / (sqrt(na) * sqrt(nb))
-                cos = D[i, js].astype(np.float64) / (sq[i] * sq[js])
-                out_sim[i] = float(cos.max())
-        return pd.DataFrame(
-            {
-                "_id": pdf["_id"],
-                "cid": pdf["cid"],
-                "rk": np.arange(1, m + 1, dtype=np.int64),
-                "max_prior_sim": pd.array(out_sim, dtype="float64"),
-                "kept": pd.array(
-                    [s is None or s < thr for s in out_sim], dtype="boolean"
-                ),
-            }
-        )
+    def assign_fn(batches):
+        for pdf in batches:
+            ids = pdf.iloc[:, 0].tolist()
+            out_i, out_c, out_d = [], [], []
+            for rows, Q in cents.groups(ids, pdf.iloc[:, 1].tolist(), unit):
+                idx, d2 = cents.nearest(Q)
+                out_i += [ids[r] for r in rows]
+                out_c += cents.cids[idx].tolist()
+                out_d += d2.tolist()
+            yield pd.DataFrame({"_id": out_i, "cid": out_c, "_d2": out_d})
 
-    id_type = dict(assign.dtypes)["_id"]
-    out = carry.groupBy("cid").applyInPandas(
-        screen,
-        f"_id {id_type}, cid long, rk long, max_prior_sim double, "
-        "kept boolean",
-    )
-    return out.select(
-        F.col("_id").alias(id_col), "cid", "rk", "max_prior_sim", "kept"
-    )
+    return embeddings.select(
+        F.col(id_col).alias("_id"), F.col(vec_col)
+    ).mapInPandas(assign_fn, schema)
 
 
 def semantic_dedup(
@@ -1536,7 +1412,7 @@ def semantic_dedup(
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster the embedding
     corpus with k-means, then inside each cluster drop every member
-    whose cosine similarity to an ALREADY-KEPT member reaches
+    whose cosine similarity to an earlier-ranked member reaches
     ``threshold``. Near-duplicate SEMANTICS (paraphrases, re-encodes,
     templated variants) that token-level MinHash/SimHash miss.
 
@@ -1550,8 +1426,8 @@ def semantic_dedup(
     - the paper keeps, within a duplicate group, the member FARTHEST
       from its centroid (lowest centroid similarity); the screen order
       is therefore rank = (integer d2 to own centroid DESC, id ASC),
-      and member i is dropped iff some EARLIER-ranked j has
-      cos(i, j) >= threshold — exactly the paper's greedy upper-tri
+      and member i is dropped iff some EARLIER-ranked j (kept or not)
+      has cos(i, j) >= threshold — exactly the paper's greedy upper-tri
       screen, not a transitive closure;
     - pair cosines are computed on the QUANTIZED integer vectors:
       integer dot / (sqrt(int norm) * sqrt(int norm)) is one shared
@@ -1559,85 +1435,89 @@ def semantic_dedup(
       bit-identical cross-engine (no float-accumulation order risk);
     - a vector whose QUANTIZED norm is zero (e.g. float32 subnormals)
       has no direction: its pair cosines are NULL, so it is always
-      kept and never screens another member.
+      kept and never screens another member; so is the cosine of two
+      vectors of different lengths;
+    - NULL and empty vectors get no row; a NULL (or NaN) element raises
+      ``ValueError`` and an int64-unsafe vector ``OverflowError``, both
+      on the driver during training (see ``kmeans_lloyd``).
 
-    Scale shape: centroids (k x dim) broadcast for the assignment pass;
-    the pair stage is an equi-join on cid — work sum(|cluster|^2) * dim,
-    THE SemDeDup design cost, controlled by k (the paper runs 50k
-    clusters on LAION; cluster size ~ n/k keeps the quadratic local).
-    No all-pairs path: pairs never cross cluster boundaries.
+    Execution: training is eager (a seed collect plus one collect per
+    round); the screen is one lazy ``applyInPandas`` pass per cluster
+    over the assignment joined back to the vectors. Within a cluster it
+    splits the members by vector length and computes the dots in row
+    blocks ``Q[a:b] @ Q[:b]ᵀ`` (at most ``_KMEANS_CHUNK_CELLS`` cells),
+    so no m x m matrix exists. Work is sum(|cluster|^2) * dim, THE
+    SemDeDup design cost, controlled by k (the paper runs 50k clusters
+    on LAION); pairs never cross cluster boundaries.
 
-    Returns one row per input vector: (id, cid, rk, max_prior_sim,
-    kept) — max_prior_sim is NULL for each cluster's first-ranked
-    member, exact double otherwise.
+    Returns one row per non-empty input vector: (id, cid, rk,
+    max_prior_sim, kept) — max_prior_sim is NULL when no earlier-ranked
+    member has a defined cosine, exact double otherwise.
     """
+    import numpy as np
+    import pandas as pd
+
     assign = kmeans_assign(
         embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
         unit=unit, seed_tag=seed_tag,
     )
-    screened = _semantic_dedup_kernel_screen(
-        assign, embeddings, threshold, id_col, vec_col, unit
+    carry = assign.join(
+        embeddings.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+        ),
+        "_id",
     )
-    if screened is not None:
-        return screened
-    qarr = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * F.lit(float(unit))).cast("long"),
-        ).alias("_q"),
-    )
-    int_self_dot = F.aggregate(
-        F.col("_q"), F.lit(0).cast("long"), lambda acc, v: acc + v * v
-    )
-    w_rank = Window.partitionBy("cid").orderBy(F.col("_d2").desc(), F.col("_id").asc())
-    members = (
-        assign.join(qarr, "_id")
-        .select("_id", "cid", "_d2", "_q", int_self_dot.alias("_nq"))
-        .withColumn("rk", F.row_number().over(w_rank))
-        .localCheckpoint(eager=True)
-    )
-    a = members.select(
-        F.col("_id").alias("id_a"), "cid", F.col("rk").alias("rk_a"),
-        F.col("_q").alias("qa"), F.col("_nq").alias("na"),
-    )
-    b = members.select(
-        F.col("_id").alias("id_b"), "cid", F.col("rk").alias("rk_b"),
-        F.col("_q").alias("qb"), F.col("_nq").alias("nb"),
-    )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # zero-quantized-norm vectors carry no direction: their cosine is
-    # UNDEFINED (NULL) — they are always kept and never screen others
-    # (max ignores NULLs). Explicit CASE in both engines, no div-by-0.
-    cos = F.when(
-        (F.col("na") > 0) & (F.col("nb") > 0),
-        int_dot.cast("double")
-        / (F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))),
-    )
-    prior = (
-        a.join(b, "cid")
-        .filter(F.col("rk_b") < F.col("rk_a"))
-        .select("id_a", cos.alias("_cos"))
-        .groupBy("id_a")
-        .agg(F.max("_cos").alias("max_prior_sim"))
-    )
-    return (
-        members.select(F.col("_id").alias(id_col), "cid", "rk")
-        .join(prior.withColumnRenamed("id_a", id_col), id_col, "left")
-        .select(
-            id_col,
-            "cid",
-            F.col("rk").cast("long").alias("rk"),
-            "max_prior_sim",
-            (
-                F.col("max_prior_sim").isNull()
-                | (F.col("max_prior_sim") < F.lit(float(threshold)))
-            ).alias("kept"),
+    thr = float(threshold)
+
+    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
+        # rank = (d2 to own centroid DESC, id ASC) — row_number order
+        pdf = pdf.sort_values(
+            ["_d2", "_id"], ascending=[False, True], kind="mergesort"
+        ).reset_index(drop=True)
+        ids = pdf["_id"].tolist()
+        best = np.full(len(pdf), np.nan)
+        for rows, Q in _kmeans_groups(ids, pdf["_v"].tolist(), unit):
+            rows = np.asarray(rows)
+            nq = (Q * Q).sum(axis=1)  # int64, exact by the range check
+            sq = np.sqrt(nq.astype(np.float64))
+            ok = nq > 0  # zero norm: cosines NULL
+            step = max(1, _KMEANS_CHUNK_CELLS // len(rows))
+            for a in range(0, len(rows), step):
+                b = min(a + step, len(rows))
+                # the same two IEEE ops as the SQL expression, in the
+                # same order: int dot -> double, / (sqrt(na) * sqrt(nb))
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = (Q[a:b] @ Q[:b].T).astype(np.float64) / (
+                        sq[a:b, None] * sq[None, :b]
+                    )
+                prior = (
+                    (np.arange(b)[None, :] < np.arange(a, b)[:, None])
+                    & ok[None, :b]
+                    & ok[a:b, None]
+                )
+                cos[~prior] = -np.inf
+                has = prior.any(axis=1)
+                best[rows[a:b][has]] = cos[has].max(axis=1)
+        sim = [None if np.isnan(s) else float(s) for s in best]
+        return pd.DataFrame(
+            {
+                "_id": pdf["_id"],
+                "cid": pdf["cid"],
+                "rk": np.arange(1, len(pdf) + 1, dtype=np.int64),
+                "max_prior_sim": pd.array(sim, dtype="float64"),
+                "kept": pd.array(
+                    [s is None or s < thr for s in sim], dtype="boolean"
+                ),
+            }
         )
+
+    out = carry.groupBy("cid").applyInPandas(
+        screen,
+        f"_id {dict(assign.dtypes)['_id']}, cid long, rk long, "
+        "max_prior_sim double, kept boolean",
+    )
+    return out.select(
+        F.col("_id").alias(id_col), "cid", "rk", "max_prior_sim", "kept"
     )
 
 
@@ -1666,8 +1546,9 @@ def cluster_topics(
 
     Shape: one (cid, term) hash agg over the exploded token join (the
     corpus-sized pass), then a term-partitioned window and the per-cid
-    top-k window over the VOCAB x k reduced table. Assignment centroids
-    broadcast (see kmeans_assign); nothing quadratic anywhere.
+    top-k window over the VOCAB x k reduced table. The assignment is one
+    Arrow pass after eager training (see kmeans_assign); nothing
+    quadratic anywhere.
     """
     from .text import normalized_tokens  # local: text does not import back
 

@@ -7684,11 +7684,12 @@ def _semantic_dedup_oracle(
     "corpus in fixed-point integer arithmetic — quantized components, "
     "integer squared-L2 distances (order-independent argmins, ties to "
     "the smaller cid), trunc-division centroid updates, md5-draw "
-    "seeding the oracle reproduces. Per round: broadcast (k x dim) "
-    "centroids onto the exploded point table, per-pair integer sums, "
-    "argmin window, one update agg — shuffle ∝ points x k partial "
-    "sums, never raw vectors; state checkpointed per round (the "
-    "k-core lineage lesson)",
+    "seeding the oracle reproduces. Per round: one Arrow mapInPandas "
+    "pass assigns every vector against the (k x dim) centroids in its "
+    "closure and emits per-(cid, pos) partial (count, sum) rows, one "
+    "small aggregate is collected, and the trunc-div update runs on "
+    "the driver — shuffle ∝ k x dim partials per batch, never raw "
+    "vectors",
 )
 def q_kmeans(spark, sf_dir):
     return similarity.kmeans_lloyd(
@@ -11870,7 +11871,8 @@ def _cluster_topics_oracle(
     "words lose to cluster-specific ones. The corpus-exploration step "
     "after clustering in a curation pipeline. One (cid, term) hash agg "
     "over the exploded token join, then two windows over the VOCAB x k "
-    "reduced table; centroids broadcast; nothing quadratic",
+    "reduced table; the assignment is one Arrow pass with the "
+    "centroids in its closure; nothing quadratic",
 )
 def q_cluster_topics(spark, sf_dir):
     return similarity.cluster_topics(
@@ -16598,6 +16600,17 @@ _ROTATION_TAIL.update({
     "record_linkage_em_fit": "r14-local",
     "scan_clusters_items": "r14-local",
     "truss_peel_items": "r14-local",
+})
+
+# The k-means family runs on one path: the Arrow kernel took the whole
+# kmeans/SemDeDup contract (ragged seeds, any unit, any k x dim, any
+# cluster size) and the relational Lloyd loop, assignment and pair
+# screen were deleted. Result-identical on the registry inputs; their
+# newest recorded correctness rows are r07 (CORRECTNESS_r07.json).
+_ROTATION_TAIL.update({
+    "kmeans_embeddings": "r14-local",
+    "semantic_dedup_embeddings": "r14-local",
+    "cluster_topics_embeddings": "r14-local",
 })
 
 # Rows-only entries (`err = no_oracle`) whose last driver row is stale

@@ -17,39 +17,73 @@ def trunc_div(a: int, b: int) -> int:
     return -q if a < 0 else q
 
 
-def py_kmeans(vecs: dict[int, list[float]], k: int, iters: int):
-    """Reference implementation of kmeans_lloyd's documented contract:
-    floor(v * UNIT) on the double product, matching both engines."""
+def py_quantize(vecs: dict[int, list | None], unit: int = UNIT) -> dict[int, list[int]]:
+    """floor(v * unit) on the double product, matching both engines.
+    NULL and empty vectors have no positions, so they drop out."""
     import math
 
-    q = {i: [math.floor(float(v) * float(UNIT)) for v in vs] for i, vs in vecs.items()}
+    return {
+        i: [math.floor(float(v) * float(unit)) for v in vs]
+        for i, vs in vecs.items()
+        if vs
+    }
+
+
+def py_argmin(qv: list[int], cents: dict) -> tuple[int, int]:
+    """(d2, cid) of the nearest centroid: squared differences over the
+    positions both vectors have (p < min(len(v), len(c))), ties to the
+    smaller cid."""
+    return min(
+        (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
+        for cid, (c, _) in cents.items()
+    )
+
+
+def py_kmeans(vecs: dict[int, list | None], k: int, iters: int, unit: int = UNIT):
+    """Reference implementation of kmeans_lloyd's documented contract,
+    ragged vectors included. Returns {cid: (centroid_units, n_members)},
+    both lists over the centroid's own positions.
+
+    - seeds are the k ids with the smallest md5 draw, over every row; a
+      drawn seed whose vector is NULL or empty yields no centroid;
+    - a centroid keeps its seed's length; the update at position p
+      averages the members that have position p, and ``n_members`` is
+      counted per (cid, pos); a position no member reaches keeps its
+      value with n_members = 0."""
+    q = py_quantize(vecs, unit)
     draws = sorted(
         (hashlib.md5(f"km|{i}".encode()).hexdigest(), i) for i in vecs
     )
-    cents = {cid: (list(q[i]), 0) for cid, (_, i) in enumerate(draws[:k])}
+    cents = {
+        cid: (list(q[i]), [0] * len(q[i]))
+        for cid, (_, i) in enumerate(draws[:k])
+        if i in q
+    }
     for _ in range(iters):
-        assign: dict[int, int] = {}
-        for i, qv in q.items():
-            best = min(
-                (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
-                for cid, (c, _) in cents.items()
-            )
-            assign[i] = best[1]
+        assign = {i: py_argmin(qv, cents)[1] for i, qv in q.items()} if cents else {}
         new = {}
         for cid, (c, _) in cents.items():
             members = [q[i] for i, a in assign.items() if a == cid]
-            if not members:
-                new[cid] = (c, 0)
-            else:
-                new[cid] = (
-                    [
-                        trunc_div(sum(m[p] for m in members), len(members))
-                        for p in range(len(c))
-                    ],
-                    len(members),
-                )
+            units, counts = [], []
+            for p in range(len(c)):
+                col = [m[p] for m in members if len(m) > p]
+                units.append(trunc_div(sum(col), len(col)) if col else c[p])
+                counts.append(len(col))
+            new[cid] = (units, counts)
         cents = new
     return cents
+
+
+def py_kmeans_assign(vecs, k: int, iters: int, unit: int = UNIT):
+    """kmeans_assign's contract: train, then one more argmin pass.
+    Returns {id: (cid, d2)} over the non-empty vectors."""
+    cents = py_kmeans(vecs, k, iters, unit)
+    if not cents:
+        return {}
+    return {
+        i: py_argmin(qv, cents)[::-1]
+        for i, qv in py_quantize(vecs, unit).items()
+    }
 
 
 vec = st.lists(
@@ -68,11 +102,13 @@ def test_kmeans_matches_python_reference(spark, vec_lists):
         [(i, v) for i, v in vecs.items()],
         "vec_id long, embedding array<float>",
     )
-    got = {}
-    for r in similarity.kmeans_lloyd(df, k=min(k, len(vecs)), iters=iters).collect():
-        c_units, n = got.setdefault(r["cid"], ({}, r["n_members"]))
-        c_units[r["pos"]] = r["centroid_units"]
-        assert n == r["n_members"]
+    got: dict[int, tuple[list, list]] = {}
+    rows = similarity.kmeans_lloyd(df, k=min(k, len(vecs)), iters=iters).collect()
+    for r in sorted(rows, key=lambda r: (r["cid"], r["pos"])):
+        units, counts = got.setdefault(r["cid"], ([], []))
+        assert r["pos"] == len(units)
+        units.append(r["centroid_units"])
+        counts.append(r["n_members"])
     # float32 -> double widening is exact, so the reference quantizes
     # the same doubles the engine's cast produces
     import numpy as np
@@ -82,11 +118,7 @@ def test_kmeans_matches_python_reference(spark, vec_lists):
         min(k, len(vecs)),
         iters,
     )
-    assert set(got) == set(want)
-    for cid, (c_units, n) in got.items():
-        want_c, want_n = want[cid]
-        assert n == want_n
-        assert [c_units[p] for p in sorted(c_units)] == want_c
+    assert got == want
 
 
 def test_kmeans_empty_cluster_keeps_position(spark):

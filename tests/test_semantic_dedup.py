@@ -21,10 +21,15 @@ def trunc_div(a: int, b: int) -> int:
     return -q if a < 0 else q
 
 
-def py_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, threshold: float):
+def py_semantic_dedup(vecs: dict[int, list | None], k: int, iters: int, threshold: float):
     """Independent mirror: fixed-point Lloyd's, final integer argmin
     assignment, rank = (d2 DESC, id), drop iff an earlier-ranked member
-    of the same cluster has quantized cosine >= threshold."""
+    of the same cluster has quantized cosine >= threshold.
+
+    Ragged contract: NULL and empty vectors drop out (a drawn seed with
+    one yields no centroid); distances and centroid updates run over the
+    positions both sides have; the cosine of two vectors of different
+    lengths is NULL, so such a pair never screens."""
     import numpy as np
 
     # the embedding column is float32: quantize from the float32 value,
@@ -32,33 +37,29 @@ def py_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, threshol
     q = {
         i: [math.floor(float(np.float32(v)) * float(UNIT)) for v in vs]
         for i, vs in vecs.items()
+        if vs
     }
     draws = sorted((hashlib.md5(f"km|{i}".encode()).hexdigest(), i) for i in vecs)
-    cents = {cid: list(q[i]) for cid, (_, i) in enumerate(draws[:k])}
-    assign: dict[int, tuple[int, int]] = {}
-    for _ in range(iters):
-        assign = {
-            i: min(
-                (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
-                for cid, c in cents.items()
-            )
-            for i, qv in q.items()
-        }
-        for cid, c in list(cents.items()):
-            members = [q[i] for i, (_, a) in assign.items() if a == cid]
-            if members:
-                cents[cid] = [
-                    trunc_div(sum(m[p] for m in members), len(members))
-                    for p in range(len(c))
-                ]
-    # final assignment against the trained centroids
-    assign = {
-        i: min(
+    cents = {cid: list(q[i]) for cid, (_, i) in enumerate(draws[:k]) if i in q}
+    if not cents:
+        return {}
+
+    def nearest(qv):
+        return min(
             (sum((a - b) ** 2 for a, b in zip(qv, c)), cid)
             for cid, c in cents.items()
         )
-        for i, qv in q.items()
-    }
+
+    for _ in range(iters):
+        assign = {i: nearest(qv) for i, qv in q.items()}
+        for cid, c in list(cents.items()):
+            members = [q[i] for i, (_, a) in assign.items() if a == cid]
+            for p in range(len(c)):
+                col = [m[p] for m in members if len(m) > p]
+                if col:
+                    c[p] = trunc_div(sum(col), len(col))
+    # final assignment against the trained centroids
+    assign = {i: nearest(qv) for i, qv in q.items()}
     out = {}
     by_cluster: dict[int, list[int]] = {}
     for i, (d2, cid) in assign.items():
@@ -70,8 +71,8 @@ def py_semantic_dedup(vecs: dict[int, list[float]], k: int, iters: int, threshol
             for j in ranked[:pos]:
                 ni = sum(a * a for a in q[i])
                 nj = sum(a * a for a in q[j])
-                if ni == 0 or nj == 0:
-                    continue  # zero-norm: cosine undefined, never screens
+                if ni == 0 or nj == 0 or len(q[i]) != len(q[j]):
+                    continue  # zero norm or ragged pair: cosine NULL
                 dot = sum(a * b for a, b in zip(q[i], q[j]))
                 cos = float(dot) / (math.sqrt(float(ni)) * math.sqrt(float(nj)))
                 best = cos if best is None else max(best, cos)
