@@ -1,17 +1,26 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, and blocked
+set similarity (n-gram Jaccard and containment).
 
 Design targets 100 TB corpora:
 
 - Exact dedup hashes the normalized text once (md5) and group-bys the
   16-byte digest — shuffle carries digests, never document bodies.
-- Near-dup never does an O(n^2) comparison: MinHash signatures -> LSH band
-  buckets -> equi-join on (band, band-hash) produces candidates, and only
-  candidates get a Jaccard verification. All signature math is JVM-side
-  array expressions (transform/aggregate over xxhash64) — no Python UDFs.
+- MinHash near-dup never does an O(n^2) comparison: MinHash signatures ->
+  LSH band buckets -> equi-join on (band, band-hash) produces candidates,
+  and only candidates get a Jaccard verification. All signature math is
+  JVM-side array expressions (transform/aggregate over xxhash64) — no
+  Python UDFs.
 - SimHash: 64-bit signature from token hashes; near-dup candidates via
   generalized pigeonhole chunk blocking (split into k > max_hamming
   chunks; a pair within Hamming d agrees on >= k-d chunks, so an
   equi-join on chunk-combination keys finds every such pair).
+- Blocked set similarity (``jaccard_pairs``, ``containment_pairs``)
+  compares every document pair inside a block key, so its work is
+  quadratic in the block by definition. Both run one grouped Arrow
+  kernel, ``_block_pairs``: one task per block counts the shared
+  distinct n-grams of all its pairs with float64 products of 0/1
+  incidence tiles, O(n^2 * V) for n documents and V shared grams, with
+  per-task temps bounded by the tile constants.
 
 xxhash64 seeds make every signature deterministic run-to-run and
 cluster-size-independent.
@@ -48,42 +57,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a TOKENS column (array<string>).
-
-    ``toks`` must be a plain column reference (hoist the tokenization into
-    its own projection first — see ``shingled``): the per-position lambda
-    references it size(toks) times, and an inlined tokenize expression
-    would re-run once per shingle position (measured ~10x slowdown).
-    """
-    if n == 1:
-        # unigram shingles are just the distinct tokens — skip the
-        # per-position lambda entirely
-        return F.array_distinct(toks)
-    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            )
-        )
-    )
-
-
-def shingled(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    keep_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """(keep_cols..., sh: array<string>) — normalized word n-gram shingle
-    sets, with tokenization computed exactly once per document."""
-    toked = docs.select(
-        *keep_cols, tokens(normalize_text(F.col(text_col))).alias("_tk")
-    )
-    return toked.select(*keep_cols, word_shingles(F.col("_tk"), n).alias("sh"))
 
 
 def hashed_shingles(
@@ -198,6 +171,120 @@ def minhash_near_dup_candidates(
     )
 
 
+# Tiles of the blocked set-similarity kernel: one step multiplies two
+# dense 0/1 incidence tiles of at most _PAIR_TILE_ROWS documents x
+# _PAIR_TILE_VOCAB grams into a _PAIR_TILE_ROWS^2 count tile, so a task's
+# temps hold about 2.4M float64 cells (19 MB) plus that tile's flat pair
+# arrays, whatever the block size. They bound memory and select no path.
+_PAIR_TILE_ROWS = 512
+_PAIR_TILE_VOCAB = 2048
+
+
+def _tile_intersections(row, code, m: int, rt: int, vt: int):
+    """Exact |A ∩ B| for every document pair i < j of one block of ``m``
+    documents, yielded one row-tile pair at a time as flat (i, j, inter)
+    arrays. ``row``/``code`` list the block's (document, gram) incidence
+    entries. Each step is the float64 product of two dense 0/1 tiles of
+    at most rt x vt cells; sums of 1.0 are exact integers below 2^53."""
+    import numpy as np
+
+    n_vocab = int(code.max()) + 1 if len(code) else 0
+    nrt, nvt = -(-m // rt), -(-n_vocab // vt)
+    # entries grouped by (row tile, vocab tile): each tile is one slice
+    key = (row // rt) * nvt + code // vt
+    order = np.argsort(key, kind="stable")
+    row, code = row[order], code[order]
+    cut = np.searchsorted(key[order], np.arange(nrt * nvt + 1))
+
+    def tile(r: int, t: int):
+        lo, hi = cut[r * nvt + t], cut[r * nvt + t + 1]
+        x = np.zeros((min(rt, m - r * rt), min(vt, n_vocab - t * vt)))
+        x[row[lo:hi] - r * rt, code[lo:hi] - t * vt] = 1.0
+        return x
+
+    def filled(r: int, t: int) -> bool:
+        return cut[r * nvt + t] < cut[r * nvt + t + 1]
+
+    for a in range(nrt):
+        for b in range(a, nrt):
+            na, nb = min(rt, m - a * rt), min(rt, m - b * rt)
+            inter = np.zeros((na, nb))
+            for t in range(nvt):
+                if filled(a, t) and filled(b, t):
+                    inter += tile(a, t) @ tile(b, t).T
+            if a == b:
+                i, j = np.triu_indices(na, 1)
+            else:
+                i, j = np.divmod(np.arange(na * nb), nb)
+            yield i + a * rt, j + b * rt, inter[i, j]
+
+
+def _block_pairs(
+    docs: DataFrame,
+    block_col: str,
+    text_col: str,
+    n: int,
+    cols: tuple[str, str, str],
+    emit,
+) -> DataFrame:
+    """The one verify path of the blocked set-similarity operators: a
+    ``groupBy(block).applyInPandas``, one task per block, as in the
+    SemDeDup screen.
+
+    Tokenization stays in the JVM (``tokens(normalize_text(text))``);
+    the kernel only joins consecutive tokens with " " into n-grams, as
+    ``concat_ws`` does, and never re-splits or re-cases text (Java and
+    Python disagree on ``\\s`` and ``lower()`` outside ASCII). Per block
+    it factorizes the distinct grams on their exact strings (no hashing
+    into a smaller domain), drops grams held by one document (they add
+    to no intersection), and counts |A ∩ B| with
+    ``_tile_intersections``.
+
+    ``emit(ids, sz, i, j, inter)`` maps one tile of pairs (i < j in
+    doc_id order; ``sz`` the distinct-gram counts, float64) to the
+    (left ids, right ids, values) rows to keep, written as ``cols``.
+    NULL ids and NULL block keys pair with nothing, as in an equi-join;
+    NULL, blank and shorter-than-n texts have no gram and no row.
+    """
+    import numpy as np
+    import pandas as pd
+
+    rt, vt = _PAIR_TILE_ROWS, _PAIR_TILE_VOCAB
+    toked = docs.select(
+        F.col("doc_id").alias("_id"),
+        F.col(block_col).alias("_blk"),
+        tokens(normalize_text(F.col(text_col))).alias("_tk"),
+    ).filter(
+        F.col("_id").isNotNull() & F.col("_blk").isNotNull() & (F.size("_tk") >= n)
+    )
+    id_type = dict(toked.dtypes)["_id"]
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("_id", kind="mergesort")
+        ids = pdf["_id"].to_numpy()
+        grams = [
+            set(tk)
+            if n == 1
+            else {" ".join(tk[k : k + n]) for k in range(len(tk) - n + 1)}
+            for tk in (t.tolist() for t in pdf["_tk"])
+        ]
+        sz = np.array([len(g) for g in grams], dtype=np.int64)
+        szf = sz.astype(np.float64)
+        code = pd.factorize(pd.Series([g for gs in grams for g in gs], dtype=object))[0]
+        shared = np.bincount(code)[code] >= 2
+        code = np.unique(code[shared], return_inverse=True)[1]
+        row = np.repeat(np.arange(len(ids)), sz)[shared]
+        parts = [
+            emit(ids, szf, i, j, inter)
+            for i, j, inter in _tile_intersections(row, code, len(ids), rt, vt)
+        ]
+        return pd.DataFrame(dict(zip(cols, (np.concatenate(p) for p in zip(*parts)))))
+
+    return toked.groupBy("_blk").applyInPandas(
+        run, f"{cols[0]} {id_type}, {cols[1]} {id_type}, {cols[2]} double"
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     block_col: str = "source",
@@ -205,28 +292,28 @@ def jaccard_pairs(
     shingle_n: int = 1,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for document pairs within a blocking
-    key (never all-pairs: the block join bounds the candidate set).
+    """Exact n-gram Jaccard similarity for document pairs within a
+    blocking key (never all-pairs: the block bounds the candidate set).
 
-    jaccard = |A ∩ B| / |A ∪ B| over distinct shingle sets — integer
-    cardinalities, so the double division is deterministic.
+    jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) over distinct word n-gram
+    sets — integer cardinalities, so the double division is
+    deterministic. Emits (doc_a, doc_b, jaccard >= threshold) with
+    doc_a < doc_b, pairs of zero overlap included when the threshold
+    allows them.
+
+    Plan: ``_block_pairs``, one task per block. Per-block work is
+    O(n^2 * V) for n documents and V shared grams; per-task temps are
+    bounded by ``_PAIR_TILE_ROWS`` x ``_PAIR_TILE_VOCAB`` tiles; counts
+    are float64 sums of 1.0, exact below 2^53.
     """
-    sh = (
-        shingled(docs, text_col, shingle_n, keep_cols=("doc_id", block_col))
-        .withColumnRenamed(block_col, "blk")
-        .filter(F.size("sh") > 0)
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+
+    def emit(ids, sz, i, j, inter):
+        v = inter / (sz[i] + sz[j] - inter)
+        keep = (v >= threshold) & (ids[i] != ids[j])
+        return ids[i[keep]], ids[j[keep]], v[keep]
+
+    return _block_pairs(
+        docs, block_col, text_col, shingle_n, ("doc_a", "doc_b", "jaccard"), emit
     )
 
 
@@ -1497,9 +1584,6 @@ def containment_pairs(
     text_col: str = "text",
     shingle_n: int = 1,
     threshold: float = 0.6,
-    t_num: int = 3,
-    t_den: int = 5,
-    verify: str = "rows",
 ) -> DataFrame:
     """ASYMMETRIC containment similarity: for ordered pairs (a, b) in
     the same block, ``containment = |sh(a) ∩ sh(b)| / |sh(a)|`` — the
@@ -1510,211 +1594,32 @@ def containment_pairs(
     Jaccard ≈ |a|/|b| stays far below any near-dup threshold while
     containment is ~1 (Broder 1997 distinguishes exactly these two
     resemblance measures). Output rows (doc_id, container_id,
-    containment) with doc_id != container_id — both directions of a
-    pair are evaluated since the measure is directional.
+    containment >= threshold) with doc_id != container_id — both
+    directions of a pair are evaluated since the measure is
+    directional. The result is the quadratic in-block formulation.
 
-    NEVER block-quadratic: candidates come from an EXACT prefix filter
-    (Bayardo et al. WWW 2007, adapted to containment) over an inverted
-    gram index. If C(a,b) >= t then b misses at most |a| - ceil(t|a|)
-    of a's grams, so any fixed probe subset of size
-    ``|a| - ceil(t|a|) + 1`` must share a gram with b — probes are a's
-    globally RAREST grams (df-ascending rank), which minimizes the
-    index join's fan-out, and candidates additionally require
-    ``|b| >= ceil(t|a|)`` (since the intersection fits inside b).
-    ceil(t|a|) is computed by INTEGER ceiling division with the
-    threshold as the rational ``t_num/t_den`` — a float ceil of
-    0.6*|a| rounds the wrong way on exact multiples (binary 0.6 > 3/5)
-    and would shrink the probe below the exactness bound. Only
-    candidate pairs get the exact intersection, so the result is
-    IDENTICAL to the quadratic formulation (the final filter keeps the
-    engine-portable float-threshold contract).
-
-    Grams come from posexplode + window leads (full codegen), never
-    from a higher-order-function shingle array — profiling showed the
-    interpreted HOF transform alone costing ~26 s at sf0.1 (~21 us
-    per gram), 2x the rest of the operator combined.
-
-    ``verify`` picks the exact-intersection strategy — both produce
-    identical results; the crossover is CANDIDATE DENSITY (measured at
-    sf0.1):
-    - ``"rows"`` (default): count shared grams via two joins + a
-      pair-keyed aggregate. Work ∝ candidates x |A|; wins when the
-      prefilter prunes hard (trigram corpus: 792 candidates of 1.25M
-      pairs, 4.7 s vs 30.8 s for the HOF-array formulation).
-    - ``"arrays"``: pack each doc's grams once (one aggregate, no
-      HOF) and array_intersect per candidate. Wins when candidates
-      are dense and array shipping amortizes (unigram synthetic
-      corpus: 1.1M candidates, 14 s vs 17.6 s row-verify).
+    Plan: ``_block_pairs``, the kernel ``jaccard_pairs`` runs — one
+    task per block, per-block work O(n^2 * V) for n documents and V
+    shared grams, per-task temps bounded by the tile constants, exact
+    float64 counts below 2^53. Each intersection serves both
+    directions.
     """
-    assert abs(t_num / t_den - threshold) < 1e-9, "threshold must equal t_num/t_den"
-    # Pin the gram relation: it fans into FOUR consumers (document
-    # frequencies, probe side, index side, exact verify) and Catalyst
-    # dedupes no common subplans, so the posexplode + lead-window +
-    # distinct subtree would execute once per consumer (measured ~12 s
-    # -> ~5 s at sf0.1 for the unigram corpus). One execution, three
-    # reuses — the shared-sigma precedent applied operator-locally.
-    grams = gram_rows(docs, block_col, text_col, shingle_n).localCheckpoint(
-        eager=True
-    )
-    df_counts = grams.groupBy("blk", "g").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("doc_id").orderBy("_df", "g")
-    ceil_t_sz = F.expr(f"CAST(({t_num} * sz + {t_den - 1}) DIV {t_den} AS INT)")
-    # rank EVERY gram in one global total order (df asc, gram) so both
-    # join sides carry their position; probes are the rank-prefix,
-    # and the index side keeps its rank for the positional filter.
-    ranked = (
-        grams.join(df_counts, ["blk", "g"])
-        .withColumn("_rk", F.row_number().over(w))
-        .localCheckpoint(eager=True)
-    )
-    probes = ranked.filter(F.col("_rk") <= F.col("sz") - ceil_t_sz + 1).select(
-        "blk",
-        "g",
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("_rk").alias("_rk_a"),
-    )
-    # PPJoin-style positional filter (Xiao et al. WWW'08, adapted to
-    # containment): for a true pair, its FIRST shared gram in the
-    # global order has all >= ceil(t|a|) shared grams at ranks >= rk_a
-    # in a and >= rk_b in b, so ceil(t|a|) <= min(|a|-rk_a, |b|-rk_b)+1
-    # holds on that row — filtering co-gram rows on the bound can never
-    # drop a qualifying pair, but prunes the candidate fan-out BEFORE
-    # the pair-distinct shuffle (sf0.1 unigram corpus: 8.7M -> fewer
-    # pre-distinct rows for the same 1.11M candidates).
-    cand = (
-        probes.join(
-            ranked.select(
-                "blk",
-                "g",
-                F.col("doc_id").alias("doc_id_b"),
-                F.col("sz").alias("sz_b"),
-                F.col("_rk").alias("_rk_b"),
-            ),
-            ["blk", "g"],
-        )
-        .filter(
-            (F.col("doc_id_a") != F.col("doc_id_b"))
-            & (
-                F.expr(f"CAST(({t_num} * sz_a + {t_den - 1}) DIV {t_den} AS INT)")
-                <= F.least(
-                    F.col("sz_a") - F.col("_rk_a"), F.col("sz_b") - F.col("_rk_b")
-                )
-                + F.lit(1)
-            )
-        )
-        .select("doc_id_a", "sz_a", "doc_id_b")
-        .distinct()
-    )
-    if verify == "rows":
-        ga = grams.select(F.col("doc_id").alias("doc_id_a"), "g")
-        gb = grams.select(F.col("doc_id").alias("doc_id_b"), "g")
-        verified = (
-            cand.join(ga, "doc_id_a")
-            .join(gb, ["doc_id_b", "g"])
-            .groupBy("doc_id_a", "sz_a", "doc_id_b")
-            .agg(F.count(F.lit(1)).alias("_inter"))
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                (
-                    F.col("_inter").cast("double")
-                    / F.col("sz_a").cast("double")
-                ).alias("containment"),
-            )
-        )
-    elif verify == "arrays":
-        packed = grams.groupBy("doc_id").agg(F.collect_list("g").alias("sh"))
-        a = packed.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
-        b = packed.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        verified = (
-            cand.join(a, "doc_id_a")
-            .join(b, "doc_id_b")
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                (inter.cast("double") / F.col("sz_a").cast("double")).alias(
-                    "containment"
-                ),
-            )
-        )
-    else:
-        raise ValueError(f"verify must be 'rows' or 'arrays', got {verify!r}")
-    return (
-        verified.select(
-            F.col("doc_id_a").alias("doc_id"),
-            F.col("doc_id_b").alias("container_id"),
-            "containment",
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    import numpy as np
 
+    def emit(ids, sz, i, j, inter):
+        a, b = np.concatenate([i, j]), np.concatenate([j, i])
+        x = np.concatenate([inter, inter])
+        v = x / sz[a]
+        keep = (v >= threshold) & (ids[a] != ids[b])
+        return ids[a[keep]], ids[b[keep]], v[keep]
 
-def gram_rows(
-    docs: DataFrame,
-    block_col: str = "source",
-    text_col: str = "text",
-    n: int = 1,
-) -> DataFrame:
-    """Distinct word n-grams as ROWS ``(doc_id, blk, g, sz)`` with the
-    per-doc distinct gram count attached — the inverted-index feed.
-
-    Unigrams (n = 1) are built MAP-ONLY: ``array_distinct`` over the
-    token array, ``sz`` from ``size()``, then one explode — zero
-    shuffles. The previous rows-first form (posexplode → row-level
-    ``distinct()`` → doc-keyed count window) spent TWO shuffles
-    computing what the array form gets per-row; at sf0.1 that was
-    ~4.3 s of the unigram containment wall vs ~0.7 s for this path
-    (array_distinct/array_remove are codegen expressions, not the
-    interpreted per-element HOF lambdas the shingle lesson bans).
-
-    n >= 2 still assembles grams from posexplode + ``lead()`` windows
-    (codegen) rather than a higher-order-function transform — Spark
-    evaluates HOF transforms on the interpreted path, measured ~21 us
-    per shingle, which dominates any downstream join at corpus scale.
-    There the doc-keyed lead windows and the distinct/count reuse one
-    doc_id partitioning.
-    """
-    toked = docs.select(
-        F.col("doc_id"),
-        F.col(block_col).alias("blk"),
-        tokens(normalize_text(F.col(text_col))).alias("_tk"),
-    )
-    if n == 1:
-        return toked.select(
-            "doc_id",
-            "blk",
-            F.array_distinct(F.array_remove("_tk", "")).alias("_g"),
-        ).select(
-            "doc_id",
-            "blk",
-            F.explode("_g").alias("g"),
-            F.size("_g").cast("int").alias("sz"),
-        )
-    tok_pos = toked.select(
-        "doc_id", "blk", F.posexplode("_tk").alias("pos", "w")
-    ).filter(F.col("w") != "")
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("w")] + [F.lead("w", i).over(wdoc) for i in range(1, n)]
-    # gram AND tail guard must come from the SAME projection: a
-    # filter between them would make the select re-run the lead
-    # windows over the filtered rows, truncating each doc's last
-    # grams (concat_ws silently skips the re-nulled leads)
-    rows = (
-        tok_pos.select(
-            "doc_id",
-            "blk",
-            F.concat_ws(" ", *parts).alias("g"),
-            parts[-1].alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull())
-        .select("doc_id", "blk", "g")
-    )
-    distinct = rows.distinct()
-    wsz = Window.partitionBy("doc_id")
-    return distinct.withColumn(
-        "sz", F.count(F.lit(1)).over(wsz).cast("int")
+    return _block_pairs(
+        docs,
+        block_col,
+        text_col,
+        shingle_n,
+        ("doc_id", "container_id", "containment"),
+        emit,
     )
 
 

@@ -3091,9 +3091,10 @@ def q_winnow_verified(spark, sf_dir):
 
 # Four queries consume the SAME blocked-Jaccard(0.3) near-dup evidence
 # (ngram_jaccard_pairs, dedup_clusters, dedup_cluster_canonical,
-# golden_record_docs) — the blocked pair join dominates each (~12.6 s at
-# sf0.1, r9 bench). The pair table and its connected-component closure
-# are two pins; the closure builds on the pair pin.
+# golden_record_docs). The pair table is one grouped Arrow pass, one task
+# per `source` block (dedup._block_pairs), and its connected-component
+# closure iterates over it; both are pins, the closure built on the pair
+# pin.
 @_pinned("near_dup_pairs")
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_pairs(
@@ -8117,18 +8118,17 @@ def q_ewma(spark, sf_dir):
     "(Broder 1997's second resemblance measure): a short document "
     "embedded in a long one scores ~1 here while its Jaccard "
     "~|A|/|B| stays under every near-dup threshold — the duplication "
-    "mode the symmetric family cannot see. Candidates come from an "
-    "EXACT Bayardo prefix filter over an inverted gram index "
-    "(rarest-gram probes sized by INTEGER ceiling arithmetic — a "
-    "float ceil of 0.6|A| rounds the wrong way on exact multiples — "
-    "plus the |B| >= ceil(0.6|A|) size bound), so the plan is never "
-    "block-quadratic yet the result equals the quadratic formulation "
-    "the oracle states",
+    "mode the symmetric family cannot see. The plan is the quadratic "
+    "in-block formulation the oracle states: one grouped Arrow task "
+    "per source block counts every pair's shared distinct tokens with "
+    "exact float64 products of 0/1 incidence tiles (the kernel "
+    "ngram_jaccard_pairs runs), each intersection serving both "
+    "directions",
 )
 def q_containment(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return dedup.containment_pairs(
-        docs, block_col="source", shingle_n=1, threshold=0.6, verify="arrays"
+        docs, block_col="source", shingle_n=1, threshold=0.6
     )
 
 
@@ -8160,14 +8160,15 @@ def q_containment(spark, sf_dir):
     "sets — shared vocabulary no longer counts, only shared 3-word "
     "runs do, so the survivors are genuine copied passages (this "
     "corpus holds exactly the near-dup pair planted in it, both "
-    "directions). Same exact prefix-filtered plan as "
-    "containment_near_dup; the trigram space is sparse enough that "
-    "the rarest-gram probes prune hard on real (Zipfian) text",
+    "directions). Same blocked Arrow kernel as containment_near_dup "
+    "over trigrams; grams held by one document of a block are dropped "
+    "before the count, so the sparse trigram space keeps the "
+    "incidence tiles small",
 )
 def q_containment_trigram(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return dedup.containment_pairs(
-        docs, block_col="source", shingle_n=3, threshold=0.5, t_num=1, t_den=2
+        docs, block_col="source", shingle_n=3, threshold=0.5
     )
 
 
@@ -16611,6 +16612,21 @@ _ROTATION_TAIL.update({
     "kmeans_embeddings": "r14-local",
     "semantic_dedup_embeddings": "r14-local",
     "cluster_topics_embeddings": "r14-local",
+})
+
+# Blocked set similarity runs one grouped Arrow kernel: jaccard_pairs
+# (the near_dup_pairs pin and its closure) and containment_pairs share
+# one verify path, and the self-join, the prefix filter and both verify
+# strategies were deleted. Result-identical on the registry inputs at
+# all three SFs.
+_ROTATION_TAIL.update({
+    "ngram_jaccard_pairs": "r14-local",
+    "dedup_clusters": "r14-local",
+    "dedup_cluster_canonical": "r14-local",
+    "golden_record_docs": "r14-local",
+    "doc_winnow_fingerprint_verified": "r14-local",
+    "containment_near_dup": "r14-local",
+    "containment_quotes_trigram": "r14-local",
 })
 
 # Rows-only entries (`err = no_oracle`) whose last driver row is stale

@@ -77,10 +77,7 @@ def test_skyline_empty_and_singleton(spark):
 
 def test_containment_empty_docs(spark):
     docs = spark.createDataFrame([], "doc_id bigint, text string, source string")
-    for verify in ("rows", "arrays"):
-        assert (
-            dedup.containment_pairs(docs, verify=verify).count() == 0
-        )
+    assert dedup.containment_pairs(docs).count() == 0
     blank = spark.createDataFrame(
         [(1, "   ", "web"), (2, "", "web")],
         "doc_id bigint, text string, source string",

@@ -2,7 +2,6 @@
 python parity for the asymmetric measure, and field-wise merge contracts
 (longest text, modal lang/source, deterministic tie-breaks)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import dedup
@@ -23,13 +22,12 @@ def _shingles(text):
 
 
 
-@pytest.mark.parametrize("verify", ["rows", "arrays"])
-def test_containment_matches_brute_force(spark, verify):
+def test_containment_matches_brute_force(spark):
     df = spark.createDataFrame(DOCS, ["doc_id", "text", "lang", "source", "n_chars"])
     got = {
         (r["doc_id"], r["container_id"]): r["containment"]
         for r in dedup.containment_pairs(
-            df, block_col="source", shingle_n=1, threshold=0.6, verify=verify
+            df, block_col="source", shingle_n=1, threshold=0.6
         ).collect()
     }
     want = {}
