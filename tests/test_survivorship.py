@@ -2,6 +2,7 @@
 python parity for the asymmetric measure, and field-wise merge contracts
 (longest text, modal lang/source, deterministic tie-breaks)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import dedup
@@ -22,7 +23,17 @@ def _shingles(text):
 
 
 
-def test_containment_matches_brute_force(spark):
+@pytest.mark.parametrize("tile_axis", ["rows", "arrays"])
+def test_containment_matches_brute_force(spark, monkeypatch, tile_axis):
+    """Parity with brute force when one tile axis of the block kernel is
+    cut to width 1: "rows" puts each document in its own row tile, so
+    every pair is counted across two tiles; "arrays" cuts the incidence
+    arrays to one gram per vocabulary tile, so every intersection is
+    summed over several tile products."""
+    if tile_axis == "rows":
+        monkeypatch.setattr(dedup, "_PAIR_TILE_ROWS", 1)
+    else:
+        monkeypatch.setattr(dedup, "_PAIR_TILE_VOCAB", 1)
     df = spark.createDataFrame(DOCS, ["doc_id", "text", "lang", "source", "n_chars"])
     got = {
         (r["doc_id"], r["container_id"]): r["containment"]
