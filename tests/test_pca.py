@@ -14,36 +14,85 @@ from probability_of_buying_two_products_together_hadoop_project_spark.operators 
 UNIT = 10**6
 
 
-def _py_pca(vectors, iters=6, unit=UNIT):
-    """Integer mirror of the fixed-point contract."""
-    n = len(vectors)
-    dim = len(vectors[0])
-    q = [[math.floor(x * unit) for x in v] for v in vectors]
+def _tdiv(a, b):
+    """Truncating integer division (Spark/DuckDB ``div``), not ``//``."""
+    q = abs(a) // abs(b)
+    return q if (a >= 0) == (b >= 0) else -q
 
-    # trunc division toward zero, matching Spark div / DuckDB //
-    def trunc_div(a, b):
-        qd = abs(a) // abs(b)
-        return qd if (a >= 0) == (b >= 0) else -qd
 
-    mu = [trunc_div(sum(r[i] for r in q), n) for i in range(dim)]
-    dev = [[r[i] - mu[i] for i in range(dim)] for r in q]
-    s_mat = [
-        [sum(r[i] * r[j] for r in dev) for j in range(dim)] for i in range(dim)
+def _py_scatter(vectors, unit=UNIT):
+    """Integer mirror of ``pca_corpus_scatter``: (S, n_vecs) with S the
+    dense D x D centered scatter. Vectors may be ragged or hold NULL
+    elements: a NULL element counts toward its position's mean divisor
+    (``count(1)``) and adds no deviation product."""
+    q = [[None if x is None else math.floor(x * unit) for x in v] for v in vectors if v]
+    dim = max(len(r) for r in q)
+    n = [sum(1 for r in q if len(r) > i) for i in range(dim)]
+    mu = [
+        _tdiv(sum(r[i] for r in q if len(r) > i and r[i] is not None), n[i])
+        for i in range(dim)
     ]
-    v = [unit] * dim
-    for _ in range(iters):
-        t = [sum(s_mat[i][j] * v[j] for j in range(dim)) for i in range(dim)]
-        m = max(abs(x) for x in t)
-        v = [0] * dim if m == 0 else [trunc_div(x * unit, m) for x in t]
-    first_nz = next((x for x in v if x != 0), 1)
-    if first_nz < 0:
-        v = [-x for x in v]
-    t = [sum(s_mat[i][j] * v[j] for j in range(dim)) for i in range(dim)]
-    num = sum(t[i] * v[i] for i in range(dim))
-    den = sum(x * x for x in v)
-    lam = trunc_div(num, den) if den else 0
+    dev = [[None if x is None else x - mu[i] for i, x in enumerate(r)] for r in q]
+    s_mat = [
+        [
+            sum(
+                r[i] * r[j]
+                for r in dev
+                if len(r) > max(i, j) and r[i] is not None and r[j] is not None
+            )
+            for j in range(dim)
+        ]
+        for i in range(dim)
+    ]
+    return s_mat, max(n)
+
+
+def _py_pca_rows(vectors, n_components=1, iters=6, unit=UNIT):
+    """Integer mirror of the whole fixed-point contract: the rows of
+    ``pca_components`` as (component, pos, loading_units, loading,
+    eigenvalue_str, var_ratio, n_vecs), power iteration with Hotelling
+    deflation."""
+    s_mat, n_vecs = _py_scatter(vectors, unit)
+    dim = len(s_mat)
     tr = sum(s_mat[i][i] for i in range(dim))
-    return v, lam, tr
+
+    def matvec(v):
+        return [sum(a * b for a, b in zip(row, v)) for row in s_mat]
+
+    out = []
+    for c in range(n_components):
+        v = [unit] * dim
+        for _ in range(iters):
+            t = matvec(v)
+            m = max(abs(x) for x in t)
+            v = [0] * dim if m == 0 else [_tdiv(x * unit, m) for x in t]
+        if next((x for x in v if x != 0), 1) < 0:
+            v = [-x for x in v]
+        vv = sum(x * x for x in v)
+        if vv == 0:
+            # a zero loading vector emits no rows and deflates nothing
+            continue
+        lam = _tdiv(sum(a * b for a, b in zip(matvec(v), v)), vv)
+        ratio = float(lam) / float(tr) if tr else None
+        out += [
+            (c, p, u, float(u) / float(unit), str(lam), ratio, n_vecs)
+            for p, u in enumerate(v)
+        ]
+        s_mat = [
+            [s_mat[i][j] - _tdiv(lam * v[i] * v[j], vv) for j in range(dim)]
+            for i in range(dim)
+        ]
+    return sorted(out)
+
+
+def _rows(out):
+    return sorted(tuple(r) for r in out.collect())
+
+
+def _vec_df(spark, vecs):
+    return spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
+    )
 
 
 def test_pca_matches_python_mirror_and_numpy(spark):
@@ -69,14 +118,12 @@ def test_pca_matches_python_mirror_and_numpy(spark):
     # the engine quantizes the FLOAT32 storage of each component; the
     # mirror must read the same float32 values
     f32 = [[float(np.float32(x)) for x in v] for v in vecs]
+    top = similarity.pca_top_component(df, iters=6)
+    assert _rows(top) == [r[1:] for r in _py_pca_rows(f32, 1, iters=6)]
     got = {
         r.pos: (r.loading_units, r.eigenvalue_str, r.var_ratio)
-        for r in similarity.pca_top_component(df, iters=6).collect()
+        for r in top.collect()
     }
-    v, lam, tr = _py_pca(f32, iters=6)
-    assert {p: u for p, (u, _, _) in got.items()} == dict(enumerate(v))
-    assert got[0][1] == str(lam)
-    assert got[0][2] == pytest.approx(lam / tr, rel=1e-12)
     # numpy ground truth: dominant direction ~ (1,1,0,0)/sqrt(2)
     arr = np.array(vecs)
     cov = np.cov(arr.T)
@@ -110,10 +157,10 @@ def test_pca_validation_and_constant_input(spark):
     )
     with pytest.raises(ValueError):
         similarity.pca_top_component(df, iters=0)
-    # constant corpus: zero scatter -> zero loadings, null ratio
-    rows = similarity.pca_top_component(df, iters=3).collect()
-    assert all(r.loading_units == 0 for r in rows)
-    assert all(r.var_ratio is None for r in rows)
+    # constant corpus: zero scatter -> zero loading vectors, which emit
+    # no rows (and deflate nothing) for every component
+    assert similarity.pca_top_component(df, iters=3).collect() == []
+    assert similarity.pca_components(df, n_components=2, iters=3).collect() == []
 
 
 def test_pca_two_components_orthogonal_and_ordered(spark):
@@ -216,8 +263,11 @@ def test_pca_fold_equals_relational_rounds(spark, monkeypatch):
 @pytest.mark.parametrize("rows", [[], [(1, None), (2, [])]])
 def test_pca_top_component_no_usable_vector(spark, rows):
     # no vector with a dimension: an empty frame with the documented
-    # six-column schema, not an error
+    # schema, not an error
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    two = similarity.pca_components(df, n_components=2, iters=3)
+    assert [f.name for f in two.schema][:1] == ["component"]
+    assert two.collect() == []
     out = similarity.pca_top_component(df, iters=3)
     assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
         ("pos", "int"),
@@ -228,3 +278,39 @@ def test_pca_top_component_no_usable_vector(spark, rows):
         ("n_vecs", "bigint"),
     ]
     assert out.collect() == []
+
+
+_FIRST_SHORTER = [
+    [1.0, 2.0, 0.5], [2.0, -1.0, 0.25, 3.0], [0.5, 0.5, -2.0, 1.0],
+    [-1.5, 1.0, 1.0, -0.5], [3.0, 0.0, 0.75, 2.0],
+]
+
+
+def test_pca_ragged_first_row_shorter_keeps_every_position(spark):
+    df = _vec_df(spark, _FIRST_SHORTER)
+    rows = _rows(similarity.pca_components(df, n_components=2, iters=4))
+    assert sorted({(r[0], r[1]) for r in rows}) == [
+        (c, p) for c in range(2) for p in range(4)
+    ]
+
+
+@pytest.mark.parametrize(
+    "vecs",
+    [
+        # the first row is longer than the rest
+        [[1.0, 2.0, 0.5, 4.0], [2.0, -1.0, 0.25], [0.5, 0.5, -2.0],
+         [-1.5, 1.0, 1.0], [3.0, 0.0, 0.75]],
+        # one NULL element is tolerated: it counts toward its position's
+        # mean divisor and adds no deviation product
+        [[1.0, 2.0, 0.5, 4.0], [2.0, None, 0.25, 3.0], [0.5, 0.5, -2.0, 1.0],
+         [-1.5, 1.0, 1.0, -0.5], [3.0, 0.0, 0.75, 2.0]],
+    ],
+    ids=["first_longer", "one_null_element"],
+)
+def test_pca_ragged_and_null_element_match_mirror(spark, vecs):
+    df = _vec_df(spark, vecs)
+    want = _py_pca_rows(vecs, n_components=2, iters=4)
+    assert sorted({r[1] for r in want}) == [0, 1, 2, 3]
+    assert _rows(similarity.pca_components(df, n_components=2, iters=4)) == want
+    top = similarity.pca_top_component(df, iters=4)
+    assert _rows(top) == [r[1:] for r in want if r[0] == 0]

@@ -98,3 +98,59 @@ def test_wordpiece_expr_path_equals_loop_path(spark, monkeypatch):
         for r in text.wordpiece_greedy_encode(wdf, vdf).collect()
     }
     assert fast == slow
+
+
+def _encode_rows(spark, words, vocab, **kw):
+    wdf = spark.createDataFrame(words, "word string, cnt long, target string")
+    vdf = spark.createDataFrame([(p,) for p in vocab], "piece string")
+    out = text.wordpiece_greedy_encode(wdf, vdf, **kw).collect()
+    return sorted((tuple(r) for r in out), key=repr)
+
+
+def test_wordpiece_null_and_empty_target(spark):
+    # a NULL target keeps a NULL is_unk; an empty one is a zero-step
+    # encode; both report the one-piece count of an empty sequence
+    got = _encode_rows(spark, [("n", 1, None), ("e", 2, "")], ["a"])
+    assert got == [("e", 2, "", 1, 0), ("n", 1, "", 1, None)]
+
+
+def test_wordpiece_empty_vocab_and_null_piece(spark):
+    words = [("ab", 1, "ab"), ("e", 1, "")]
+    assert _encode_rows(spark, words, []) == [
+        ("ab", 1, "[UNK]", 1, 1),
+        ("e", 1, "", 1, 0),
+    ]
+    # a NULL piece matches nothing and is ignored by the length guard
+    assert _encode_rows(spark, words, [None, "a", "b"], max_piece_len=1) == [
+        ("ab", 1, "a b", 2, 0),
+        ("e", 1, "", 1, 0),
+    ]
+
+
+def test_wordpiece_duplicate_words(spark):
+    # one output row per input row, duplicates included
+    words = [("ab", 1, "ab"), ("ab", 1, "ab"), ("ab", 5, "ab")]
+    assert _encode_rows(spark, words, ["a", "b", "ab"]) == [
+        ("ab", 1, "ab", 1, 0),
+        ("ab", 1, "ab", 1, 0),
+        ("ab", 5, "ab", 1, 0),
+    ]
+
+
+def test_wordpiece_non_ascii_and_astral_pieces(spark):
+    # lengths and positions count code points, astral ones included
+    vocab = ["é😀", "😀😀", "é", "x"]
+    targets = ["é😀😀😀", "éé", "😀é", "xé😀x", "😀"]
+    words = [(t, 1, t) for t in targets]
+    got = _encode_rows(spark, words, vocab)
+    assert got == sorted(
+        ((t, 1, *_mirror_row(t, set(vocab))) for t in targets), key=repr
+    )
+    assert ("é😀😀😀", 1, "é😀 😀😀", 2, 0) in got
+    with pytest.raises(ValueError):
+        _run(spark, [("😀", 1)], {"😀😀😀"}, max_piece_len=2)
+
+
+def _mirror_row(target, vocab):
+    seq, n, unk = py_greedy(target, vocab)
+    return seq, n, int(unk)
