@@ -354,7 +354,10 @@ def main() -> None:
         args.only = list(SCALING_PROBE)
 
     import __spark_entry__ as entry_mod
-    from probability_of_buying_two_products_together_hadoop_project_spark.session import get_spark
+    from probability_of_buying_two_products_together_hadoop_project_spark.session import (
+        get_spark,
+        local_cpus,
+    )
 
     m = re.search(r"sf([0-9.]+)", args.sf_dir)
     sf = float(m.group(1)) if m else None
@@ -487,7 +490,7 @@ def main() -> None:
     # total next to the raw one. Round-over-round comparisons read the
     # normalized figure; per-query regressions still gate on shuffle
     # bytes via bench_diff.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     host_factor = None
     host_pool_n = 0
     try:

@@ -244,7 +244,10 @@ def _block_pairs(
     doc_id order; ``sz`` the distinct-gram counts, float64) to the
     (left ids, right ids, values) rows to keep, written as ``cols``.
     NULL ids and NULL block keys pair with nothing, as in an equi-join;
-    NULL, blank and shorter-than-n texts have no gram and no row.
+    NULL, blank and shorter-than-n texts have no gram and no row. The
+    kernel drops those texts itself: a JVM filter on ``size(_tk)``
+    would be pushed below the projection with the alias inlined, and
+    the tokenize expression would run twice per document.
     """
     import numpy as np
     import pandas as pd
@@ -254,13 +257,12 @@ def _block_pairs(
         F.col("doc_id").alias("_id"),
         F.col(block_col).alias("_blk"),
         tokens(normalize_text(F.col(text_col))).alias("_tk"),
-    ).filter(
-        F.col("_id").isNotNull() & F.col("_blk").isNotNull() & (F.size("_tk") >= n)
-    )
+    ).filter(F.col("_id").isNotNull() & F.col("_blk").isNotNull())
     id_type = dict(toked.dtypes)["_id"]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id", kind="mergesort")
+        long_enough = [tk is not None and len(tk) >= n for tk in pdf["_tk"]]
+        pdf = pdf[long_enough].sort_values("_id", kind="mergesort")
         ids = pdf["_id"].to_numpy()
         grams = [
             set(tk)

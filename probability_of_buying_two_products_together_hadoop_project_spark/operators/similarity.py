@@ -16,6 +16,9 @@ precision; no Python UDFs in the hot path.
 
 from __future__ import annotations
 
+from operator import mul
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,23 +42,6 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def _embedding_dim(embeddings: DataFrame, vec_col: str) -> int | None:
-    """Embedding dimensionality from ONE input row (the fixed-dim
-    contract: every non-null vector in an embeddings relation has the
-    same length). A limit-1 probe on the source replaces the former
-    full-table max-index aggregation — one row-group read instead of an
-    extra corpus-derived Spark job per call. Returns None when no
-    usable vector exists (empty relation or all-NULL/empty vectors)."""
-    head = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.size(F.col(vec_col)).alias("_d"))
-        .first()
-    )
-    if head is None or head[0] is None or head[0] <= 0:
-        return None
-    return int(head[0])
 
 
 def cosine_topk_bruteforce(
@@ -1603,8 +1589,15 @@ def pca_corpus_scatter(
     builds the n·d² deviation-product pass once and shares the pinned
     d²-row result — the `_scan_sigma` sharing precedent. The relation
     is a deterministic function of (corpus, unit), so injection is
-    result-invisible. scatter is localCheckpoint-pinned (it feeds every
-    power-method round); everything downstream of it is d²/d-sized.
+    result-invisible. scatter is localCheckpoint-pinned: its d² cells
+    are the one input of the driver-side power iteration, collected
+    once per operator call.
+
+    Positions are prefixes of each vector, so any vector of the longest
+    length covers every (i, j) cell. A NULL element counts toward its
+    position's mean divisor (``count(1)``) and adds no deviation
+    product; a cell that no vector holds two non-NULL elements for
+    sums to NULL.
     """
     dec = "decimal(38,0)"
     comp = (
@@ -1646,137 +1639,61 @@ def pca_corpus_scatter(
     return scatter, mu
 
 
-# Dimension gate for the PCA single-expression fold: the folded power
-# iteration is O(d^2) expression work per round inside ONE task over
-# the collected d^2 scatter array, which beats round-per-job latency
-# for the dims this engine targets (d=64 registry embeddings) and
-# stops being a one-row value at very high d.
-_PCA_EXPR_DIM_MAX = 256
+_PCA_SCHEMA = (
+    "component int, pos int, loading_units long, loading double, "
+    "eigenvalue_str string, var_ratio double, n_vecs long"
+)
 
 
-def _pca_power_fold(
-    scatter: DataFrame,
-    mu: DataFrame,
-    ndim: int,
-    n_components: int,
-    iters: int,
-    unit: int,
-) -> DataFrame:
-    """(internal) The ENTIRE power-iteration-with-deflation recursion
-    as higher-order expressions over the collected d² scatter — one
-    job instead of n_components × (iters + 4) checkpointed rounds
-    (the markov_removal lesson). Arithmetic is replicated step for
-    step from the relational rounds: S·v in DECIMAL(38,0), L∞
-    normalization ``(t*unit) div max|t|`` with the max==0 guard, the
-    first-nonzero sign pin (size-guarded — ANSI element_at errors on
-    empty arrays), the unguarded Rayleigh division, and Hotelling
-    deflation with the vv==0 skip — so every output bit matches
-    (equality-tested against the relational path). Caller guarantees
-    the scatter is DENSE (count == ndim²) and ndim ≤
-    _PCA_EXPR_DIM_MAX."""
-    dec = "decimal(38,0)"
-    D, U = ndim, unit
+def _tdiv(a: int, b: int) -> int:
+    """Truncating integer division, the decimal ``div`` of Spark and
+    DuckDB: the quotient rounds toward zero, unlike ``//``."""
+    q = abs(a) // abs(b)
+    return q if (a < 0) == (b < 0) else -q
 
-    def matvec(s: str, v: str) -> str:
-        return (
-            f"transform(sequence(0, {D - 1}), i -> "
-            f"aggregate(sequence(0, {D - 1}), CAST(0 AS {dec}), "
-            f"(acc, j2) -> CAST(acc + element_at({s}, i * {D} + j2 + 1) * "
-            f"CAST(element_at({v}, j2 + 1) AS {dec}) AS {dec})))"
-        )
 
-    # one-element-array aggregates act as let-bindings (the wordpiece
-    # trick): t, m, v, sgn, vp, tf, vv2, lam2 each bind once per use
-    power = (
-        f"aggregate(sequence(1, {iters}), "
-        f"transform(sequence(0, {D - 1}), z -> CAST({U} AS BIGINT)), "
-        f"(v, k2) -> "
-        f"aggregate(array({matvec('st.s', 'v')}), v, (v0, t) -> "
-        f"aggregate(array(array_max(transform(t, x -> abs(x)))), v0, "
-        f"(v1, m) -> transform(t, x -> "
-        f"CASE WHEN m = CAST(0 AS {dec}) THEN CAST(0 AS BIGINT) "
-        f"ELSE CAST((x * CAST({U} AS {dec})) div m AS BIGINT) END))))"
-    )
-    sg = (
-        "CASE WHEN size(filter(v, x -> x != 0L)) = 0 THEN CAST(1 AS BIGINT) "
-        "WHEN element_at(filter(v, x -> x != 0L), 1) < 0L "
-        "THEN CAST(-1 AS BIGINT) ELSE CAST(1 AS BIGINT) END"
-    )
-    vv = (
-        f"aggregate(transform(vp, x -> CAST(x AS {dec}) * CAST(x AS {dec})), "
-        f"CAST(0 AS {dec}), (a, b) -> CAST(a + b AS {dec}))"
-    )
-    # vv2 == 0 (zero loading vector) reproduces the relational path's
-    # degenerate contract: its empty sign relation cross-joined every
-    # downstream step away, so the component emits NO rows and the
-    # Rayleigh division never evaluates (ANSI would error on 0 div 0)
-    lam = (
-        f"CASE WHEN vv2 = CAST(0 AS {dec}) THEN CAST(0 AS {dec}) ELSE "
-        f"aggregate(zip_with(tf, vp, (tx, x) -> tx * CAST(x AS {dec})), "
-        f"CAST(0 AS {dec}), (a, b) -> CAST(a + b AS {dec})) div vv2 END"
-    )
-    deflate = (
-        f"CASE WHEN k >= {n_components} THEN s6.s "
-        f"WHEN vv2 = CAST(0 AS {dec}) THEN s6.s "
-        f"ELSE zip_with(s6.s, sequence(0, {D * D - 1}), (sv, p) -> "
-        f"CAST(sv - (lam2 * "
-        f"CAST(element_at(vp, CAST(p div {D} AS INT) + 1) AS {dec}) * "
-        f"CAST(element_at(vp, CAST(p % {D} AS INT) + 1) AS {dec})) "
-        f"div vv2 AS {dec})) END"
-    )
-    rows = (
-        f"CASE WHEN vv2 = CAST(0 AS {dec}) THEN "
-        f"slice(array(named_struct('component', CAST(0 AS INT), "
-        f"'pos', CAST(0 AS INT), 'vu', CAST(0 AS BIGINT), "
-        f"'lam', CAST(0 AS {dec}))), 1, 0) ELSE "
-        f"transform(sequence(0, {D - 1}), p -> named_struct("
-        f"'component', CAST(k - 1 AS INT), 'pos', CAST(p AS INT), "
-        f"'vu', element_at(vp, p + 1), 'lam', lam2)) END"
-    )
-    empty_rows = (
-        "slice(array(named_struct('component', CAST(0 AS INT), "
-        "'pos', CAST(0 AS INT), 'vu', CAST(0 AS BIGINT), "
-        f"'lam', CAST(0 AS {dec}))), 1, 0)"
-    )
-    merge = (
-        f"aggregate(array({power}), st, (s1, v) -> "
-        f"aggregate(array({sg}), s1, (s2, sgn) -> "
-        f"aggregate(array(transform(v, x -> x * sgn)), s2, (s3, vp) -> "
-        f"aggregate(array({matvec('s3.s', 'vp')}), s3, (s4, tf) -> "
-        f"aggregate(array({vv}), s4, (s5, vv2) -> "
-        f"aggregate(array({lam}), s5, (s6, lam2) -> "
-        f"named_struct('s', {deflate}, "
-        f"'rows', concat(s6.rows, {rows}))))))))"
-    )
-    fold = (
-        f"aggregate(sequence(1, {n_components}), "
-        f"named_struct('s', _S, 'rows', {empty_rows}), (st, k) -> {merge})"
-    )
-    trace = (
-        f"aggregate(sequence(0, {D - 1}), CAST(0 AS {dec}), "
-        f"(a, i2) -> CAST(a + element_at(_S, i2 * {D} + i2 + 1) AS {dec}))"
-    )
-    one = scatter.agg(
-        F.array_sort(F.collect_list(F.struct("i", "j", "_s"))).alias("_sij")
-    ).select(F.expr("transform(_sij, x -> x._s)").alias("_S"))
-    n1 = mu.agg(F.max("_n").cast("long").alias("n_vecs"))
-    res = one.select(F.expr(fold).alias("_st"), F.expr(trace).alias("_tr"))
-    return (
-        res.select(F.explode("_st.rows").alias("_r"), "_tr")
-        .crossJoin(F.broadcast(n1))
-        .select(
-            F.col("_r.component").alias("component"),
-            F.col("_r.pos").alias("pos"),
-            F.col("_r.vu").alias("loading_units"),
-            (F.col("_r.vu").cast("double") / F.lit(float(U))).alias("loading"),
-            F.col("_r.lam").cast("string").alias("eigenvalue_str"),
-            F.when(
-                F.col("_tr") != 0,
-                F.col("_r.lam").cast("double") / F.col("_tr").cast("double"),
-            ).alias("var_ratio"),
-            "n_vecs",
-        )
-    )
+def _pca_power(s: list[list[int]], n_components: int, iters: int, unit: int):
+    """(internal) Power iteration with Hotelling deflation over the
+    dense integer scatter ``s`` (a list of rows), in exact Python ints.
+    Yields ``(component, loadings, eigenvalue)`` for each component
+    with a nonzero loading vector.
+
+    Overflow: with L the largest row-L1 norm of |S| and U the unit,
+    every intermediate of a component is bounded by d·L·U² (S·v by
+    L·U, t·U by L·U², the Rayleigh sums by d·L·U², v·v by d·U²), and
+    the eigenvalue and each deflation term by L, since S stays
+    symmetric and v·v >= U²; loadings are BIGINT, at most U in
+    magnitude. Past DECIMAL(38,0) resp. BIGINT the fixed-point
+    contract cannot be carried by the SQL engines it is defined
+    against, so that raises ``OverflowError``.
+    """
+    d = len(s)
+    for c in range(n_components):
+        l1 = max(sum(map(abs, row)) for row in s)
+        if max(l1, unit) >= 2**63 or d * max(l1, 1) * unit * unit >= 10**38:
+            raise OverflowError(
+                f"PCA component {c}: scatter row-L1 {l1} at d={d}, "
+                f"unit={unit} exceeds DECIMAL(38,0)/BIGINT"
+            )
+        v = [unit] * d
+        for _ in range(iters):
+            t = [sum(map(mul, row, v)) for row in s]
+            m = max(map(abs, t))
+            v = [0] * d if m == 0 else [_tdiv(x * unit, m) for x in t]
+        if next((x for x in v if x), 1) < 0:
+            v = [-x for x in v]
+        vv = sum(x * x for x in v)
+        if vv == 0:
+            # a zero loading vector deflates nothing, so every later
+            # component repeats it: no rows from here on
+            return
+        lam = _tdiv(sum(sum(map(mul, row, v)) * x for row, x in zip(s, v)), vv)
+        yield c, v, lam
+        if c + 1 < n_components:
+            s = [
+                [sij - _tdiv(lam * vi * vj, vv) for sij, vj in zip(row, v)]
+                for row, vi in zip(s, v)
+            ]
 
 
 def pca_top_component(
@@ -1790,8 +1707,8 @@ def pca_top_component(
     """Top principal component of the embedding corpus by the power
     method — the first step of PCA whitening / dimensionality triage
     ("is there one dominant direction?"): :func:`pca_components` with
-    ``n_components=1``, same fixed-point contract, same single fold job
-    on dense small-d scatters.
+    ``n_components=1``, same fixed-point contract, same driver-side
+    power iteration.
 
     Output: one row per embedding position — (pos, loading_units,
     loading, eigenvalue_str, var_ratio, n_vecs); empty when no usable
@@ -1812,13 +1729,14 @@ def pca_components(
     scatter_mu: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The leading ``n_components`` principal components of the
-    embedding corpus by power iteration WITH DEFLATION, computed as pure
-    dataflow: one pass builds the d×d centered scatter matrix
-    (:func:`pca_corpus_scatter`), then fixed iterations of v ← S·v
-    normalized on the TINY d²-row table. After each component, the
-    scatter deflates ``S ← S − (λ·v_i·v_j) div (v·v)`` (exact integer
-    Hotelling deflation on the fixed-point loadings) and the next power
-    run finds the next direction.
+    embedding corpus by power iteration WITH DEFLATION: one Spark pass
+    builds the d×d centered integer scatter matrix
+    (:func:`pca_corpus_scatter`), one Arrow collect brings its d² cells
+    to the driver, and the iteration runs there in exact integers
+    (:func:`_pca_power`). After each component the scatter deflates
+    ``S ← S − (λ·v_i·v_j) div (v·v)`` (exact integer Hotelling
+    deflation on the fixed-point loadings) and the next power run finds
+    the next direction.
 
     Fixed-point contract end to end (PageRank/HITS rules):
 
@@ -1828,27 +1746,31 @@ def pca_components(
       scatter sums fit DECIMAL(38,0) even at 10^12 rows, unlike exact
       n-scaled centering whose squares overflow);
     - scatter entries are exact integer sums of deviation products;
-    - each iteration is S·v in decimal then L∞ normalization
-      ``(t*unit) div max|t|`` — trunc division matches both engines on
-      negatives (probed);
+    - the power run starts from ``v = unit`` at every position and each
+      iteration is S·v then L∞ normalization ``(t*unit) div max|t|``
+      (a zero vector when max|t| = 0) — ``div`` truncates toward zero
+      on negatives in both engines;
     - the eigenvector sign is pinned: if the lowest-indexed nonzero
       loading is negative, the vector flips (eigenvectors are
       sign-ambiguous; the pin makes the output a function of the data);
     - the eigenvalue is the integer Rayleigh quotient
       ``(v·Sv) div (v·v)`` in scatter units, transported as VARCHAR;
       var_ratio is each λ over the ORIGINAL trace (the
-      explained-variance convention), one double division; residual
-      eigenvalues shrink monotonically.
+      explained-variance convention), one double division, NULL on a
+      zero trace; residual eigenvalues shrink monotonically;
+    - a zero loading vector emits no rows and deflates nothing, so a
+      constant corpus yields an empty result.
 
-    Two paths, same bits: a dense scatter with d ≤ _PCA_EXPR_DIM_MAX
-    runs the whole recursion in one job (:func:`_pca_power_fold`);
-    larger d or a ragged scatter runs the relational rounds,
-    checkpointed per round (lineage lesson).
+    d is ``1 + max(i)`` over the scatter cells (ragged vectors keep
+    every position); a NULL cell — a position that is NULL in every
+    vector — raises ``ValueError``, and a magnitude past
+    DECIMAL(38,0)/BIGINT raises ``OverflowError``.
 
     Scale: the scatter build is the classic d² cost — one self-join on
     the row id producing n·d² deviation products (map-side combined to
     d² partial sums per partition); for d in the hundreds use a sketch
-    first. Everything after the one corpus-sized pass stays d²-sized.
+    first. Driver memory and work are d²-sized and independent of n: d
+    is fixed by the schema.
 
     Output: one row per (component, pos) — (component, pos,
     loading_units, loading, eigenvalue_str, var_ratio, n_vecs); empty
@@ -1858,141 +1780,46 @@ def pca_components(
         raise ValueError(f"n_components must be >= 1, got {n_components}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    dec = "decimal(38,0)"
     scatter, mu = scatter_mu or pca_corpus_scatter(
         embeddings, vec_col, id_col, unit
     )
+    n1 = mu.agg(F.max("_n").cast("long").alias("n_vecs"))
+    cells = scatter.crossJoin(F.broadcast(n1)).select(
+        "i", "j", "_s", "n_vecs"
+    ).toArrow()
     spark = embeddings.sparkSession
-    ndim = _embedding_dim(embeddings, vec_col)
-    empty_schema = (
-        "component int, pos int, loading_units long, loading double, "
-        "eigenvalue_str string, var_ratio double, n_vecs long"
-    )
-    if ndim is None:
-        return spark.createDataFrame([], empty_schema)
-    if ndim <= _PCA_EXPR_DIM_MAX and scatter.count() == ndim * ndim:
-        # dense small-d scatter: all components' power runs + the
-        # Hotelling deflations in one job (see _pca_power_fold)
-        return _pca_power_fold(scatter, mu, ndim, n_components, iters, unit)
-    trace0 = scatter.filter(F.col("i") == F.col("j")).agg(
-        F.sum("_s").cast(dec).alias("_tr")
-    ).localCheckpoint(eager=True)
-    n1 = mu.agg(F.max("_n").cast("long").alias("n_vecs")).localCheckpoint(
-        eager=True
-    )
-    out = None
-    for c in range(n_components):
-        v = spark.range(ndim).select(
-            F.col("id").cast("int").alias("j"),
-            F.lit(unit).cast("long").alias("_vu"),
-        ).localCheckpoint(eager=True)
-        for _ in range(iters):
-            t = (
-                scatter.join(F.broadcast(v), "j")
-                .groupBy("i")
-                .agg(
-                    F.sum(F.col("_s") * F.col("_vu").cast(dec))
-                    .cast(dec)
-                    .alias("_t")
-                )
+
+    def frame(rows: list[tuple]) -> DataFrame:
+        # a pandas frame goes through Arrow into a LocalTableScan: no
+        # Python worker and no job when the result is read
+        cols = [f.split()[0] for f in _PCA_SCHEMA.split(",")]
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols), _PCA_SCHEMA)
+
+    if cells.num_rows == 0:
+        return frame([])
+    ii, jj, ss = (cells.column(c).to_pylist() for c in ("i", "j", "_s"))
+    d = 1 + max(ii)
+    s = [[0] * d for _ in range(d)]
+    for i, j, x in zip(ii, jj, ss):
+        if x is None:
+            raise ValueError(
+                f"PCA scatter cell ({i}, {j}) is NULL: no vector holds "
+                f"non-NULL elements at both positions"
             )
-            m = t.agg(F.max(F.abs(F.col("_t"))).cast(dec).alias("_m"))
-            v = (
-                t.crossJoin(F.broadcast(m))
-                .select(
-                    F.col("i").alias("j"),
-                    F.when(F.col("_m") == 0, F.lit(0).cast("long"))
-                    .otherwise(
-                        F.expr(f"(_t * CAST({unit} AS {dec})) div _m").cast(
-                            "long"
-                        )
-                    )
-                    .alias("_vu"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        sg = (
-            v.filter(F.col("_vu") != 0)
-            .orderBy("j")
-            .limit(1)
-            .select(
-                F.signum(F.col("_vu").cast("double")).cast("long").alias("_sg")
-            )
-            .select(F.coalesce(F.col("_sg"), F.lit(1)).alias("_sg"))
+        s[i][j] = int(x)
+    n_vecs = cells.column("n_vecs")[0].as_py()
+    tr = sum(s[i][i] for i in range(d))
+    rows = [
+        (
+            c,
+            p,
+            u,
+            float(u) / float(unit),
+            str(lam),
+            float(lam) / float(tr) if tr else None,
+            n_vecs,
         )
-        vp = (
-            v.crossJoin(F.broadcast(sg))
-            .select("j", (F.col("_vu") * F.col("_sg")).cast("long").alias("_vu"))
-            .localCheckpoint(eager=True)
-        )
-        tf = (
-            scatter.join(F.broadcast(vp), "j")
-            .groupBy("i")
-            .agg(
-                F.sum(F.col("_s") * F.col("_vu").cast(dec)).cast(dec).alias("_t")
-            )
-        )
-        ray = (
-            tf.join(F.broadcast(vp.withColumnRenamed("j", "i")), "i")
-            .agg(
-                F.expr(
-                    f"sum(_t * CAST(_vu AS {dec})) div"
-                    f" sum(CAST(_vu AS {dec}) * CAST(_vu AS {dec}))"
-                )
-                .cast(dec)
-                .alias("_lam")
-            )
-            .localCheckpoint(eager=True)
-        )
-        rows = (
-            vp.crossJoin(F.broadcast(ray))
-            .crossJoin(F.broadcast(trace0))
-            .crossJoin(F.broadcast(n1))
-            .select(
-                F.lit(c).cast("int").alias("component"),
-                F.col("j").cast("int").alias("pos"),
-                F.col("_vu").alias("loading_units"),
-                (F.col("_vu").cast("double") / F.lit(float(unit))).alias(
-                    "loading"
-                ),
-                F.col("_lam").cast("string").alias("eigenvalue_str"),
-                F.when(
-                    F.col("_tr") != 0,
-                    F.col("_lam").cast("double") / F.col("_tr").cast("double"),
-                ).alias("var_ratio"),
-                "n_vecs",
-            )
-        )
-        out = rows if out is None else out.unionAll(rows)
-        if c + 1 < n_components:
-            # Hotelling deflation: S -= (lam * v_i * v_j) div (v . v)
-            vv = vp.agg(
-                F.sum(F.col("_vu").cast(dec) * F.col("_vu").cast(dec))
-                .cast(dec)
-                .alias("_vv")
-            )
-            vi = vp.select(F.col("j").alias("i"), F.col("_vu").alias("_vi"))
-            vj = vp.select("j", F.col("_vu").alias("_vj"))
-            scatter = (
-                scatter.join(F.broadcast(vi), "i")
-                .join(F.broadcast(vj), "j")
-                .crossJoin(F.broadcast(ray))
-                .crossJoin(F.broadcast(vv))
-                .select(
-                    "i",
-                    "j",
-                    F.when(
-                        F.col("_vv") == 0, F.col("_s")
-                    )
-                    .otherwise(
-                        F.col("_s")
-                        - F.expr(
-                            f"(_lam * CAST(_vi AS {dec})"
-                            f" * CAST(_vj AS {dec})) div _vv"
-                        ).cast(dec)
-                    )
-                    .alias("_s"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    return out
+        for c, v, lam in _pca_power(s, n_components, iters, unit)
+        for p, u in enumerate(v)
+    ]
+    return frame(rows)

@@ -15,6 +15,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 # Tiny multilingual stopword lists for the language-ID heuristic.
 # Deterministic and oracle-replicable; NOT a real language detector.
@@ -2707,15 +2708,6 @@ def heaps_law_fit(
     )
 
 
-# Vocabulary-size gate for wordpiece_greedy_encode's single-expression
-# path: each greedy step probes candidates with array_contains — an
-# O(|vocab|) scan per candidate substring — so folding the recursion
-# into one job only beats the round-per-job dataflow while the vocab is
-# small (BPE-learned vocabs here are base-chars + merges ≈ dozens); a
-# BERT-scale 30k vocab stays on the broadcast-join loop below.
-_WORDPIECE_EXPR_VOCAB_MAX = 1024
-
-
 def wordpiece_greedy_encode(
     words: DataFrame,
     vocab: DataFrame,
@@ -2737,170 +2729,86 @@ def wordpiece_greedy_encode(
     — the classic greedy-vs-merge-order distinction tokenizer papers
     measure.
 
-    Dataflow: the loop state is one row per distinct word (vocabulary-
-    sized — the corpus never enters); each round explodes at most
-    ``max_piece_len`` candidate substrings per LIVE word, equi-joins
-    them against the broadcast piece vocabulary, and advances by the
-    longest hit (``max(len)`` aggregate — the match at a fixed
-    (word, pos, len) is unique, so no tie order is even needed). Every
-    round consumes >= 1 character, so ``min(max_word_len, longest
-    target)`` rounds suffice; the one driver-side action (that longest
-    length, one MAX) bounds the round count — the pagerank node-count
-    structure. State is localCheckpoint-pinned per round.
+    Plan: the distinct vocabulary is collected once into a driver-side
+    set (it is broadcast-sized: the encoder holds it whole); a piece
+    longer than ``max_piece_len`` would be silently unreachable, so it
+    raises instead. One ``mapInArrow`` over the words then runs the
+    greedy match per target, at most ``min(max_piece_len, longest
+    piece)`` set probes per position, on exact code-point strings (the
+    code points Spark's ``length``/``substring`` count). Arrow batches
+    pass ``word`` and ``cnt`` through untouched, whatever their types.
+    The kernel emits the space-joined pieces and a nullable UNK flag;
+    the JVM select below turns them into the output columns. Per-task
+    memory is the vocabulary plus one batch; the corpus never enters
+    (the words are one row each, duplicates kept).
 
     Cross-engine: pure substring equality on exact strings and integer
     positions — no regex, no floats; the oracle is the identical greedy
     recursion as a recursive CTE with a LATERAL longest-match probe.
+    NULL pieces match nothing.
 
     Output: one row per word — (word, cnt, wp_seq, n_pieces, is_unk);
     ``wp_seq`` space-joins the pieces, UNK words report ``n_pieces=1``.
+    An empty target gives ``('', 1, 0)``; a NULL target gives
+    ``('', 1, NULL)``.
     """
     if max_piece_len < 1 or max_word_len < 1:
         raise ValueError("max_piece_len and max_word_len must be >= 1")
-    pieces = vocab.select(F.col(piece_col).alias("_sub")).distinct()
-    v = F.broadcast(pieces)
-    state = words.select(
-        F.col(word_col).alias("word"),
-        F.col(cnt_col).alias("cnt"),
-        F.col(target_col).alias("_tg"),
-        F.lit(0).cast("int").alias("_pos"),
-        F.lit("").alias("_seq"),
-        (F.length(F.col(target_col)) > max_word_len).alias("_unk"),
-    ).localCheckpoint(eager=True)
-    # one driver-side probe bounds the round count AND guards the
-    # candidate-length cap (a piece longer than max_piece_len would be
-    # silently unreachable — loud contract instead); it also sizes the
-    # vocabulary for the small-vocab expression path below
-    probe = (
-        state.agg(F.max(F.length("_tg")).alias("_a"))
-        .crossJoin(
-            pieces.agg(
-                F.max(F.length("_sub")).alias("_b"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-        )
-        .collect()[0]
-    )
-    longest, piece_max = int(probe["_a"] or 0), int(probe["_b"] or 0)
-    n_pieces_vocab = int(probe["_n"] or 0)
+    pieces = vocab.select(F.col(piece_col).alias("_p")).distinct().toArrow()
+    known = frozenset(p for p in pieces.column("_p").to_pylist() if p)
+    piece_max = max(map(len, known), default=0)
     if piece_max > max_piece_len:
         raise ValueError(
             f"vocab has a {piece_max}-char piece, beyond max_piece_len="
             f"{max_piece_len} — raise the cap so greedy can reach it"
         )
-    max_piece_len = max(1, min(max_piece_len, piece_max))
-    rounds = min(max_word_len, longest)
-    if n_pieces_vocab <= _WORDPIECE_EXPR_VOCAB_MAX:
-        # Small-vocab fast path: the whole greedy recursion folds into
-        # ONE higher-order expression per word (the markov-removal
-        # lesson — vocabulary-sized state never needed a cluster job
-        # per consumed character). The vocab rides along as one
-        # broadcast array; each step finds the longest matching piece
-        # with an array_contains probe — O(|vocab|) per candidate, so
-        # this path is gated to small vocabularies where the scan is
-        # cheaper than a round's fixed job cost; the per-round
-        # broadcast-join dataflow below stays the large-vocab path.
-        # The recursion, its tie-free longest pick, and every
-        # unk/exhaustion rule are IDENTICAL (property-tested against
-        # the loop path on random words/vocabs).
-        pv = F.broadcast(pieces.agg(F.collect_list("_sub").alias("_pv")))
-        bl_expr = (
-            "array_max(filter(transform("
-            f"sequence(1, least({max_piece_len}, length(_tg) - st.pos)), "
-            "l -> CASE WHEN array_contains(_pv, "
-            "substring(_tg, st.pos + 1, l)) THEN l END), "
-            "x -> x IS NOT NULL))"
-        )
-        step = (
-            "CASE WHEN st.pos < length(_tg) "
-            "AND NOT coalesce(st.unk, FALSE) THEN "
-            f"aggregate(array({bl_expr}), st, (s2, bl) -> "
-            "CASE WHEN bl IS NULL THEN "
-            "named_struct('pos', s2.pos, 'seq', s2.seq, "
-            "'unk', CAST(TRUE AS BOOLEAN)) "
-            "ELSE named_struct('pos', CAST(s2.pos + bl AS INT), "
-            "'seq', CASE WHEN s2.seq = '' THEN "
-            "substring(_tg, s2.pos + 1, bl) "
-            "ELSE concat(s2.seq, ' ', substring(_tg, s2.pos + 1, bl)) "
-            "END, 'unk', CAST(FALSE AS BOOLEAN)) END) "
-            "ELSE st END"
-        )
-        fold = (
-            f"aggregate(sequence(1, {rounds if rounds > 0 else 1}), "
-            "named_struct('pos', CAST(0 AS INT), 'seq', '', "
-            f"'unk', length(_tg) > {max_word_len}), "
-            f"(st, k) -> {step})"
-        )
-        done = state.crossJoin(pv).select(
-            "word",
-            "cnt",
-            F.expr(f"{fold}.seq").alias("_seq"),
-            F.expr(f"{fold}.unk").alias("_unk"),
-        )
-        return done.select(
-            "word",
-            F.col("cnt").cast("long").alias("cnt"),
-            F.when(F.col("_unk"), F.lit(unk_token))
-            .otherwise(F.col("_seq"))
-            .alias("wp_seq"),
-            F.when(F.col("_unk"), F.lit(1))
-            .otherwise(F.size(F.split("_seq", " ")))
-            .cast("long")
-            .alias("n_pieces"),
-            F.col("_unk").cast("long").alias("is_unk"),
-        )
-    for _ in range(rounds):
-        live = F.col("_pos") < F.length("_tg")
-        cands = (
-            state.filter(~F.col("_unk") & live)
-            .select(
-                "word",
-                "_tg",
-                "_pos",
-                F.explode(
-                    F.sequence(
-                        F.lit(1),
-                        F.least(
-                            F.lit(max_piece_len),
-                            F.length("_tg") - F.col("_pos"),
-                        ),
-                    )
-                ).alias("_l"),
+    cap = max(1, piece_max)
+    state = words.select(
+        F.col(word_col).alias("word"),
+        F.col(cnt_col).alias("cnt"),
+        F.col(target_col).alias("_tg"),
+    )
+
+    def encode(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            seqs, unks = [], []
+            for tg in batch.column("_tg").to_pylist():
+                out, pos = [], 0
+                unk = None if tg is None else len(tg) > max_word_len
+                while unk is False and pos < len(tg):
+                    for ln in range(min(cap, len(tg) - pos), 0, -1):
+                        if tg[pos : pos + ln] in known:
+                            out.append(tg[pos : pos + ln])
+                            pos += ln
+                            break
+                    else:
+                        unk = True
+                seqs.append(" ".join(out))
+                unks.append(unk)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("word"),
+                    batch.column("cnt"),
+                    pa.array(seqs, pa.string()),
+                    pa.array(unks, pa.bool_()),
+                ],
+                names=["word", "cnt", "_seq", "_unk"],
             )
-            .withColumn("_sub", F.expr("substring(_tg, _pos + 1, _l)"))
-        )
-        best = (
-            cands.join(v, "_sub")
-            .groupBy("word")
-            .agg(F.max("_l").alias("_bl"))
-        )
-        was_live = ~F.col("_unk") & live
-        hit = was_live & F.col("_bl").isNotNull()
-        miss = was_live & F.col("_bl").isNull()
-        piece = F.expr("substring(_tg, _pos + 1, _bl)")
-        state = (
-            state.join(best, "word", "left")
-            .select(
-                "word",
-                "cnt",
-                "_tg",
-                F.when(hit, F.col("_pos") + F.col("_bl"))
-                .otherwise(F.col("_pos"))
-                .cast("int")
-                .alias("_pos"),
-                F.when(
-                    hit,
-                    F.when(F.col("_seq") == "", piece).otherwise(
-                        F.concat(F.col("_seq"), F.lit(" "), piece)
-                    ),
-                )
-                .otherwise(F.col("_seq"))
-                .alias("_seq"),
-                (F.col("_unk") | miss).alias("_unk"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return state.select(
+
+    done = state.mapInArrow(
+        encode,
+        StructType(
+            [
+                state.schema["word"],
+                state.schema["cnt"],
+                StructField("_seq", StringType()),
+                StructField("_unk", BooleanType()),
+            ]
+        ),
+    )
+    return done.select(
         "word",
         F.col("cnt").cast("long").alias("cnt"),
         F.when(F.col("_unk"), F.lit(unk_token)).otherwise(F.col("_seq")).alias(

@@ -11601,8 +11601,9 @@ def _pca_scatter(spark: SparkSession, sf_dir: str):
     "between components) — pca_top_component generalized to a "
     "spectrum. Same quantize/trunc-div/sign-pin/Rayleigh contracts; "
     "var_ratio is each eigenvalue over the ORIGINAL trace (the "
-    "explained-variance convention). Deflation is a d^2-table "
-    "projection per component; one corpus pass total",
+    "explained-variance convention). The d^2 scatter is collected "
+    "once; iteration and deflation run on the driver in exact "
+    "integers; one corpus pass total",
 )
 def q_pca_two(spark, sf_dir):
     return similarity.pca_components(
@@ -11622,7 +11623,8 @@ def q_pca_two(spark, sf_dir):
     "centering keeps deviation products inside DECIMAL(38,0) at any "
     "row count; exact n-scaled centering would overflow), then 6 "
     "fixed-point iterations of S.v with L-inf normalization "
-    "(t*unit) div max|t| on the d^2-row table — trunc division "
+    "(t*unit) div max|t| in exact driver-side integers over the "
+    "collected d^2 scatter — trunc division "
     "matching both engines on negatives. The sign pin (flip if the "
     "lowest-indexed nonzero loading is negative) makes the "
     "sign-ambiguous eigenvector a function of the data; the "
@@ -15071,13 +15073,13 @@ _WORDPIECE_TAIL = """, vocab AS MATERIALIZED (
     "every corpus word against the 12-merge BPE-learned symbol "
     "vocabulary — generally a DIFFERENT segmentation than replaying "
     "the merge table in learning order (bpe_encode_vocab), the classic "
-    "greedy-vs-merge-order comparison tokenizer papers measure. Loop "
-    "state is one row per DISTINCT word (the corpus appears only in "
-    "the word count); each round explodes <= max-piece-length "
-    "candidate substrings per live word and equi-joins the broadcast "
-    "vocabulary (the (word,pos,len) match is UNIQUE — no tie order "
-    "needed); one driver-side probe bounds rounds and guards the "
-    "candidate cap. Oracle: the identical greedy recursion as a "
+    "greedy-vs-merge-order comparison tokenizer papers measure. The "
+    "input is one row per DISTINCT word (the corpus appears only in "
+    "the word count); the distinct vocabulary is collected once (which "
+    "also guards the piece-length cap) and one Arrow kernel runs the "
+    "greedy match per word, at most longest-piece set probes per "
+    "position on exact code-point strings. Oracle: the identical "
+    "greedy recursion as a "
     "recursive CTE with a LATERAL longest-match probe over the SAME "
     "unrolled BPE vocabulary. Pure substring equality and integers — "
     "no regex, no floats",
@@ -16627,6 +16629,17 @@ _ROTATION_TAIL.update({
     "doc_winnow_fingerprint_verified": "r14-local",
     "containment_near_dup": "r14-local",
     "containment_quotes_trigram": "r14-local",
+})
+
+# PCA and WordPiece run one exact path each: the PCA pair's power
+# iteration with deflation runs on the driver in exact integers over the
+# collected scatter, and WordPiece is one Arrow greedy kernel; both
+# folds, both relational round loops and both size gates were deleted.
+# Result-identical on the registry inputs at all three SFs.
+_ROTATION_TAIL.update({
+    "pca_top_component_embeddings": "r14-local",
+    "pca_two_components_embeddings": "r14-local",
+    "wordpiece_encode_bpe_vocab": "r14-local",
 })
 
 # Rows-only entries (`err = no_oracle`) whose last driver row is stale

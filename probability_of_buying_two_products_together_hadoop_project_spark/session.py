@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the configs
-below are chosen so the same code scales to a real cluster:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (single JVM; the host's
+``os.cpu_count()`` when unset); the configs below are chosen so the same
+code scales to a real cluster:
 
 - AQE on (coalesce + skew-join): runtime re-planning replaces the
   reference's static hand-tuned reducer counts
@@ -10,6 +11,9 @@ below are chosen so the same code scales to a real cluster:
   real cluster AQE coalescing makes the initial number mostly a ceiling.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for any Pandas-UDF path (the slow path; rarely used).
+- The Python workers get this package's parent directory on their
+  ``PYTHONPATH``, so an Arrow kernel (``applyInPandas``/``mapInArrow``)
+  also runs from a driver script outside the repo.
 """
 
 from __future__ import annotations
@@ -19,14 +23,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def local_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, or the host's CPU count when unset."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+
+
 def get_spark(
     app_name: str = "crystalball-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -44,6 +56,7 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -230,6 +230,8 @@ _DEGENERATE_DOCS = [
     (6, "", "web"),
     (7, "alpha beta", "web"),  # shorter than a trigram
     (8, "alpha beta gamma delta", "solo"),  # the only doc of its block
+    (9, " ", "blank"),  # a block whose texts all give no gram
+    (10, None, "blank"),
 ]
 
 

@@ -211,53 +211,51 @@ def test_pca_two_components_orthogonal_and_ordered(spark):
         similarity.pca_components(df, n_components=0)
 
 
-def test_pca_fold_equals_relational_rounds(spark, monkeypatch):
-    """The single-job expression fold must match the round-per-job
-    relational path bit for bit: loadings, eigenvalue strings,
-    ratios, across two deflated components on a random corpus."""
+@pytest.mark.parametrize("dim,n", [(3, 80), (300, 24)], ids=["d3", "d300"])
+def test_pca_components_match_integer_mirror(spark, dim, n):
+    """Two deflated components equal the integer mirror bit for bit:
+    loadings, eigenvalue strings, ratios; d=300 is past any small-d
+    special case."""
+    import numpy as np
+
     rng = random.Random(7)
     vecs = [
-        [rng.gauss(0, 3) + (1.5 if i % 2 else -1.5), rng.gauss(0, 1), rng.gauss(0, 0.3)]
-        for i in range(80)
+        [
+            float(np.float32(
+                rng.gauss(0, (3.0, 1.0, 0.3)[k % 3])
+                + (0.0 if k else 1.5 if i % 2 else -1.5)
+            ))
+            for k in range(dim)
+        ]
+        for i in range(n)
     ]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id bigint, embedding array<float>",
-    )
+    df = _vec_df(spark, vecs)
+    top = similarity.pca_top_component(df, iters=5)
+    one = similarity.pca_components(df, n_components=1, iters=5)
+    assert top.columns == one.drop("component").columns
+    # the top component IS pca_components(n=1) without `component`
+    assert _rows(top) == [r[1:] for r in _rows(one)]
+    want = _py_pca_rows(vecs, n_components=2, iters=5)
+    assert len(want) == 2 * dim
+    assert _rows(similarity.pca_components(df, n_components=2, iters=5)) == want
 
-    def rowset(out):
-        return sorted(
-            (
-                r.component,
-                r.pos,
-                r.loading_units,
-                r.loading,
-                r.eigenvalue_str,
-                r.var_ratio,
-                r.n_vecs,
-            )
-            for r in out.collect()
-        )
 
-    def top_rows(out):
-        return sorted(
-            (r.pos, r.loading_units, r.loading, r.eigenvalue_str,
-             r.var_ratio, r.n_vecs)
-            for r in out.collect()
-        )
+def test_pca_position_null_in_every_vector_raises(spark):
+    df = _vec_df(spark, [[1.0, None, 2.0], [2.0, None, 0.5], [0.0, None, 1.0]])
+    with pytest.raises(ValueError, match=r"cell \(\d+, \d+\) is NULL"):
+        similarity.pca_components(df, n_components=2, iters=3)
 
-    def snap():
-        top = similarity.pca_top_component(df, iters=5)
-        one = similarity.pca_components(df, n_components=1, iters=5)
-        assert top.columns == one.drop("component").columns
-        # the top component IS pca_components(n=1) without `component`
-        assert top_rows(top) == top_rows(one)
-        return rowset(similarity.pca_components(df, n_components=2, iters=5))
 
-    fast = snap()
-    monkeypatch.setattr(similarity, "_PCA_EXPR_DIM_MAX", 0)
-    slow = snap()
-    assert fast == slow
+def test_pca_overflow_is_declared():
+    # an eigenvalue past BIGINT, then fixed-point products past
+    # DECIMAL(38,0)
+    for s, unit in (([[10**20, 0], [0, 1]], 10**6), ([[10**18, 0], [0, 1]], 10**10)):
+        with pytest.raises(OverflowError):
+            list(similarity._pca_power(s, 1, 3, unit))
+    # a rank-one scatter deflates to zero: the second component is empty
+    assert list(similarity._pca_power([[4, 0], [0, 0]], 2, 3, 10**6)) == [
+        (0, [10**6, 0], 4)
+    ]
 
 
 @pytest.mark.parametrize("rows", [[], [(1, None), (2, [])]])
@@ -280,23 +278,12 @@ def test_pca_top_component_no_usable_vector(spark, rows):
     assert out.collect() == []
 
 
-_FIRST_SHORTER = [
-    [1.0, 2.0, 0.5], [2.0, -1.0, 0.25, 3.0], [0.5, 0.5, -2.0, 1.0],
-    [-1.5, 1.0, 1.0, -0.5], [3.0, 0.0, 0.75, 2.0],
-]
-
-
-def test_pca_ragged_first_row_shorter_keeps_every_position(spark):
-    df = _vec_df(spark, _FIRST_SHORTER)
-    rows = _rows(similarity.pca_components(df, n_components=2, iters=4))
-    assert sorted({(r[0], r[1]) for r in rows}) == [
-        (c, p) for c in range(2) for p in range(4)
-    ]
-
-
 @pytest.mark.parametrize(
     "vecs",
     [
+        # the first row is shorter than the rest
+        [[1.0, 2.0, 0.5], [2.0, -1.0, 0.25, 3.0], [0.5, 0.5, -2.0, 1.0],
+         [-1.5, 1.0, 1.0, -0.5], [3.0, 0.0, 0.75, 2.0]],
         # the first row is longer than the rest
         [[1.0, 2.0, 0.5, 4.0], [2.0, -1.0, 0.25], [0.5, 0.5, -2.0],
          [-1.5, 1.0, 1.0], [3.0, 0.0, 0.75]],
@@ -305,7 +292,7 @@ def test_pca_ragged_first_row_shorter_keeps_every_position(spark):
         [[1.0, 2.0, 0.5, 4.0], [2.0, None, 0.25, 3.0], [0.5, 0.5, -2.0, 1.0],
          [-1.5, 1.0, 1.0, -0.5], [3.0, 0.0, 0.75, 2.0]],
     ],
-    ids=["first_longer", "one_null_element"],
+    ids=["first_shorter", "first_longer", "one_null_element"],
 )
 def test_pca_ragged_and_null_element_match_mirror(spark, vecs):
     df = _vec_df(spark, vecs)

@@ -73,31 +73,26 @@ def test_wordpiece_piece_length_guard(spark):
         _run(spark, [("hi", 1)], {"h", "i", "longpieceover"}, max_piece_len=4)
 
 
-def test_wordpiece_expr_path_equals_loop_path(spark, monkeypatch):
-    """The small-vocab single-expression path and the round-per-job
-    loop path must be row-identical — randomized words over a vocab
-    with prefix overlaps, multi-char pieces, UNK and exhaustion
-    cases."""
+@pytest.mark.parametrize("large", [False, True], ids=["small_vocab", "vocab_1500"])
+def test_wordpiece_matches_mirror_random_words(spark, large):
+    """Randomized words over a vocab with prefix overlaps, multi-char
+    pieces, UNK and exhaustion cases equal the pure-Python mirror; the
+    large case pads the vocabulary past 1024 pieces with strings no
+    word contains."""
     import random
 
     rng = random.Random(12)
     vocab = {"a", "b", "c", "ab", "bc", "abc", "cab", "x"}
+    if large:
+        vocab |= {f"q{i:04d}" for i in range(1500)}
     words = []
     for i in range(40):
         w = "".join(rng.choice("abcxz") for _ in range(rng.randint(1, 10)))
         words.append((f"{w}#{i}", 1, w))
-    wdf = spark.createDataFrame(words, "word string, cnt long, target string")
-    vdf = spark.createDataFrame([(p,) for p in vocab], "piece string")
-    fast = {
-        r.word: (r.wp_seq, r.n_pieces, r.is_unk)
-        for r in text.wordpiece_greedy_encode(wdf, vdf).collect()
-    }
-    monkeypatch.setattr(text, "_WORDPIECE_EXPR_VOCAB_MAX", 0)
-    slow = {
-        r.word: (r.wp_seq, r.n_pieces, r.is_unk)
-        for r in text.wordpiece_greedy_encode(wdf, vdf).collect()
-    }
-    assert fast == slow
+    got = _encode_rows(spark, words, sorted(vocab))
+    assert got == sorted(
+        ((w, c, *_mirror_row(t, vocab)) for w, c, t in words), key=repr
+    )
 
 
 def _encode_rows(spark, words, vocab, **kw):
