@@ -40,7 +40,6 @@ dangling-mass redistribution term.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
@@ -71,25 +70,73 @@ def symmetric_edges(
     return canon.select(F.explode(both).alias("_e")).select("_e.src", "_e.dst")
 
 
+_CODE_MAX = (1 << 31) - 1
+
+
+def node_codes(ids: DataFrame) -> DataFrame:
+    """The graph family's one node encoding: a dense, order-preserving
+    dictionary over the distinct non-NULL ids in the first column of
+    ``ids``, compared as strings. A node's ``code`` (INT) is its 0-based
+    rank in string order, so code order IS id order — min-label
+    communities, the BFS minimum-id seed, canonical ``lo < hi`` edges and
+    the wedge tie-breaks come out the same on codes as on the strings,
+    while the rounds shuffle 4-byte keys. Any string works as an id
+    (leading zeros, any length, non-numeric, non-ASCII).
+
+    The rank is :func:`relational.global_prefix_sum` over the distinct
+    ids (bucketed by a two-character prefix), so no window runs on a
+    single partition. More than 2^31 - 1 distinct ids raise.
+
+    Output: (node STRING, code INT), one row per distinct id.
+    """
+    from .relational import global_prefix_sum
+
+    node = F.col(ids.columns[0]).cast("string").alias("node")
+    ranked = global_prefix_sum(
+        ids.select(node).dropna().distinct().withColumn("_one", F.lit(1)),
+        "node",
+        "_one",
+        out_col="_rank",
+    )
+    code = F.when(F.col("_rank") <= _CODE_MAX, (F.col("_rank") - 1).cast("int"))
+    too_many = F.raise_error(F.lit(f"node_codes: more than {_CODE_MAX} ids"))
+    return ranked.select("node", code.otherwise(too_many).alias("code"))
+
+
+def _recode(df: DataFrame, codes: DataFrame, cols, key: str, val: str, how: str):
+    # the dictionary is node-sized (the broadcast_ranks rule), so each
+    # column is one broadcast hash join and the edge side never shuffles
+    d = F.broadcast(codes.select(F.col(key).alias("_rk"), F.col(val).alias("_rv")))
+    for c in cols:
+        df = df.join(d, F.col(c) == F.col("_rk"), how)
+        df = df.withColumn(c, F.col("_rv")).drop("_rk", "_rv")
+    return df
+
+
+def encode_nodes(df: DataFrame, codes: DataFrame, *cols: str) -> DataFrame:
+    """Replace each id column in ``cols`` by its :func:`node_codes` code;
+    a row whose id is NULL or absent from ``codes`` drops."""
+    return _recode(df, codes, cols, "node", "code", "inner")
+
+
+def decode_nodes(df: DataFrame, codes: DataFrame, *cols: str) -> DataFrame:
+    """Replace each code column in ``cols`` by its id; a NULL code stays
+    NULL (left joins)."""
+    return _recode(df, codes, cols, "code", "node", "left")
+
+
 UNITS = 10**12  # fixed-point scale: ranks in 1e-12 units
 
 # How many min-label rounds chain inside one checkpointed job in
 # scan_clusters: the self-loop round form consumes its state exactly
 # once, so chaining changes NO results and recomputes NO subtrees —
-# only the job-launch/checkpoint latency per round. 1 = the original
-# round-per-job form. Measured at sf0.1 (8 rounds, 598k eps-edges):
-# walls are host-noise-flat but the timed shuffle drops monotonically
-# with chaining (175 / 132 / 111 MB at cadence 1 / 4 / 8 — AQE sees
-# the label side's runtime size inside a chained job and broadcasts
-# it, so the edge table stops re-shuffling every round). Env-
-# overridable for A/B without code edits; result-invariant by
-# construction.
-try:
-    _LABEL_CKPT_EVERY = max(
-        1, int(os.environ.get("SPARK_GRAFT_LABEL_CKPT", "8"))
-    )
-except ValueError:  # malformed env (A/B typo) must not break import
-    _LABEL_CKPT_EVERY = 8
+# only the job-launch/checkpoint latency per round. Measured at sf0.1
+# (8 rounds, 598k eps-edges): walls are host-noise-flat but the timed
+# shuffle drops monotonically with chaining (175 / 132 / 111 MB at
+# cadence 1 / 4 / 8 — AQE sees the label side's runtime size inside a
+# chained job and broadcasts it, so the edge table stops re-shuffling
+# every round).
+_LABEL_CKPT_EVERY = 8
 
 # State-count gate for markov_stationary's single-expression fold: the
 # folded power iteration is O(states x edges) expression work per
@@ -193,7 +240,7 @@ def _rank_rounds(
         # identical integers, the division just moves above the join
         per_src = (
             ranks.withColumnRenamed("node", "src")
-            .join(deg, "src")
+            .join(maybe_bcast(deg), "src")
             .select("src", F.expr("rank_units div _deg").alias("_c"))
         )
         contribs = (
@@ -203,7 +250,7 @@ def _rank_rounds(
             .agg(F.sum("_c").alias("_s"))
         )
         ranks = (
-            nodes.join(contribs, "node", "left")
+            nodes.join(maybe_bcast(contribs), "node", "left")
             .select(
                 "node",
                 (
@@ -406,8 +453,14 @@ def triangle_stats(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    d_lo = deg.select(F.col("node").alias("lo"), F.col("deg").alias("_dlo"))
-    d_hi = deg.select(F.col("node").alias("hi"), F.col("deg").alias("_dhi"))
+    # the degree table is node-sized: broadcast it (the broadcast_ranks
+    # rule) so the orientation join never shuffles the edges
+    d_lo = F.broadcast(
+        deg.select(F.col("node").alias("lo"), F.col("deg").alias("_dlo"))
+    )
+    d_hi = F.broadcast(
+        deg.select(F.col("node").alias("hi"), F.col("deg").alias("_dhi"))
+    )
     lo_first = F.col("_dlo") <= F.col("_dhi")  # lo < hi already: ties keep lo
     e = (
         canon.join(d_lo, "lo")
@@ -417,7 +470,14 @@ def triangle_stats(
             F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
             F.when(lo_first, F.col("_dhi")).otherwise(F.col("_dlo")).alias("ddeg"),
         )
+        # the wedge self-join and the closure check read it from three
+        # branches; persisted (the truss survivor rule), it is built once
+        # and those joins plan on its REAL size — broadcast while small,
+        # shuffled at scale — not on its input's estimate, which for a
+        # pin built through joins says nothing
+        .persist()
     )
+    e.count()
     ea = e.select(
         F.col("src"), F.col("dst").alias("x"), F.col("ddeg").alias("dx")
     )
@@ -1121,6 +1181,10 @@ def scan_edge_similarity(
     reuse it instead of re-running the wedge join; sigma itself is
     bit-identical either way (its support aggregate runs over the same
     triangle rows).
+
+    ``lo < hi`` and the (degree, id) tie-break use the ids' own order:
+    over :func:`node_codes` codes that is the id strings' order, so the
+    decoded rows equal a build on the strings.
     """
     a, b = F.col(a_col), F.col(b_col)
     # canon feeds FOUR branches (deg, the oriented edge table, the final
@@ -1266,7 +1330,7 @@ def _edge_support(canon: DataFrame, tri: DataFrame | None = None) -> DataFrame:
 
 
 def scan_clusters(
-    pairs: DataFrame,
+    pairs: DataFrame | None,
     a_col: str = "item",
     b_col: str = "neighbor",
     eps_rank_num: int = 3,
@@ -1308,8 +1372,9 @@ def scan_clusters(
     ``sim`` (optional): a precomputed :func:`scan_edge_similarity`
     relation over the SAME pair evidence, already pinned by the caller
     — lets a pipeline that also reads the sigma table build it once
-    and share it (the registry's scan_* pair does exactly this); when
-    omitted, sigma is built here and localCheckpoint-pinned.
+    and share it (the registry's scan_* pair does exactly this) —
+    ``pairs`` is then ignored; when omitted, sigma is built here and
+    localCheckpoint-pinned.
 
     Scale: sigma build is the oriented-wedge cost (see
     scan_edge_similarity); everything after runs on the edge table —
@@ -1387,9 +1452,8 @@ def scan_clusters(
     # the least(own, min-neighbor) form, but with labels consumed once
     # per round the rounds CHAIN inside one job without subtree
     # recomputation (Catalyst dedupes no common subplans), so the
-    # checkpoint cadence is a latency knob, not a correctness one.
-    # _LABEL_CKPT_EVERY=1 restores the round-per-job form; the measured
-    # optimum at sf0.1 collapses 4 rounds per checkpointed job.
+    # checkpoint cadence (_LABEL_CKPT_EVERY) is a latency choice, not a
+    # correctness one.
     # The pin is REPARTITIONED BY NODE first (VERDICT r12 item 3): a
     # localCheckpoint preserves physical partitioning, the per-round
     # broadcast label join preserves the streamed side's partitioning,
@@ -1477,7 +1541,7 @@ def scan_clusters(
 
 
 def truss_peel(
-    pairs: DataFrame,
+    pairs: DataFrame | None,
     rounds: int = 3,
     t_rank_num: int = 3,
     t_rank_den: int = 4,
@@ -1503,38 +1567,26 @@ def truss_peel(
     replays identical rounds, and every count hash-pins. Converged
     rounds show dropped = 0.
 
-    Dataflow per round: one degree-oriented wedge support computation
-    on the CURRENT (monotonically shrinking) edge set — the
-    triangle_stats cost shape, localCheckpoint-pinned per round — then
-    a broadcast-threshold filter. The first round dominates; a P75 cut
-    removes ~75% of edges before round 2. The threshold pick is the
-    bucketed order-statistics backbone (grouped_value_cum +
-    grouped_discrete_quantile), never a single-partition sort.
+    One round loop: a subgraph's triangles are exactly the original
+    triangles whose three edges all survive, so each round after the
+    first is three semi-joins of the closed-triangle list against the
+    shrinking survivor set plus one explode + aggregate — the wedge join
+    runs once. Edges are single-long keys ``lo * 2^32 + hi`` (half the
+    shuffle bytes of a (lo, hi) pair); the output is counts, so only
+    edge identity is joined on. The threshold pick is the bucketed
+    order-statistics backbone, never a single-partition sort.
 
-    ``sup0``, when given, is the round-1 support relation
-    (lo, hi, sup) ALREADY computed for the same canonical edge set —
-    e.g. ``scan_edge_similarity``'s output with
-    ``sup = common_closed - 2`` — letting a caller that has the shared
-    pinned sigma relation (the registry's `_scan_sigma` cache) skip the
-    dominant round-1 wedge join entirely; ``pairs`` is then ignored.
-    ``tri0`` (requires ``sup0``) is the matching closed-triangle list
-    (:func:`edge_triangles` /
-    ``scan_edge_similarity(return_triangles=True)``): with it, rounds
-    >= 2 skip the wedge join TOO — a subgraph's triangles are exactly
-    the original triangles whose three edges all survive, so each round
-    is three semi-joins against the (monotonically shrinking) survivor
-    set plus one explode + aggregate. Without ``tri0``, rounds >= 2
-    recompute the wedge join on the surviving (~25% post-P75) edges.
-    On the ``tri0`` path with integral node ids in [0, 2^31), the
-    (lo, hi) pairs additionally pack into single-long edge keys for
-    the round loop (guide §2.3 — half the triangle-list shuffle
-    bytes); the pair loop is kept verbatim for any other id domain. A
-    ``tri0`` id outside [0, 2^31) on the packed path raises when the
-    triangle list is first read (round 2) instead of aliasing edges.
-    Output is hash-identical along every path: round-1 support on the
-    same edges IS the sigma support, filtered-triangle counts equal
-    recomputed subgraph counts by definition, and packing is a
-    bijection on the edge set feeding count-only outputs.
+    ``sup0`` and ``tri0`` come together: the round-1 support relation
+    (lo, hi, sup) and the matching closed-triangle list
+    (:func:`edge_triangles` / ``scan_edge_similarity(return_triangles=
+    True)``) of ONE canonical edge set with integer node ids — e.g. the
+    registry's pinned sigma relation (``sup = common_closed - 2``) over
+    :func:`node_codes` ids. ``pairs`` is then ignored. A non-integer id
+    column raises ``TypeError`` here, and an id outside [0, 2^31) raises
+    in the first job that packs it instead of aliasing another edge.
+    Without them, ``pairs`` (``a_col``, ``b_col``, any id type) is
+    encoded through :func:`node_codes` and both are built here by
+    :func:`scan_edge_similarity`.
 
     Output: one row per round — (round, n_edges_before, n_survivors,
     support_threshold).
@@ -1547,23 +1599,44 @@ def truss_peel(
         raise ValueError(
             f"need 1 <= t_rank_num < t_rank_den, got {t_rank_num}/{t_rank_den}"
         )
-    if tri0 is not None and sup0 is None:
-        raise ValueError("tri0 requires sup0 (same precomputed edge set)")
-    if sup0 is not None:
-        sup = sup0.select(
-            "lo", "hi", F.col("sup").cast("long").alias("sup")
-        ).localCheckpoint(eager=True)
-    else:
-        a, b = F.col(a_col), F.col(b_col)
-        edges = (
-            pairs.filter(a != b)
-            .select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
+    if (sup0 is None) != (tri0 is None):
+        raise ValueError("sup0 and tri0 come together (one precomputed edge set)")
+    if sup0 is None:
+        ends = pairs.select(F.col(a_col).alias("_a"), F.col(b_col).alias("_b"))
+        codes = node_codes(ends.select("_a").unionAll(ends.select("_b")))
+        sig, tri0 = scan_edge_similarity(
+            encode_nodes(ends, codes, "_a", "_b"), "_a", "_b",
+            return_triangles=True,
         )
-        sup = _edge_support(edges).select("lo", "hi", "sup").localCheckpoint(
-            eager=True
+        sup0 = sig.select(
+            F.col("item_a").alias("lo"),
+            F.col("item_b").alias("hi"),
+            (F.col("common_closed") - 2).alias("sup"),
         )
+    ids = [t for c, t in sup0.dtypes + tri0.dtypes if c != "sup"]
+    if not set(ids) <= {"tinyint", "smallint", "int", "bigint"}:
+        raise TypeError(f"truss_peel needs integer node ids, got {ids}")
+    _p = F.lit(1 << 32).cast("long")
+
+    def _pk(lo: str, hi: str):
+        # lo * 2^32 + hi is injective only on [0, 2^31): an id outside it
+        # would alias another edge's key ((0, 2^32) packs like (1, 0)),
+        # so every pack checks its ids and fails loud inside the jobs
+        # that already read them — no extra job
+        ok = F.col(lo).between(0, _CODE_MAX) & F.col(hi).between(0, _CODE_MAX)
+        msg = "truss_peel edge id outside [0, 2^31): (%s, %s)"
+        return F.when(
+            ~ok, F.raise_error(F.format_string(msg, lo, hi))
+        ).otherwise(F.col(lo).cast("long") * _p + F.col(hi).cast("long"))
+
+    sup = sup0.select(
+        _pk("lo", "hi").alias("e"), F.col("sup").cast("long").alias("sup")
+    ).localCheckpoint(eager=True)
+    tri = tri0.select(
+        _pk("lo1", "hi1").alias("e1"),
+        _pk("lo2", "hi2").alias("e2"),
+        _pk("lo3", "hi3").alias("e3"),
+    )
     cum = grouped_value_cum(
         sup.select("sup"), [], "sup", bucket_expr=F.col("sup")
     )
@@ -1575,95 +1648,33 @@ def truss_peel(
             cum, [], "sup", t_rank_num, t_rank_den, out_col="_t"
         ).localCheckpoint(eager=True)
     )
-    tri = tri0
-    # Edge-key packing (guide §2.3 "narrower types"): the output is
-    # counts + a support-value threshold — after the t_df pick the
-    # individual node ids are never read again on the triangle-list
-    # path, only edge IDENTITY is joined on. For integral ids in
-    # [0, 2^31) the pair packs injectively into ONE long
-    # (lo * 2^32 + hi, no overflow), so the per-round semi-joins and
-    # the support explode shuffle one 8-byte key instead of two — half
-    # the triangle-list bytes. Gated by one bounded aggregate on the
-    # PINNED sup relation (the fold-gate rule: actions on pins only);
-    # non-integral or out-of-range ids keep the (lo, hi) pair loop
-    # verbatim. Results are identical by construction: packing is a
-    # bijection on the edge set and every downstream value is a count.
-    packed = False
-    if tri is not None:
-        dts = dict(sup.dtypes)
-        if dts.get("lo") in ("bigint", "int") and dts.get("hi") in (
-            "bigint",
-            "int",
-        ):
-            b = sup.agg(
-                F.min(F.least("lo", "hi")).alias("mn"),
-                F.max(F.greatest("lo", "hi")).alias("mx"),
-            ).first()
-            packed = (
-                b["mn"] is not None and b["mn"] >= 0 and b["mx"] < (1 << 31)
-            )
-    if packed:
-        _p = F.lit(1 << 32).cast("long")
-
-        def _pk(lo: str, hi: str):
-            # the gate bounded sup's ids only: a caller's tri0 id outside
-            # [0, 2^31) would alias another edge's key ((0, 2^32) packs
-            # like (1, 0)), so every pack checks its ids and fails loud
-            # inside the jobs that already read them — no extra job
-            top = (1 << 31) - 1
-            ok = F.col(lo).between(0, top) & F.col(hi).between(0, top)
-            msg = "truss_peel edge id outside [0, 2^31): (%s, %s)"
-            return F.when(
-                ~ok, F.raise_error(F.format_string(msg, lo, hi))
-            ).otherwise(F.col(lo).cast("long") * _p + F.col(hi).cast("long"))
-
-        keyed_sup = sup.select(_pk("lo", "hi").alias("e"), "sup")
-        tri = tri.select(
-            _pk("lo1", "hi1").alias("e1"),
-            _pk("lo2", "hi2").alias("e2"),
-            _pk("lo3", "hi3").alias("e3"),
-        )
-        keys = ["e"]
-    else:
-        keyed_sup = sup
-        keys = ["lo", "hi"]
-    cur_sup = keyed_sup
+    cur_sup = sup
     out = None
     edges = None
-    n_before = None
+    n_before = sup.count()  # round 1: a pinned relation
     for r in range(1, rounds + 1):
-        if r > 1 and tri is not None:
+        if r > 1:
             # subgraph triangles = original triangles whose 3 edges all
             # survive: three semi-joins against the shrinking survivor
             # set, then one explode + hash aggregate — no wedge join
             for i in (1, 2, 3):
                 tri = tri.join(
-                    edges.select(
-                        *[F.col(k).alias(f"{k}{i}") for k in keys]
-                    ),
-                    [f"{k}{i}" for k in keys],
-                    "left_semi",
+                    edges.select(F.col("e").alias(f"e{i}")), f"e{i}", "left_semi"
                 )
             if r < rounds:
                 # next round's semi-joins re-read it; on the final
                 # round the chain is linear into surv — stay lazy
                 tri = tri.localCheckpoint(eager=True)
-            if packed:
-                counts = (
-                    tri.select(F.explode(F.array("e1", "e2", "e3")).alias("e"))
-                    .groupBy("e")
-                    .agg(F.count(F.lit(1)).alias("_sup"))
-                )
-            else:
-                counts = _triangle_edge_counts(tri)
+            counts = (
+                tri.select(F.explode(F.array("e1", "e2", "e3")).alias("e"))
+                .groupBy("e")
+                .agg(F.count(F.lit(1)).alias("_sup"))
+            )
             # single consumer (surv) — lazy, no per-round checkpoint:
             # the survivor job computes join + filter in one pass
-            cur_sup = edges.join(counts, keys, "left").select(
-                *keys,
-                F.coalesce(F.col("_sup"), F.lit(0)).cast("long").alias("sup"),
+            cur_sup = edges.join(counts, "e", "left").select(
+                "e", F.coalesce(F.col("_sup"), F.lit(0)).cast("long").alias("sup")
             )
-        elif r > 1:
-            cur_sup = _edge_support(edges).select("lo", "hi", "sup")
         # persist (not localCheckpoint) the survivor set: an eagerly
         # materialized InMemoryRelation carries REAL size stats, so the
         # next round's three semi-joins broadcast it when it is small
@@ -1671,11 +1682,11 @@ def truss_peel(
         # version of the broadcast_labels contract (a checkpoint erases
         # stats and forces SMJ: 3 sorts of the triangle list per round,
         # measured 2.8 -> 2.3 s/round at sf0.1). Lineage stays bounded:
-        # the triangle chain is checkpointed per round either way.
+        # the triangle chain is checkpointed per round.
         surv = (
             cur_sup.crossJoin(t_df)
             .filter(F.col("sup") >= F.col("_t"))
-            .select(*keys)
+            .select("e")
             .persist()
         )
         # The materializing count IS the round's n_survivors (and the
@@ -1684,11 +1695,8 @@ def truss_peel(
         # which lets round r-1's cache be dropped as soon as round r is
         # materialized (persisted rounds otherwise accumulate across a
         # session — measured GC pressure under the bench's 3-execution
-        # protocol). Counts stay exact: they are the same bounded
-        # actions on the same pinned relations, taken once.
+        # protocol).
         n_surv = surv.count()
-        if n_before is None:  # round 1: |sup| (the left join preserves
-            n_before = sup.count()  # every edge), a pinned relation
         row = t_df.select(
             F.lit(r).cast("long").alias("round"),
             F.lit(n_before).cast("long").alias("n_edges_before"),
@@ -1700,10 +1708,9 @@ def truss_peel(
             edges.unpersist()
         edges = surv
         n_before = n_surv
-    if edges is not None:
-        # the output rows carry their counts as literals — the final
-        # survivor cache has no remaining consumer
-        edges.unpersist()
+    # the output rows carry their counts as literals — the final
+    # survivor cache has no remaining consumer
+    edges.unpersist()
     return out
 
 
@@ -1888,7 +1895,7 @@ def graph_transitivity(sim: DataFrame) -> DataFrame:
 
 def personalized_pagerank(
     edges: DataFrame,
-    seeds: tuple[str, ...],
+    seeds: tuple,
     iters: int = 5,
     damping_pct: int = 85,
     broadcast_ranks: bool = True,
@@ -1906,9 +1913,11 @@ def personalized_pagerank(
     ``(100-d)*UNITS div (100*|seeds|)`` teleport to seeds only. A seed
     absent from the graph simply never receives its share (total mass
     is then < 1 by that fraction — a loud property of the seed list,
-    not silently renormalized). Same per-round dataflow and scale
-    posture as pagerank; ``broadcast_ranks=False`` for rank tables past
-    broadcast size.
+    not silently renormalized). Over :func:`node_codes` ids, map each
+    seed through the dictionary and keep an absent one as a code no
+    node carries (-1), so ``|seeds|`` stays put. Same per-round
+    dataflow and scale posture as pagerank; ``broadcast_ranks=False``
+    for rank tables past broadcast size.
 
     Output: (node, rank_units, rank) — rank mass concentrated around
     the seeds' neighborhoods.

@@ -1578,11 +1578,12 @@ def pca_corpus_scatter(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     unit: int = 10**6,
-) -> tuple[DataFrame, DataFrame]:
-    """The ONE corpus-sized pass both PCA operators start from:
-    ``(scatter, mu)`` where scatter = the d×d centered integer scatter
-    matrix (rows (i, j, _s DECIMAL(38,0))) and mu = per-position
-    truncated means with counts (rows (i, _mu, _n)).
+) -> DataFrame:
+    """The ONE corpus-sized pass both PCA operators start from: the d×d
+    centered integer scatter matrix, rows (i, j, _s DECIMAL(38,0),
+    n_vecs). ``n_vecs``, the vector count (the largest per-position
+    divisor of the truncated means), rides on every cell, so a call
+    reads the pinned cells and nothing else.
 
     Split out so a pipeline running BOTH :func:`pca_top_component` and
     :func:`pca_components` on the same corpus (the registry's PCA pair)
@@ -1618,6 +1619,10 @@ def pca_corpus_scatter(
         F.expr("sum(_q) div count(1)").cast("long").alias("_mu"),
         F.count(F.lit(1)).alias("_n"),
     )
+    # every non-empty vector has a position 0, so the largest
+    # per-position count is the count at position 0: one scan of the
+    # pinned components, carried on every cell as a literal
+    n_vecs = comp.filter(F.col("i") == 0).count()
     dev = (
         comp.join(F.broadcast(mu), "i")
         .select("_vid", "i", (F.col("_q") - F.col("_mu")).alias("_d"))
@@ -1634,9 +1639,10 @@ def pca_corpus_scatter(
             .cast(dec)
             .alias("_s")
         )
+        .withColumn("n_vecs", F.lit(n_vecs).cast("long"))
         .localCheckpoint(eager=True)
     )
-    return scatter, mu
+    return scatter
 
 
 _PCA_SCHEMA = (
@@ -1702,7 +1708,7 @@ def pca_top_component(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     unit: int = 10**6,
-    scatter_mu: tuple[DataFrame, DataFrame] | None = None,
+    scatter: DataFrame | None = None,
 ) -> DataFrame:
     """Top principal component of the embedding corpus by the power
     method — the first step of PCA whitening / dimensionality triage
@@ -1715,7 +1721,7 @@ def pca_top_component(
     vector exists.
     """
     return pca_components(
-        embeddings, 1, iters, vec_col, id_col, unit, scatter_mu
+        embeddings, 1, iters, vec_col, id_col, unit, scatter
     ).drop("component")
 
 
@@ -1726,7 +1732,7 @@ def pca_components(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     unit: int = 10**6,
-    scatter_mu: tuple[DataFrame, DataFrame] | None = None,
+    scatter: DataFrame | None = None,
 ) -> DataFrame:
     """The leading ``n_components`` principal components of the
     embedding corpus by power iteration WITH DEFLATION: one Spark pass
@@ -1780,13 +1786,9 @@ def pca_components(
         raise ValueError(f"n_components must be >= 1, got {n_components}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    scatter, mu = scatter_mu or pca_corpus_scatter(
-        embeddings, vec_col, id_col, unit
-    )
-    n1 = mu.agg(F.max("_n").cast("long").alias("n_vecs"))
-    cells = scatter.crossJoin(F.broadcast(n1)).select(
-        "i", "j", "_s", "n_vecs"
-    ).toArrow()
+    if scatter is None:
+        scatter = pca_corpus_scatter(embeddings, vec_col, id_col, unit)
+    cells = scatter.select("i", "j", "_s", "n_vecs").toArrow()
     spark = embeddings.sparkSession
 
     def frame(rows: list[tuple]) -> DataFrame:

@@ -5362,82 +5362,46 @@ def _pagerank_oracle(iters: int = 5) -> str:
 def q_pagerank(spark, sf_dir):
     from .operators import graph
 
-    # 8-byte ids through the rank rounds (see _enc_numstr): rank math
-    # is id-order-free, but the shared encode keeps one audited code
-    # path across the graph family; node decodes back bit-identical
-    edges = _cooc_sym_edges(spark, sf_dir).select(
-        _enc_numstr("src"), _enc_numstr("dst")
-    )
-    pr = graph.pagerank(edges, iters=5)
-    return pr.select(_dec_numstr("node"), "rank_units", "rank")
+    pr = graph.pagerank(_cooc_sym_edges(spark, sf_dir), iters=5)
+    return _decode_nodes(spark, sf_dir, pr, "node")
 
 
-# Node ids are numeric partkey strings (the basket text contract), and
-# the iterative graph rounds re-shuffle id-keyed state every round.
-# Several outputs are id-ORDER-bearing (min-label communities, the BFS
-# min-id default seed), so a plain long cast would change results
-# ("10" < "9" as strings, 9 < 10 as longs). For numeric strings
-# WITHOUT leading zeros, lexicographic order equals (right-zero-padded
-# value, length) order, so rpad(s, 13, '0')::long * 16 + length(s) is
-# a STRING-ORDER-PRESERVING injection into longs (ids < 2^40 stay
-# under 13 digits; enc < 2^63), and the decode below reverses it
-# exactly. Rounds then shuffle 8-byte keys; outputs decode back
-# bit-identical.
-def _enc_numstr(c: str):
-    # Runtime guard (ADVICE r12): the injection silently breaks on ids
-    # longer than 13 chars (rpad TRUNCATES), with leading zeros
-    # (non-injective), or non-numeric (NULL cast). Fail loudly instead
-    # of corrupting graph results if the id contract ever changes; the
-    # branch is never taken on conforming data and costs two length
-    # comparisons per row.
-    col = F.col(c)
-    enc = F.rpad(col, 13, "0").cast("long") * 16 + F.length(col)
-    bad = (
-        enc.isNull()
-        | (F.length(col) > 13)
-        | (F.length(col) == 0)
-        | ((F.length(col) > 1) & col.startswith("0"))
-    )
-    return (
-        F.when(
-            ~bad, enc
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "_enc_numstr precondition violated (numeric, "
-                        "no leading zeros, <= 13 digits): "
-                    ),
-                    F.coalesce(col, F.lit("NULL")),
-                )
-            )
-        )
-    ).alias(c)
+# The graph family's one node encoding (graph.node_codes): every
+# lineitem partkey, as the basket string baskets_from_lineitem makes of
+# it, maps to its INT rank in string order. Code order IS string order,
+# so the order-bearing outputs (min-label communities, the BFS min-id
+# seed, canonical item_a < item_b, the wedge tie-breaks) are unchanged,
+# while every round shuffles 4-byte keys. Outputs that carry ids decode
+# them through _decode_nodes; count-only outputs never decode.
+@_pinned("node_codes")
+def _node_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import graph
+
+    li = _t(spark, sf_dir, "lineitem")
+    return graph.node_codes(li.select("l_partkey")).localCheckpoint(eager=True)
 
 
-def _enc_numstr_py(s: str) -> int:
-    return int(s.ljust(13, "0")) * 16 + len(s)
+def _decode_nodes(spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str):
+    from .operators import graph
+
+    return graph.decode_nodes(df, _node_codes(spark, sf_dir), *cols)
 
 
-def _dec_numstr(c: str):
-    return F.expr(
-        f"substring(CAST({c} div 16 AS STRING), 1, CAST({c} % 16 AS INT))"
-    ).alias(c)
-
-
-# pagerank, label propagation, seeded PPR, k-core peeling and sampled
-# triangle counting iterate over the SAME symmetrized co-occurrence edge
-# list (basket explode + canonical distinct over lineitem, ~3.4 s at
-# sf0.1). This is also the honest 100 TB shape: materialize the
+# pagerank, label propagation, seeded PPR, k-core peeling, sampled
+# triangle counting and the SCAN/truss sigma pin iterate over the SAME
+# symmetrized co-occurrence edge list (basket explode + canonical
+# distinct over lineitem, ~3.4 s at sf0.1), encoded once through the
+# node dictionary. This is also the honest 100 TB shape: materialize the
 # co-occurrence graph once, run the graph algorithms against it.
 @_pinned("cooc_sym_edges")
 def _cooc_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import graph
 
     baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-    return graph.symmetric_edges(basket.basket_pairs(baskets)).localCheckpoint(
-        eager=True
-    )
+    edges = graph.symmetric_edges(basket.basket_pairs(baskets))
+    return graph.encode_nodes(
+        edges, _node_codes(spark, sf_dir), "src", "dst"
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -6367,9 +6331,15 @@ def q_triangle_count_sampled(spark, sf_dir):
     from .operators import graph
 
     # shared pinned canonical edges (see q_kcore_peel) — skips the
-    # canonicalize + distinct shuffle entirely via pre_canonical
+    # canonicalize + distinct shuffle entirely via pre_canonical. The
+    # edge draw hashes the item STRINGS (md5('tri'|lo|hi), the oracle's
+    # draw), so the endpoints decode first, once: the operator reads
+    # its edge set from five branches.
+    canon = _cooc_sym_edges(spark, sf_dir).filter(F.col("src") < F.col("dst"))
     return graph.triangle_stats(
-        _cooc_sym_edges(spark, sf_dir).filter(F.col("src") < F.col("dst")),
+        _decode_nodes(spark, sf_dir, canon, "src", "dst").localCheckpoint(
+            eager=True
+        ),
         a_col="src",
         b_col="dst",
         edge_sample_pct=20,
@@ -6752,17 +6722,10 @@ def q_kcore_peel(spark, sf_dir):
     # canonical pairs before mirroring), so kcore skips its own
     # canonicalize + distinct entirely. A raw-basket_pairs feed was
     # A/B-measured slower first (pre-aggregation is the dedup the
-    # internal distinct needed); the shared pin beats both.
-    # numeric-string ids cast to longs on top of the pin (the truss
-    # lesson): the per-round degree explodes and semi-joins ship
-    # 8-byte keys. Safe here because kcore uses ONLY equality joins
-    # and counts — never an id order (which the cast would change;
-    # triangle counting's orientation tie-breaks forbid this cast).
+    # internal distinct needed); the shared pin beats both. The
+    # rounds run on the pin's INT node codes; the output is counts.
     return graph.kcore_peel(
-        _cooc_sym_edges(spark, sf_dir)
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").cast("long").alias("src"),
-                F.col("dst").cast("long").alias("dst")),
+        _cooc_sym_edges(spark, sf_dir).filter(F.col("src") < F.col("dst")),
         k=80,
         rounds=4,
         a_col="src",
@@ -10082,16 +10045,19 @@ def q_bfs_hops(spark, sf_dir):
     from .operators import graph
 
     baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-    # _enc_numstr ids through the frontier rounds: the default seed is
-    # the MIN node id — an ORDER-dependent pick the plain long cast
-    # would get wrong in general; the order-preserving encode keeps
-    # min(enc) == enc(string-min) universally. hops are id-free.
-    edges = graph.symmetric_edges(
-        basket.cooccurrence_counts(baskets).filter(F.col("pair_cnt") >= 2)
-    ).select(_enc_numstr("src"), _enc_numstr("dst"))
-    return graph.bfs_hops(edges, max_hops=4).select(
-        _dec_numstr("node"), "hops"
+    # node codes through the frontier rounds: the default seed is the
+    # MIN node id, and code order is string order, so min(code) is the
+    # string-min item. hops are id-free.
+    edges = graph.encode_nodes(
+        graph.symmetric_edges(
+            basket.cooccurrence_counts(baskets).filter(F.col("pair_cnt") >= 2)
+        ),
+        _node_codes(spark, sf_dir),
+        "src",
+        "dst",
     )
+    hops = graph.bfs_hops(edges, max_hops=4)
+    return _decode_nodes(spark, sf_dir, hops, "node")
 
 
 @register(
@@ -11610,7 +11576,7 @@ def q_pca_two(spark, sf_dir):
         _t(spark, sf_dir, "embeddings"),
         n_components=2,
         iters=6,
-        scatter_mu=_pca_scatter(spark, sf_dir),
+        scatter=_pca_scatter(spark, sf_dir),
     )
 
 
@@ -11637,7 +11603,7 @@ def q_pca_top(spark, sf_dir):
     return similarity.pca_top_component(
         _t(spark, sf_dir, "embeddings"),
         iters=6,
-        scatter_mu=_pca_scatter(spark, sf_dir),
+        scatter=_pca_scatter(spark, sf_dir),
     )
 
 
@@ -14529,20 +14495,13 @@ def _lpa_oracle(iters: int = 4) -> str:
 def q_label_propagation(spark, sf_dir):
     from .operators import graph
 
-    # shared pinned co-occurrence edge list (see _cooc_sym_edges).
-    # The vote rounds re-shuffle (src, label) STRING pairs every round
-    # (189 MB at sf0.1), and labels are order-bearing (min-label
-    # tie-break + the community value itself) — the order-preserving
-    # _enc_numstr injection keeps the tie-breaks and community values
-    # bit-identical while the rounds shuffle 8-byte labels
-    # (189.4 -> 144.8 MB measured).
-    edges = _cooc_sym_edges(spark, sf_dir).select(
-        _enc_numstr("src"), _enc_numstr("dst")
-    )
-    lab = graph.label_propagation(edges, iters=4)
-    return lab.select(
-        _dec_numstr("node"), _dec_numstr("community"), "community_size"
-    )
+    # shared pinned co-occurrence edge list (see _cooc_sym_edges). The
+    # vote rounds re-shuffle (src, label) pairs every round, and labels
+    # are order-bearing (min-label tie-break + the community value
+    # itself): the rounds run on INT node codes, whose order is string
+    # order, and both id columns decode at the end.
+    lab = graph.label_propagation(_cooc_sym_edges(spark, sf_dir), iters=4)
+    return _decode_nodes(spark, sf_dir, lab, "node", "community")
 
 
 @register(
@@ -14961,16 +14920,19 @@ _SCAN_SIM_CTES = f"""
 # triangle counts share the sigma table and its per-edge triangle
 # counts — the oriented-wedge build is the dominant cost of each (r9
 # bench: 13.4 s + 25.6 s with sigma built twice; 805 MB of shuffle at
-# sf0.1, the suite's largest).
+# sf0.1, the suite's largest). Both relations are on INT node codes,
+# fed from the coded edge pin's canonical half.
 @_pinned("scan_sigma_tri")
 def _scan_sigma_tri(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     from .operators import graph
 
-    baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
     sig, tri = graph.scan_edge_similarity(
-        basket.basket_pairs(baskets), return_triangles=True
+        _cooc_sym_edges(spark, sf_dir).filter(F.col("src") < F.col("dst")),
+        a_col="src",
+        b_col="dst",
+        return_triangles=True,
     )
     return (sig.localCheckpoint(eager=True), tri)
 
@@ -14996,7 +14958,8 @@ def _scan_sigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the temperature_mix sqrt rule) — bit-exact cross-engine",
 )
 def q_scan_edge_similarity(spark, sf_dir):
-    return _scan_sigma(spark, sf_dir)
+    sim = _scan_sigma(spark, sf_dir)
+    return _decode_nodes(spark, sf_dir, sim, "item_a", "item_b")
 
 
 @register(
@@ -15292,10 +15255,10 @@ def _scan_cluster_oracle(rounds: int = 8, mu: int = 3) -> str:
 def q_scan_clusters(spark, sf_dir):
     from .operators import graph
 
-    baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-    return graph.scan_clusters(
-        basket.basket_pairs(baskets), sim=_scan_sigma(spark, sf_dir)
-    )
+    # cluster_id is a min core code (NULL for hubs and outliers): the
+    # decode's left join keeps the NULLs
+    clusters = graph.scan_clusters(None, sim=_scan_sigma(spark, sf_dir))
+    return _decode_nodes(spark, sf_dir, clusters, "node", "cluster_id")
 
 
 def _truss_oracle(rounds: int = 3, num: int = 3, den: int = 4) -> str:
@@ -15387,26 +15350,15 @@ def q_truss_peel(spark, sf_dir):
     # common_closed - 2 on the SAME canonical edge set, and rounds 2-3
     # filter the shared pinned triangle LIST (three semi-joins) instead
     # of re-running the wedge join — r10 bench was 27.2 s with all
-    # three rounds recomputing wedges from scratch
+    # three rounds recomputing wedges from scratch. Both carry INT node
+    # codes; the output is counts, so nothing decodes.
     sig, tri = _scan_sigma_tri(spark, sf_dir)
-    # node ids are numeric partkey strings (the basket text contract):
-    # cast them to longs ON TOP of the shared pins so the three
-    # per-round semi-joins and the triangle explode shuffle 8-byte
-    # keys instead of ~16-byte UTF8 rows. Result-invariant: the cast
-    # is injective (no leading zeros), pair identity is preserved
-    # (canonicalization stays the STRING order — only equality is
-    # joined on), and the output is counts + a support-value threshold
-    # (value-ranked, never id-ranked).
     sup0 = sig.select(
-        F.col("item_a").cast("long").alias("lo"),
-        F.col("item_b").cast("long").alias("hi"),
-        (F.col("common_closed") - 2).cast("long").alias("sup"),
+        F.col("item_a").alias("lo"),
+        F.col("item_b").alias("hi"),
+        (F.col("common_closed") - 2).alias("sup"),
     )
-    tri = tri.select(*[F.col(c).cast("long").alias(c) for c in tri.columns])
-    baskets = basket.baskets_from_lineitem(_t(spark, sf_dir, "lineitem"))
-    return graph.truss_peel(
-        basket.basket_pairs(baskets), rounds=3, sup0=sup0, tri0=tri
-    )
+    return graph.truss_peel(None, rounds=3, sup0=sup0, tri0=tri)
 
 
 @register(
@@ -15441,7 +15393,8 @@ def q_truss_peel(spark, sf_dir):
 def q_clustering_coeff(spark, sf_dir):
     from .operators import graph
 
-    return graph.local_clustering_coefficients(_scan_sigma(spark, sf_dir))
+    lcc = graph.local_clustering_coefficients(_scan_sigma(spark, sf_dir))
+    return _decode_nodes(spark, sf_dir, lcc, "node")
 
 
 @register(
@@ -15635,16 +15588,22 @@ def _ppr_oracle(iters: int = 5) -> str:
 def q_ppr_seeded(spark, sf_dir):
     from .operators import graph
 
-    # shared pinned co-occurrence edge list (see _cooc_sym_edges),
-    # ids encoded to longs for the rounds (see _enc_numstr); the seed
-    # set encodes through the same injection
-    edges = _cooc_sym_edges(spark, sf_dir).select(
-        _enc_numstr("src"), _enc_numstr("dst")
-    )
+    # shared pinned co-occurrence edge list (see _cooc_sym_edges); the
+    # seeds map to node codes through the same dictionary, and an
+    # absent seed keeps a code no node carries (-1) so its
+    # UNITS div |seeds| share stays unassigned, never renormalized
+    code = {
+        r["node"]: r["code"]
+        for r in _node_codes(spark, sf_dir)
+        .filter(F.col("node").isin(*_PPR_SEEDS))
+        .collect()
+    }
     pr = graph.personalized_pagerank(
-        edges, tuple(_enc_numstr_py(s) for s in _PPR_SEEDS), iters=5
+        _cooc_sym_edges(spark, sf_dir),
+        tuple(code.get(s, -1) for s in _PPR_SEEDS),
+        iters=5,
     )
-    return pr.select(_dec_numstr("node"), "rank_units", "rank")
+    return _decode_nodes(spark, sf_dir, pr, "node")
 
 
 @register(
@@ -16640,6 +16599,23 @@ _ROTATION_TAIL.update({
     "pca_top_component_embeddings": "r14-local",
     "pca_two_components_embeddings": "r14-local",
     "wordpiece_encode_bpe_vocab": "r14-local",
+})
+
+# The lineitem graph family runs on one node encoding: a pinned dense,
+# order-preserving dictionary (graph.node_codes) codes the shared edge
+# pin, the sigma pin reads it, and ids decode only in the outputs that
+# carry them; truss_peel has one packed round loop. Result-identical on
+# the registry inputs at all three SFs (PageRank, PPR, SCAN clusters and
+# truss carry their r14-local marks from above).
+_ROTATION_TAIL.update({
+    "label_propagation_items": "r14-local",
+    "bfs_hops_items": "r14-local",
+    "kcore_peel_items": "r14-local",
+    "triangle_count_sampled": "r14-local",
+    "triangle_count_items": "r14-local",
+    "scan_edge_similarity_items": "r14-local",
+    "clustering_coeff_items": "r14-local",
+    "graph_transitivity_items": "r14-local",
 })
 
 # Rows-only entries (`err = no_oracle`) whose last driver row is stale

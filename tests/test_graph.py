@@ -611,81 +611,57 @@ def test_truss_peel_cascade(spark):
     assert (out[2].n_edges_before, out[2].n_survivors) == (8, 8)
 
 
-def test_truss_peel_sup0_path_equals_recompute(spark):
-    # the registry feeds truss_peel the shared sigma relation's
-    # support as sup0 — the fast path must be row-identical to the
-    # self-computed round-1 support
-    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
-    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
-    base = graph.truss_peel(pairs, rounds=3).collect()
-    sig = graph.scan_edge_similarity(pairs)
+def _coded_sup0_tri0(pairs):
+    # the registry's shape: node-coded endpoints, sigma support as sup0
+    # and the matching triangle list as tri0
+    ends = pairs.select("item", "neighbor")
+    codes = graph.node_codes(ends.select("item").unionAll(ends.select("neighbor")))
+    coded = graph.encode_nodes(ends, codes, "item", "neighbor")
+    sig, tri = graph.scan_edge_similarity(coded, return_triangles=True)
     sup0 = sig.select(
         F.col("item_a").alias("lo"),
         F.col("item_b").alias("hi"),
-        (F.col("common_closed") - 2).cast("long").alias("sup"),
+        (F.col("common_closed") - 2).alias("sup"),
     )
-    fast = graph.truss_peel(pairs, rounds=3, sup0=sup0).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, base))
-    # tri0 path: rounds >= 2 filter the pinned triangle list instead of
-    # re-running the wedge join — must also be row-identical
-    sig2, tri = graph.scan_edge_similarity(pairs, return_triangles=True)
-    sup0b = sig2.select(
-        F.col("item_a").alias("lo"),
-        F.col("item_b").alias("hi"),
-        (F.col("common_closed") - 2).cast("long").alias("sup"),
-    )
-    fastest = graph.truss_peel(pairs, rounds=3, sup0=sup0b, tri0=tri).collect()
-    assert sorted(map(tuple, fastest)) == sorted(map(tuple, base))
-    import pytest
+    return sup0, tri
 
+
+def test_truss_peel_sup0_path_equals_recompute(spark):
+    # the registry feeds truss_peel the shared sigma relation's support
+    # and triangle list on node codes — row-identical to the build
+    # truss_peel runs itself from the pairs
+    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
+    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    base = graph.truss_peel(pairs, rounds=3).collect()
+    sup0, tri = _coded_sup0_tri0(pairs)
+    given = graph.truss_peel(None, rounds=3, sup0=sup0, tri0=tri).collect()
+    assert sorted(map(tuple, given)) == sorted(map(tuple, base))
+    # sup0 and tri0 describe one edge set: one without the other raises
     with pytest.raises(ValueError):
         graph.truss_peel(pairs, rounds=3, tri0=tri)
+    with pytest.raises(ValueError):
+        graph.truss_peel(pairs, rounds=3, sup0=sup0)
 
 
-def test_truss_peel_packed_edge_keys_match_pair_loop(spark):
-    # with integral ids in [0, 2^31) the tri0 round loop runs on packed
-    # single-long edge keys (half the triangle-list shuffle); it must be
-    # row-identical to the (lo, hi) pair loop, and ids outside the safe
-    # range must fall back to the pair loop
+def test_truss_peel_ids_past_2_31_raise(spark):
+    # edges are packed lo * 2^32 + hi, injective only on [0, 2^31):
+    # ids past it raise instead of aliasing, and a non-integer id
+    # column raises at entry
     rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
-    pairs = spark.createDataFrame(
-        rows, "c string, item string, neighbor string"
-    )
-    sig, tri = graph.scan_edge_similarity(pairs, return_triangles=True)
-    sup0_str = sig.select(
-        F.col("item_a").alias("lo"),
-        F.col("item_b").alias("hi"),
-        (F.col("common_closed") - 2).cast("long").alias("sup"),
-    )
-    base = graph.truss_peel(
-        pairs, rounds=3, sup0=sup0_str, tri0=tri
-    ).collect()  # string ids: pair loop
-    sup0_long = sup0_str.select(
-        F.col("lo").cast("long").alias("lo"),
-        F.col("hi").cast("long").alias("hi"),
-        "sup",
-    )
-    tri_long = tri.select(
-        *[F.col(c).cast("long").alias(c) for c in tri.columns]
-    )
-    packed = graph.truss_peel(
-        pairs, rounds=3, sup0=sup0_long, tri0=tri_long
-    ).collect()  # long ids < 2^31: packed loop
-    assert sorted(map(tuple, packed)) == sorted(map(tuple, base))
-    # shift every id past 2^31: the gate must refuse to pack and the
-    # pair loop must still produce the same counts (+big preserves
-    # lo < hi and all identities)
+    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    sup0, tri = _coded_sup0_tri0(pairs)
     big = 1 << 31
-    sup0_big = sup0_long.select(
+    sup0_big = sup0.select(
         (F.col("lo") + big).alias("lo"), (F.col("hi") + big).alias("hi"), "sup"
     )
-    tri_big = tri_long.select(
-        *[(F.col(c) + big).alias(c) for c in tri_long.columns]
+    tri_big = tri.select(*[(F.col(c) + big).alias(c) for c in tri.columns])
+    with pytest.raises(Exception, match="edge id outside"):
+        graph.truss_peel(None, rounds=3, sup0=sup0_big, tri0=tri_big).collect()
+    sup0_str = sup0.select(
+        F.col("lo").cast("string").alias("lo"), "hi", "sup"
     )
-    fallback = graph.truss_peel(
-        pairs, rounds=3, sup0=sup0_big, tri0=tri_big
-    ).collect()
-    assert sorted(map(tuple, fallback)) == sorted(map(tuple, base))
+    with pytest.raises(TypeError, match="integer node ids"):
+        graph.truss_peel(None, rounds=3, sup0=sup0_str, tri0=tri)
 
 
 def test_triangle_stats_from_similarity_matches_self_contained(spark):

@@ -14,6 +14,7 @@ from probability_of_buying_two_products_together_hadoop_project_spark import (
 PIN_NAMES = {
     "near_dup_pairs",
     "near_dup_clusters",
+    "node_codes",
     "cooc_sym_edges",
     "scan_sigma_tri",
     "pca_scatter",
@@ -32,11 +33,17 @@ def isolated_pins(monkeypatch):
     monkeypatch.setattr(registry, "_PIN_STORE", {})
 
 
-def test_inventory_is_the_eight_pins_in_dependency_order():
+def test_inventory_is_the_nine_pins_in_dependency_order():
     builders = registry.shared_evidence_builders()
-    assert len(builders) == 8 and set(builders) == PIN_NAMES
+    assert len(builders) == 9 and set(builders) == PIN_NAMES
     names = list(builders)
     assert names.index("near_dup_pairs") < names.index("near_dup_clusters")
+    # the node dictionary feeds the coded edge pin, which feeds sigma
+    assert (
+        names.index("node_codes")
+        < names.index("cooc_sym_edges")
+        < names.index("scan_sigma_tri")
+    )
     assert builders["pca_scatter"] is registry._pca_scatter
 
 

@@ -86,10 +86,13 @@ def test_scan_sigma_cache_shared_between_pair(spark, sf_smoke):
     a = registry._scan_sigma(spark, sf_smoke)
     b = registry._scan_sigma(spark, sf_smoke)
     assert a is b
-    # scan_clusters consumes the pinned sigma without rebuilding it
-    assert _pin_names() == ["scan_sigma_tri"]
+    # sigma reads the coded edge pin, which encodes through the node
+    # dictionary; scan_clusters consumes the pinned sigma and decodes
+    # through the same dictionary without rebuilding any of them
+    pins = ["cooc_sym_edges", "node_codes", "scan_sigma_tri"]
+    assert _pin_names() == pins
     registry.REGISTRY["scan_clusters_items"].fn(spark, sf_smoke)
-    assert _pin_names() == ["scan_sigma_tri"]
+    assert _pin_names() == pins
 
 
 def test_near_dup_evidence_cache_shared(spark, sf_smoke):
@@ -137,5 +140,8 @@ def test_scan_sigma_cache_equals_uncached(spark, sf_smoke):
     li = spark.read.parquet(os.path.join(sf_smoke, "lineitem.parquet"))
     baskets = basket.baskets_from_lineitem(li)
     fresh = graph.scan_edge_similarity(basket.basket_pairs(baskets))
-    cached = registry._scan_sigma(spark, sf_smoke)
+    # the pin carries node codes: decoded, it equals the string-id build
+    cached = registry._decode_nodes(
+        spark, sf_smoke, registry._scan_sigma(spark, sf_smoke), "item_a", "item_b"
+    )
     assert _rowset(cached) == _rowset(fresh)
