@@ -447,9 +447,10 @@ def main() -> None:
         import tempfile
 
         from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
+        from probability_of_buying_two_products_together_hadoop_project_spark.sources import io as engine_io
 
         d = tempfile.mkdtemp(prefix="bench_bucketed_")
-        li = spark.read.parquet(os.path.join(args.sf_dir, "lineitem.parquet"))
+        li = engine_io.read_parquet(spark, os.path.join(args.sf_dir, "lineitem.parquet"))
         (
             li.write.mode("overwrite")
             .bucketBy(32, "l_orderkey")

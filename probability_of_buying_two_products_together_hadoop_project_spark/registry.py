@@ -136,14 +136,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # nanos conf — same cannot-scope-and-restore reasoning applies.
         if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+        df = engine_io.read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return engine_io.read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------------------

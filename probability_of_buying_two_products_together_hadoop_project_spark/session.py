@@ -64,33 +64,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load testdata parquet tables and register them as temp views.
-
-    Returns a dict name -> DataFrame. Column pruning / predicate pushdown
-    reach the parquet scan because these are plain ``spark.read.parquet``
-    relations (verify with ``df.explain``: PushedFilters / ReadSchema).
-    """
-    if not names:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    from pyspark.sql import functions as F
-
-    out = {}
-    for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
-        if n == "events":
-            # Normalize the ts column across testdata generations (nanos-as-
-            # long legacy conf, or micros TIMESTAMP_NTZ) to a session-TZ
-            # timestamp; sessions run UTC so the relabel is lossless.
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

@@ -15,9 +15,12 @@ IS the query plan.
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:
@@ -38,8 +41,72 @@ def read_json(spark: SparkSession, path: str, schema: str | None = None) -> Data
     return (r.schema(schema) if schema else r).json(path)
 
 
+# SQL confs that change the schema Spark infers from Parquet footers (and,
+# for a partitioned directory, from its partition values)
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# absolute path -> (file signature, inference confs, inferred StructType);
+# an entry is replaced whole in one assignment, so two threads opening one
+# path at once at worst both infer
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _file_signature(path: str) -> tuple:
+    """``(relative name, size, mtime_ns)`` of the file, or of every file
+    under the directory (partition subdirectories included)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            f = os.path.join(root, name)
+            st = os.stat(f)
+            sig.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sig)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The package's one Parquet table open: a fresh relation over
+    ``path`` that starts no Spark job once the table's schema is known.
+
+    ``spark.read.parquet`` infers the schema with one Spark job per open,
+    even for a single file. The schema Spark inferred is kept in a
+    process-local memo keyed by the absolute path, the table's file
+    signature (``(name, size, mtime_ns)`` of the file, or of every file
+    under the directory) and the values of the SQL confs that change
+    Parquet inference (``_PARQUET_INFERENCE_CONFS``). A hit reads with
+    that schema: a new relation with a new file listing, and no job. A
+    miss, or a changed signature or conf, infers as Spark always does
+    and replaces the path's entry, so the memo holds at most one entry
+    per path. A path this process cannot stat (a remote filesystem, a
+    glob) infers on every open.
+
+    Metadata only: the memo never holds a DataFrame, data or results. Two
+    opens of one table are two relations with their own expression ids,
+    so a self-join of two opens resolves.
+    """
+    try:
+        key = os.path.abspath(path)
+        sig = _file_signature(key)
+    except OSError:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONFS)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[:2] == (sig, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (sig, confs, df.schema)
+    return df
 
 
 def write_parquet(
@@ -107,8 +174,6 @@ def write_reference_pairs_layout(pairs: DataFrame, out_dir: str) -> list[str]:
     This is a parity artifact, not a scale path: real output goes to
     Parquet.
     """
-    import os
-
     rows = _reference_layout_query(pairs).collect()
     os.makedirs(out_dir, exist_ok=True)
     paths = []

@@ -626,13 +626,28 @@ def _coded_sup0_tri0(pairs):
     return sup0, tri
 
 
+def _peeling_pairs(spark):
+    # K5 on 0-4 (support 3), K4 on 5-8 (support 2) hung off 4, a triangle
+    # 8-9-10 and a tail 10-11-12: at the P75 threshold t = 3, round 1
+    # keeps 11 of 23 edges and round 2 peels 11 -> 10 (the cascade), so
+    # the round loops compare real peels
+    edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    edges += [(a, b) for a in range(5, 9) for b in range(a + 1, 9)]
+    edges += [(4, 5), (4, 6), (8, 9), (9, 10), (8, 10), (10, 11), (11, 12)]
+    return spark.createDataFrame(
+        [("u", str(a), str(b)) for a, b in edges],
+        "c string, item string, neighbor string",
+    )
+
+
 def test_truss_peel_sup0_path_equals_recompute(spark):
     # the registry feeds truss_peel the shared sigma relation's support
     # and triangle list on node codes — row-identical to the build
     # truss_peel runs itself from the pairs
-    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
-    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    pairs = _peeling_pairs(spark)
     base = graph.truss_peel(pairs, rounds=3).collect()
+    peeled = {r.round: r for r in base}
+    assert all(peeled[k].n_edges_before > peeled[k].n_survivors for k in (1, 2))
     sup0, tri = _coded_sup0_tri0(pairs)
     given = graph.truss_peel(None, rounds=3, sup0=sup0, tri0=tri).collect()
     assert sorted(map(tuple, given)) == sorted(map(tuple, base))
@@ -647,8 +662,7 @@ def test_truss_peel_ids_past_2_31_raise(spark):
     # edges are packed lo * 2^32 + hi, injective only on [0, 2^31):
     # ids past it raise instead of aliasing, and a non-integer id
     # column raises at entry
-    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
-    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    pairs = _peeling_pairs(spark)
     sup0, tri = _coded_sup0_tri0(pairs)
     big = 1 << 31
     sup0_big = sup0.select(
@@ -696,8 +710,7 @@ def test_truss_peel_rejects_out_of_range_tri0_id(spark):
     # sup0's ids pass the packing gate, but a caller-supplied triangle
     # carrying an id >= 2^31 would alias another edge's packed key
     # ((0, 2^32) packs like (1, 0)): the pack must raise, not alias
-    rows = [("u", str(i % 23), str((i * 7) % 23)) for i in range(300)]
-    pairs = spark.createDataFrame(rows, "c string, item string, neighbor string")
+    pairs = _peeling_pairs(spark)
     sig, tri = graph.scan_edge_similarity(pairs, return_triangles=True)
     sup0 = sig.select(
         F.col("item_a").cast("long").alias("lo"),

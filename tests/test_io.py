@@ -1,25 +1,68 @@
 """Source/sink round-trip tests (reference O1/O13 generalized):
-parquet, CSV, TSV, JSON, partitioned layout, and bucketed tables."""
+parquet (and its schema memo: a second open starts no job, a changed
+file or inference conf infers again), CSV, TSV, JSON, partitioned layout,
+and bucketed tables."""
 
+import glob
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from probability_of_buying_two_products_together_hadoop_project_spark import registry
 from probability_of_buying_two_products_together_hadoop_project_spark.sources import io
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
 from tests.test_basket_golden import golden_input_file
+from tools.dump_plans import mask_ids
+
+SMOKE_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
 
 
 def _nation(spark, sf_smoke):
     return spark.read.parquet(os.path.join(sf_smoke, "nation.parquet"))
 
 
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted in a job group
+    of its own once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"io-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "", False)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan(df):
+    return mask_ids(df._jdf.queryExecution().executedPlan().toString())
+
+
+def _write_single_file(df, path, tmp_path):
+    """One Parquet file (not a directory) at ``path``, replacing any."""
+    stage = str(tmp_path / f"stage-{uuid.uuid4().hex}")
+    df.coalesce(1).write.parquet(stage)
+    (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+    os.replace(part, path)
+
+
 def test_parquet_roundtrip(spark, sf_smoke, tmp_path):
     df = _nation(spark, sf_smoke)
     path = str(tmp_path / "nation_pq")
     io.write_parquet(df, path)
-    back = io.read_parquet(spark, path)
+    back, miss_jobs = _jobs(spark, lambda: io.read_parquet(spark, path))
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+    # the first open infers the schema with a job (so the count is live);
+    # a second open of the unchanged table reuses it and starts none
+    hit, hit_jobs = _jobs(spark, lambda: io.read_parquet(spark, path))
+    assert miss_jobs >= 1 and hit_jobs == 0
+    assert hit.schema == back.schema
 
 
 def test_partitioned_parquet_prunes(spark, sf_smoke, tmp_path):
@@ -32,6 +75,114 @@ def test_partitioned_parquet_prunes(spark, sf_smoke, tmp_path):
     assert {r["n_name"] for r in back.collect()} == {r["n_name"] for r in want.collect()}
     # directory-level partition pruning: only the matching partition is read
     assert "PartitionFilters: [isnotnull(n_regionkey" in plan
+    # an open with the remembered schema plans exactly as an inferred one
+    hit, jobs = _jobs(spark, lambda: io.read_parquet(spark, path))
+    inferred = spark.read.parquet(path)
+    assert jobs == 0 and hit.schema == inferred.schema
+    hit_plan = _plan(hit.filter(F.col("n_regionkey") == 1))
+    assert hit_plan == _plan(inferred.filter(F.col("n_regionkey") == 1))
+    assert "PartitionFilters: [isnotnull(n_regionkey" in hit_plan
+
+
+@pytest.mark.parametrize("table", SMOKE_TABLES)
+def test_read_parquet_hit_equals_inferred_read(spark, sf_smoke, table):
+    path = os.path.join(sf_smoke, f"{table}.parquet")
+    io.read_parquet(spark, path)
+    hit, jobs = _jobs(spark, lambda: io.read_parquet(spark, path))
+    inferred = spark.read.parquet(path)
+    assert jobs == 0
+    assert hit.schema == inferred.schema
+    assert _plan(hit) == _plan(inferred)
+
+
+def test_read_parquet_rewritten_file_reinfers(spark, sf_smoke, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    nation = _nation(spark, sf_smoke)
+    _write_single_file(nation.select("n_nationkey"), path, tmp_path)
+    assert io.read_parquet(spark, path).columns == ["n_nationkey"]
+    _write_single_file(nation.select("n_nationkey", "n_name"), path, tmp_path)
+    back = io.read_parquet(spark, path)
+    assert back.columns == ["n_nationkey", "n_name"]
+    assert sorted(map(tuple, back.collect())) == sorted(
+        map(tuple, nation.select("n_nationkey", "n_name").collect())
+    )
+
+
+def test_read_parquet_directory_gaining_a_part_file_reinfers(
+    spark, sf_smoke, tmp_path
+):
+    # with schema merging, a new part file carrying an extra column
+    # changes the table's schema without touching the old files
+    path = str(tmp_path / "grow")
+    nation = _nation(spark, sf_smoke)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        io.write_parquet(nation.select("n_nationkey"), path)
+        assert io.read_parquet(spark, path).columns == ["n_nationkey"]
+        io.write_parquet(nation.select("n_nationkey", "n_name"), path, mode="append")
+        back = io.read_parquet(spark, path)
+        assert back.columns == ["n_nationkey", "n_name"]
+        assert back.filter(F.col("n_name").isNotNull()).count() == nation.count()
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_read_parquet_binary_as_string_flip_reinfers(spark, tmp_path):
+    # a file Spark did not write: Spark's own writes carry their schema in
+    # the footer, which inference prefers over binaryAsString
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"n_name": pa.array([b"ALGERIA", b"CHINA"])}), path)
+    assert dict(io.read_parquet(spark, path).dtypes)["n_name"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert dict(io.read_parquet(spark, path).dtypes)["n_name"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(io.read_parquet(spark, path).dtypes)["n_name"] == "binary"
+
+
+def test_read_parquet_memo_holds_one_entry_per_path(spark, sf_smoke, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    nation = _nation(spark, sf_smoke)
+    before = len(io._SCHEMAS)
+    _write_single_file(nation.select("n_nationkey"), path, tmp_path)
+    io.read_parquet(spark, path)
+    _write_single_file(nation.select("n_name"), path, tmp_path)
+    io.read_parquet(spark, path)
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        io.read_parquet(spark, path)
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert len(io._SCHEMAS) == before + 1
+    assert os.path.abspath(path) in io._SCHEMAS
+
+
+def test_table_self_join_of_two_opens_resolves(spark, sf_smoke):
+    # every open is its own relation: a memoized DataFrame would give both
+    # sides one set of expression ids and make the join condition trivial
+    a = registry._t(spark, sf_smoke, "nation")
+    b, jobs = _jobs(spark, lambda: registry._t(spark, sf_smoke, "nation"))
+    assert jobs == 0
+    got = a.join(b, a.n_regionkey == b.n_regionkey).select(
+        a.n_name.alias("x"), b.n_name.alias("y")
+    )
+    rows = [(r.n_name, r.n_regionkey) for r in a.collect()]
+    want = sorted((x, y) for x, rx in rows for y, ry in rows if rx == ry)
+    assert sorted(map(tuple, got.collect())) == want
+    assert len(want) < len(rows) ** 2
+
+
+def test_registry_rebuild_starts_no_job(spark, sf_smoke):
+    # build floor: q5_region_revenue opens six tables; once their schemas
+    # are known, building it again starts no Spark job at all
+    build = registry.queries()["q5_region_revenue"]
+    build(spark, sf_smoke)
+    _, jobs = _jobs(spark, lambda: build(spark, sf_smoke))
+    assert jobs == 0
 
 
 def test_csv_roundtrip_with_schema(spark, sf_smoke, tmp_path):
