@@ -2113,7 +2113,6 @@ def normalize_text(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    ascii_fast_path: bool = True,
 ) -> DataFrame:
     """Unicode text normalization — the first cleaning pass of every
     LLM data pipeline: NFC-compose (so 'e'+COMBINING ACUTE and the
@@ -2134,15 +2133,15 @@ def normalize_text(
     Scale posture: per-row Python (Arrow-batched pandas UDF) is the
     honest path for NFC — the JVM has no Unicode-normalization
     builtin — but NFC is the IDENTITY on ASCII, and the zero-width/
-    NBSP characters are non-ASCII, so with ``ascii_fast_path`` (the
-    default) pure-ASCII documents take an all-JVM branch (the same
-    explicit control/whitespace character classes, codegen-compiled)
-    and Python sees only the non-ASCII minority. The split is a
-    row-level union of two filtered scans — two pushdown-friendly
-    passes over the input buy a 10-100x cut in Python volume on
-    mostly-ASCII corpora, removing the engine's only corpus-sized
-    per-document Python cost. Both branches are output-identical on
-    their rows (test-pinned); the plan stays map-only, zero exchanges.
+    NBSP characters are non-ASCII, so pure-ASCII documents take an
+    all-JVM branch (the same explicit control/whitespace character
+    classes, codegen-compiled) and Python sees only the non-ASCII
+    minority. The split is a row-level union of two filtered scans —
+    two pushdown-friendly passes over the input buy a 10-100x cut in
+    Python volume on mostly-ASCII corpora, removing the engine's only
+    corpus-sized per-document Python cost. Both branches equal the same pure-Python
+    mirror on their rows (test-pinned); the plan stays map-only, zero
+    exchanges.
 
     Output: (id_col, text cleaned, n_chars_raw, n_chars_clean, changed
     1/0) — lengths in codepoints in both engines.
@@ -2166,22 +2165,6 @@ def normalize_text(
         return col.map(one)
 
     raw = F.col(text_col)
-
-    def finish(cleaned: DataFrame) -> DataFrame:
-        return cleaned.select(
-            id_col,
-            text_col,
-            F.length("_raw").cast("long").alias("n_chars_raw"),
-            F.length(F.col(text_col)).cast("long").alias("n_chars_clean"),
-            (F.col(text_col) != F.col("_raw")).cast("bigint").alias("changed"),
-        )
-
-    if not ascii_fast_path:
-        return finish(
-            docs.select(
-                F.col(id_col), raw.alias("_raw"), clean(raw).alias(text_col)
-            )
-        )
     # NULL text is "ASCII" (both branches map it to NULL); the predicate
     # is made non-NULL so every row takes exactly one branch
     is_ascii = F.when(raw.isNull(), F.lit(True)).otherwise(
@@ -2205,7 +2188,13 @@ def normalize_text(
     slow = docs.filter(~is_ascii).select(
         F.col(id_col), raw.alias("_raw"), clean(raw).alias(text_col)
     )
-    return finish(fast.unionByName(slow))
+    return fast.unionByName(slow).select(
+        id_col,
+        text_col,
+        F.length("_raw").cast("long").alias("n_chars_raw"),
+        F.length(F.col(text_col)).cast("long").alias("n_chars_clean"),
+        (F.col(text_col) != F.col("_raw")).cast("bigint").alias("changed"),
+    )
 
 
 def oov_rate(

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ._evidence import NEWEST_GREEN
 from .functions.scalar import davg, dsum
 from .operators import (
     basket,
@@ -15880,779 +15881,68 @@ def q_qq_deciles(spark, sf_dir):
     )
 
 
-# The driver's CORRECTNESS gate checks the FIRST 50 entries of queries()
-# (observed rounds 1-2: registry positions 1-50 exactly). Emission order
-# is therefore a contract surface: the rotation tail below lists queries
-# that hold a green driver hash-match from the recorded round and whose
-# implementations are UNCHANGED since — they are emitted LAST so every
-# new, changed, or stale-evidence query lands inside the 50-entry window.
-# ROTATION RULE (per round): move the previous tail back into the window;
-# refill the tail with queries verified in the round just completed whose
-# IMPLEMENTATIONS (the registered function and every helper it calls) are
-# untouched by the current round — purely additive edits elsewhere in a
-# module do not disqualify its untouched functions. A tail member's
-# evidence is thus never more than one round old, and any query whose
-# implementation changes must rotate into the window the same round.
-#
-# r06 tail: no CORRECTNESS_r05 artifact was ever produced (the driver's
-# bench/verify pass was skipped between r05 and r06 — PROGRESS.jsonl shows
-# the round flip with no correctness/bench files written), so the r05
-# window's 16 never-checked members KEEP their slots and the 34 members
-# holding r03 driver rows rotate to the tail (labelled "r03", their
-# implementations untouched; freshest supporting evidence is the r05/r06
-# full-registry local oracle passes). The freed 34 slots go to the
-# highest-priority never-driver-checked r05-local entries: the remaining
-# 8 TPC-H shapes (Q8/Q9/Q12/Q14/Q15/Q16/Q19/Q20 — the whole 22-query
-# battery is now in-window), every hash-pinned "_verified"/incremental
-# twin, the curation/mixing/sharding pipeline, CDC/SCD2, time-series
-# gap-fill + rollup composition, fixed-point PageRank/k-means, and the
-# corpus-LM/TF-IDF text stack. ~76 r05-local entries remain tail-side
-# for the r07/r08 windows (217 queries alternate through 50 slots).
-# Mid-r06 adjustment: the round added four queries (DSIR, the two WAV
-# audio oracles, SemDeDup); per the rotation rule they take window
-# slots, displacing the four lowest-risk members (orc/table-stats/
-# salted-collect/zorder, labelled r06-local below) to the tail front.
-# r07 note: no CORRECTNESS_r05/r06 artifact was ever produced (driver
-# skipped those gates), so the r06 window — already the highest-priority
-# never-driver-checked set — stayed in place and the round's 28 new
-# queries displaced members one-for-one per the rotation rule, each
-# displacement recorded below with its in-window-sibling argument and
-# labelled r07-local (3-SF local oracle evidence). weighted_sample_orders
-# rotated IN because its implementation changed (the ln-quantization
-# hardening). Never-driver-checked tail entries still outrank 1-round-old
-# refreshes whenever a CORRECTNESS_r07 artifact appears.
-# r09 rotation: CORRECTNESS_r08 landed — 49/50 hash-match, one FAIL
-# (cusum_adaptive_events: raw Decimal transport vs the oracle's
-# VARCHAR; fixed this round by string-casting the statistic columns in
-# the wrapper, the cusum_changepoint precedent). Per the rotation rule
-# the window keeps: cusum_adaptive_events (the red row, wrapper
-# changed) and the 12 r08-green queries whose implementations the r08
-# ADVICE fixes touched this round — benford_screen_totalprice /
-# benford_by_priority (null-safe spine join), ks_drift_totalprice /
-# ks_drift_by_status, wasserstein_drift_totalprice / _by_status,
-# mannwhitney_urgent_totalprice / _by_status (null-safe grouped offset
-# joins via _join_nullsafe_keys), isotonic_calibration_doclen /
-# _by_source (null-safe grid/fit joins), kendall_tau_spend_frequency
-# (deterministic duplicate-key collapse), dedup_cut_spans (NULL-text
-# coalesce, both sides). pca_top_component_embeddings and
-# pca_two_components_embeddings rotate IN from the tail because their
-# implementation changed (the _embedding_dim limit-1 probe replacing
-# the scatter-wide max-index collect). The other 37 r08-green members
-# rotate to the tail labelled "r08"; the 35 freed slots go to
-# never-driver-checked entries, oldest displacement first: all 20
-# named displaced members (the scalar batteries, recursive CTE,
-# boilerplate screen, split/mix, zorder, redact, privacy-suppress,
-# dataset fingerprints, audio decimate, incremental dedup, sequence
-# pack, rollup compose, bloom decontaminate, vocab build, curated
-# corpus) plus the first 15 of the r05-local backlog. 60 r05-local
-# entries remain for r10+.
-# r08 rotation: CORRECTNESS_r07 landed — 50/50 hash-match, the full r07
-# window. Those 50 rotate to the tail labelled "r07", EXCEPT the six
-# whose implementations changed this round per the rotation rule
-# (benford_screen_totalprice: digit spine + n_skipped; psi_drift_
-# totalprice / psi_drift_by_status: NULL-filter-before-binning;
-# ks_drift_totalprice: NULL exclusion; linkage_sorted_neighborhood /
-# linkage_snm_multipass: NULL-key exclusion — the r07 ADVICE findings).
-# The 44 freed slots go to never-driver-checked members, oldest
-# displacement first: all 12 r06-local, all 25 r07-local, and the first
-# 7 r05-local entries (lateral/recursive-CTE/try/collation/json-extract/
-# map/regexp scalar batteries). 75 r05-local entries remain for r09+.
-# The round then added EIGHTEEN new queries (drift quartet completion
-# incl. grouped dashboards, isotonic PAV x2, substring spans / span
-# decontamination / span cutting, adaptive CUSUM, audio DFT, NFC
-# normalize, XML source, join-size forecast, weight ESS, blocking
-# quality, OOV rate) — each took a window slot, displacing a promoted
-# member back to the tail with the sibling argument recorded inline
-# below. Final r08 window: 6 ADVICE-touched + 18 new + 26 promoted.
-_ROTATION_TAIL = {
-    # Last driver hash-match row r03 (CORRECTNESS_r03.json); implementations
-    # untouched since; re-confirmed by every full-registry local oracle pass
-    # (r05/r06/r07).
-    "cooccurrence_pairs": "r03",
-    "cooccurrence_topk": "r03",
-    "cooccurrence_stripes": "r03",
-    "cooccurrence_pairs_joined": "r03",
-    "pair_rules": "r03",
-    "fpgrowth_itemsets": "r03",
-    "fpgrowth_itemsets_pairs": "r03",
-    "fpgrowth_rules_pairs": "r03",
-    "window_rank_variants": "r03",
-    "having_big_customers": "r03",
-    "agg_rollup_lineitem": "r03",
-    "agg_cube_orders": "r03",
-    "window_running_orders": "r03",
-    "topk_orders_per_customer": "r03",
-    "unpivot_lineitem_measures": "r03",
-    "corpus_bigrams": "r03",
-    "stratified_sample_orders": "r03",
-    "set_ops_segments": "r03",
-    "scalar_string_math_funcs": "r03",
-    "scalar_date_funcs": "r03",
-    "agg_grouping_sets": "r03",
-    "pivot_order_status_by_year": "r03",
-    "scalar_array_funcs": "r03",
-    "events_view_purchase_outer": "r03",
-    "events_sessionize": "r03",
-    "dedup_exact": "r03",
-    "doc_winnow_fingerprint": "r03",
-    "jaccard_prefiltered": "r11-local",
-    "minhash_near_dup": "r11-local",
-    "multimodal_meta": "r03",
-    "multimodal_frame_sample": "r03",
-    "embedding_topk": "r03",
-    "embedding_close_pairs_by_label": "r03",
-    "embedding_srp_lsh_topk": "r11-local",
-    # Green driver rows from CORRECTNESS_r04, implementations untouched.
-    "q1_pricing_summary": "r04",
-    "q3_top_revenue_orders": "r04",
-    "q5_region_revenue": "r04",
-    "join_left_customer_orders": "r04",
-    "join_semi_customers": "r04",
-    "join_anti_customers": "r04",
-    "join_full_outer_segments": "r04",
-    "csv_source_nation_agg": "r04",
-    "json_source_region_agg": "r04",
-    "fuzzy_customer_name_pairs": "r04",
-    "agg_stats_returnflag": "r04",
-    "window_lag_lead_events": "r04",
-    "salted_join_revenue": "r04",
-    "keep_latest_events": "r04",
-    "minhash_near_dup_verified": "r04",
-    "repetition_screen": "r04",
-    "pseudonymize_customers": "r04",
-    "hash_sample_orders": "r04",
-    "q6_forecast_revenue": "r04",
-    "agg_collect_sorted_orders": "r04",
-    "agg_stats_exact_formula": "r04",
-    "hll_sketch_partitioned_merge": "r11-local",
-    "agg_approx_count_distinct": "r11-local",
-    "events_sliding_30m": "r04",
-    "interval_join_view_purchase": "r04",
-    "asof_join_event_order": "r04",
-    "events_transition_counts": "r04",
-    "events_view_purchase_join": "r04",
-    "agg_percentiles": "r04",
-    "token_counts": "r04",
-    "q4_order_priority_exists": "r04",
-    "q17_small_quantity_revenue": "r04",
-    "correlated_max_order": "r04",
-    "events_tumbling_hour": "r04",
-    "events_session_window": "r04",
-    "events_window_bounds": "r04",
-    "text_stats": "r04",
-    "text_quality": "r04",
-    "lang_id": "r04",
-    "doc_fingerprint": "r04",
-    "doc_top_terms": "r04",
-    "simhash_near_dup": "r11-local",
-    "simhash_near_dup_verified": "r04",
-    "multimodal_features": "r04",
-    "multimodal_decode_roundtrip": "r04",
-    "multimodal_png_roundtrip": "r04",
-    "embedding_cosine_near_dup": "r04",
-    "embedding_ivf_topk": "r04",
-    # Green driver rows from CORRECTNESS_r07 (50/50 hash-match),
-    # implementations untouched by round 8.
-    "cooccurrence_pairs_skewed": "r07",
-    "multimodal_features_verified": "r07",
-    "q22_inactive_rich_customers": "r07",
-    "q21_waiting_supplier": "r07",
-    "q2_min_cost_supplier": "r07",
-    "q11_important_stock": "r07",
-    "q8_market_share": "r07",
-    "q9_product_profit": "r07",
-    "q19_disjunctive_revenue": "r07",
-    "q20_excess_supply": "r07",
-    "decontaminate_ngrams": "r07",
-    "variant_extract_events": "r07",
-    "window_range_frame_orders": "r07",
-    "pagerank_cooccurrence": "r07",
-    "tfidf_cosine_pairs": "r07",
-    "weighted_sample_orders": "r07",
-    "kmeans_embeddings": "r07",
-    "markov_stationary_events": "r07",
-    "hits_customer_part": "r07",
-    "mutual_info_type_hour": "r11-local",
-    "welch_ttest_urgent": "r07",
-    "dp_noisy_counts_priority": "r07",
-    "hashing_trick_features": "r07",
-    "entropy_screen_docs": "r07",
-    "cusum_changepoint_events": "r07",
-    "theilsen_trend_events": "r07",
-    "dsir_importance_en": "r07",
-    "dsir_select_gumbel100": "r07",
-    "multimodal_ahash_dedup": "r07",
-    "audio_features_verified": "r07",
-    "audio_resample_fir": "r07",
-    "audio_resample_rational": "r07",
-    # pca_top/two_components rotated INTO the r09 window (implementation
-    # changed: _embedding_dim limit-1 probe).
-    "semantic_dedup_embeddings": "r07",
-    "privacy_k_anonymity_orders": "r07",
-    "cluster_topics_embeddings": "r07",
-    "gdpr_cascade_forget": "r07",
-    "linkage_reciprocal_best": "r07",
-    "record_linkage_fs": "r07",
-    "record_linkage_em_fit": "r07",
-    "record_linkage_em": "r07",
-    "fingerprint_incremental_orders": "r07",
-    # calibration_curve_doclen rotated INTO the r10 window (rank_score
-    # moved to the bucketed prefix-sum — the unbounded-1p tripwire's one
-    # hit), displacing bpe_encode_vocab back to the tail: its in-window
-    # sibling bpe_learn_merges exercises the same BPE merge table and
-    # its own 3-SF local oracle evidence stands.
-    "bpe_encode_vocab": "r05-local",
-    # The two r10 additions (clustering_coeff_items /
-    # graph_transitivity_items — exact derivations over the shared
-    # pinned sigma) take window slots per the rotation rule, displacing
-    # the two lowest-risk promoted members: triangle_count_sampled
-    # (sibling triangle_count_items holds an r09 driver hash-match on
-    # the identical oriented-wedge machinery) and audio_resample_decimate
-    # (siblings audio_resample_fir / audio_resample_rational hold r07
-    # driver rows on the same polyphase resample core); both keep their
-    # 3-SF local oracle evidence.
-    "triangle_count_sampled": "r05-local",
-    "audio_resample_decimate": "r05-local",
-    # truss_peel_items (third r10 addition) took a window slot,
-    # displacing diverse_sample_embeddings: the embedding family holds
-    # fresh r09 driver hash-matches (embedding_centroids, both PCA
-    # queries) and its own 3-SF local oracle evidence stands.
-    "diverse_sample_embeddings": "r05-local",
-    # (r09) The 20 members displaced during r08 — the scalar batteries,
-    # recursive CTE, boilerplate screen, split/mix, zorder, redact,
-    # privacy-suppress, dataset fingerprints, audio decimate,
-    # incremental dedup, sequence pack, rollup compose, bloom
-    # decontaminate, vocab build, curated corpus — and the first 15 of
-    # the r05-local backlog were PROMOTED into the r09 window (35
-    # never-driver-checked promotions filling the slots freed by the 37
-    # r08-green rotations below).
-    # The round's two NEW queries (zipf_fit_words, gopher_rules_screen)
-    # take window slots per the rotation rule; the two most recently
-    # promoted members go back to the tail: chunk_documents_200's
-    # prefix-sum chunk law keeps sequence_pack_512 (in-window, same
-    # parallel prefix backbone) as its sibling, and hybrid_rrf_search's
-    # two retrieval legs keep bm25_search's r08 driver row plus the
-    # in-window embedding machinery (both keep 3-pass local evidence
-    # until r10).
-    # multimodal_phash_dedup (third r09 addition) took a slot;
-    # split_leakage_near_dup's MinHash-LSH machinery keeps
-    # minhash_near_dup_verified (r04) + minhash_incremental_verified
-    # (r08) driver rows as in-family siblings plus its own 3-pass
-    # local evidence until r10.
-    # perplexity_buckets_ccnet (fourth r09 addition — composes the
-    # in-window... bigram_lm_score holds an r08 driver row and the
-    # bucket cut reuses the stratified-split integer-threshold law)
-    # took a slot; funnel_view_click_purchase's per-user ordered-window
-    # machinery keeps events_transition_counts (r04) +
-    # events_sessionize (r03) driver rows as siblings plus its own
-    # 3-pass local evidence until r10.
-    # attribution_markov_removal (fifth r09 addition) took a slot;
-    # anomaly_zscore_events' exact-moment machinery keeps
-    # welch_ttest_urgent (r07) + agg_stats_exact_formula (r04) driver
-    # rows as siblings plus its own 3-pass local evidence until r10.
-    # brier_decomposition_doclen (sixth r09 addition) took a slot;
-    # value_histogram_events' fixed-bin counting shape keeps
-    # benford_by_priority (in-window, the binned-spine counting law)
-    # plus psi_drift's r08 driver rows as siblings, and its own 3-pass
-    # local evidence until r10.
-    # source_gram_containment (seventh r09 addition) took a slot;
-    # diverse_sample_embeddings' centroid machinery keeps
-    # embedding_centroids (in-window) + kmeans_embeddings /
-    # semantic_dedup_embeddings (r07 driver rows) as siblings plus its
-    # own 3-pass local evidence until r10.
-    # (r09 continuation) EIGHT further additions — label_propagation_items,
-    # isotonic_decreasing_urgency, unimax_source_allocation,
-    # heaps_law_vocab_growth, ks_drift_user_cohort, w1_drift_user_cohort,
-    # scan_edge_similarity_items, fd_profile_cust_priority — each took a
-    # window slot per the rotation rule (every one 3-SF local-oracle
-    # checked this round). Displacements, lowest-risk first:
-    # scalar_map_funcs and json_extract_events hold GREEN r03 driver rows
-    # (they were in the window only as stale-evidence refreshes, and the
-    # rule says never-driver-checked entries outrank refreshes), so they
-    # go back first:
-    "scalar_map_funcs": "r03",
-    "json_extract_events": "r03",
-    # collation_case_insensitive keeps the in-window scalar batteries
-    # (scalar_try/conditional/regexp — the same expression-battery law)
-    # as siblings plus its own 3-pass local evidence until r10.
-    # window_percentile_norm keeps window_rank_variants (r03) and
-    # window_range_frame_orders (r07) driver rows as window-family
-    # siblings plus its own 3-pass local evidence until r10.
-    # audio_resample_decimate keeps audio_resample_fir /
-    # audio_resample_rational / audio_features_verified (r07 driver
-    # rows) as codec-family siblings plus 3-pass local evidence.
-    # schema_evolution_union keeps the source-reader driver rows
-    # (csv/json r04, orc/xml r08) as siblings plus 3-pass local
-    # evidence — its union-by-name law is the same reader surface.
-    # nearest_centroid_confusion keeps embedding_centroids (in-window)
-    # and kmeans_embeddings (r07 driver row) as centroid-family
-    # siblings plus 3-pass local evidence.
-    # dataset_fingerprints keeps fingerprint_incremental_orders (r07)
-    # and doc_winnow_fingerprint_verified (r08) driver rows as
-    # fingerprint-family siblings plus 3-pass local evidence.
-    # wordpiece_encode_bpe_vocab (ninth r09-continuation addition) took
-    # a slot; countmin_word_freq keeps hll_sketch_partitioned_merge /
-    # agg_approx_count_distinct (r04) driver rows as sketch-family
-    # siblings and token_counts (r04) for the word-count leg, plus its
-    # own 3-pass local evidence until r10.
-    # rendezvous_shards_docs (tenth addition) took a slot;
-    # rollup_hour_day_compose keeps events_tumbling_hour (r04) and
-    # agg_rollup_lineitem (r03) driver rows as rollup-family siblings
-    # plus its own 3-pass local evidence until r10.
-    # cuped_cohort_events (eleventh addition) took a slot;
-    # privacy_suppress_orders keeps privacy_k_anonymity_orders /
-    # dp_noisy_counts_priority (r07 driver rows) and redact_pii_customers
-    # (in-window) as privacy-family siblings plus 3-pass local evidence.
-    # scan_clusters_items (twelfth addition) took a slot;
-    # vocab_build_min5 keeps zipf_fit_words (in-window, whose driver row
-    # exercises build_vocab directly) and token_counts/corpus_bigrams
-    # (r03/r04 driver rows) as vocabulary-family siblings plus 3-pass
-    # local evidence until r10.
-    # did_cohort_events (thirteenth addition) took a slot;
-    # mix_sources_weighted keeps temperature_mix_sources'
-    # sampling-weight machinery (tail, 3-pass) plus hash_sample_orders /
-    # stratified_sample_orders (r03/r04 driver rows) as deterministic-
-    # sampling siblings and its own 3-pass local evidence until r10.
-    # ppr_seeded_cooccurrence (fourteenth addition) took a slot;
-    # decontaminate_bloom keeps decontaminate_ngrams (r07 driver row)
-    # and join_bloom_prefiltered_revenue's bloom machinery (tail,
-    # 3-pass) as siblings plus its own 3-pass local evidence until r10.
-    # kneser_ney_bigram_lm (fifteenth addition) took a slot;
-    # curate_corpus_deduped keeps dedup_exact (r03) / minhash_near_dup
-    # (r03) / text_quality (r04) driver rows — the exact legs it
-    # composes — as siblings plus its own 3-pass local evidence.
-    # rule_interest_measures (sixteenth addition) took a slot;
-    # dedup_incremental_batch keeps minhash_incremental_verified (r08)
-    # and incremental_agg_orders' incremental-maintenance law (tail,
-    # 3-pass) plus dedup_exact (r03) as siblings and its own 3-pass
-    # local evidence until r10.
-    # negative_sampling_unigram (seventeenth addition) took a slot;
-    # train_val_test_split keeps stratified_split_by_source (tail,
-    # 3-pass) plus hash_sample_orders / stratified_sample_orders
-    # (r03/r04 driver rows) as md5-deterministic-split siblings and
-    # its own 3-pass local evidence until r10.
-    # shapley_attribution_events (eighteenth addition) took a slot;
-    # boilerplate_gram_screen keeps repetition_screen (r04) and
-    # decontaminate_ngrams (r07) driver rows as gram-screen siblings
-    # plus its own 3-pass local evidence until r10.
-    # qq_deciles_user_cohort (nineteenth addition) took a slot;
-    # recursive_cte_doc_ancestry keeps the scalar/lateral battery
-    # driver rows (scalar_try/conditional/regexp stay in-window) and
-    # correlated_max_order (r04) as subquery-family siblings plus its
-    # own 3-pass local evidence until r10.
-    # Never driver-checked; 3-SF local oracle evidence from the r05, r06
-    # and r07 full-registry passes. 60 remain after the r09 promotion of
-    # the first 15 — they fill the r10 window next.
-    "incremental_agg_orders": "r05-local",
-    "embedding_pq_adc_topk": "r05-local",
-    "kmv_distinct_users": "r05-local",
-    "kmv_set_ops_view_purchase": "r05-local",
-    "skyline_orders": "r05-local",
-    "ewma_value_events": "r05-local",
-    "containment_near_dup": "r05-local",
-    "mad_outlier_events": "r05-local",
-    "quantile_bins_orders": "r05-local",
-    "event_debounce_1d": "r05-local",
-    "burst_hourly_events": "r05-local",
-    "autocorr_hourly_events": "r05-local",
-    "containment_quotes_trigram": "r05-local",
-    "ohlc_hourly_events": "r05-local",
-    "key_skew_report_orders": "r05-local",
-    "attribution_linear_credit": "r05-local",
-    "chi2_source_lang": "r05-local",
-    "bootstrap_ci_totalprice": "r05-local",
-    "set_ops_bag_semantics": "r05-local",
-    "window_value_picks_events": "r05-local",
-    "rfm_segmentation": "r05-local",
-    "session_bounce_rate_daily": "r05-local",
-    "bfs_hops_items": "r05-local",
-    "scrub_repeated_segments": "r05-local",
-    "seasonal_hourly_events": "r05-local",
-    "roc_auc_doclen_lang": "r05-local",
-    "gini_customer_spend": "r05-local",
-    "kaplan_meier_conversion": "r05-local",
-    "pmi_collocations": "r05-local",
-    "activity_streaks_events": "r05-local",
-    "target_encode_segment": "r05-local",
-    "multimodal_resize_verified": "r05-local",
-    "sample_quantiles_orders": "r05-local",
-    "readability_flesch": "r05-local",
-    "schema_drift_orders": "r05-local",
-    "temperature_mix_sources": "r05-local",
-    "spearman_spend_frequency": "r05-local",
-    "classification_report_langid": "r05-local",
-    "source_vocab_overlap": "r05-local",
-    "classification_summary_langid": "r05-local",
-    # Green driver rows from CORRECTNESS_r08 (49/50 hash-match),
-    # implementations untouched by round 9 (the 12 ADVICE-touched
-    # drift/calibration/benford/kendall/cut-span queries and the red
-    # cusum_adaptive_events stay IN the window instead).
-    "orc_source_supplier_agg": "r08",
-    "fuzzy_name_pairs_collapsed": "r08",
-    "minhash_incremental_verified": "r08",
-    "token_shards_4k": "r08",
-    "doc_winnow_fingerprint_verified": "r08",
-    "q7_nation_volume_shipping": "r08",
-    "q10_returned_item_revenue": "r08",
-    "q13_order_count_distribution": "r08",
-    "q18_large_quantity_orders": "r08",
-    "q12_late_shipments": "r08",
-    "q14_promo_revenue": "r08",
-    "q15_top_supplier": "r08",
-    "q16_supplier_part_count": "r08",
-    "bm25_search": "r08",
-    "embedding_ivf_topk_verified": "r08",
-    "lateral_top2_orders": "r08",
-    "table_stats_orders": "r08",
-    "scd2_user_event_type": "r08",
-    "salted_collect_priorities": "r08",
-    "resample_gapfill_events": "r08",
-    "bigram_lm_score": "r08",
-    "agg_corr_regression": "r08",
-    "cooccurrence_sessions": "r08",
-    "kmv_incremental_verified": "r08",
-    "psi_drift_totalprice": "r08",
-    "psi_drift_by_status": "r08",
-    "linkage_sorted_neighborhood": "r08",
-    "linkage_snm_multipass": "r08",
-    "dedup_substring_spans": "r08",
-    "decontaminate_span_report": "r08",
-    "audio_dft_energy": "r08",
-    "xml_source_supplier_agg": "r08",
-    # normalize_text_nfc rotated INTO the r09 window (implementation
-    # changed: the ASCII fast path), displacing cohort_retention_events
-    # — whose per-user window machinery keeps events_sliding_30m +
-    # window_lag_lead_events (r04 driver rows) as siblings plus its own
-    # 3-pass local evidence until r10.
-    "cohort_retention_events": "r05-local",
-    "join_size_report_partkey": "r08",
-    "dsir_weight_ess": "r08",
-    "linkage_blocking_quality": "r08",
-    "oov_rate_by_source": "r08",
-    # r10 rotation: CORRECTNESS_r09 landed 50/50 green. The 46 r09-green
-    # members whose implementations r10 left untouched rotate here
-    # (labelled r09); the 4 in-window members r10 DID touch keep their
-    # slots (scan_edge_similarity_items / scan_clusters_items: shared
-    # pinned sigma + canon/deg pinning; brier_decomposition_doclen:
-    # bucketed prefix-sum rank; qq_deciles_user_cohort: the bucket_fn
-    # API). Five tail members rotate IN because their registered
-    # functions changed (the shared near-dup evidence cache:
-    # ngram_jaccard_pairs, dedup_clusters, dedup_cluster_canonical,
-    # golden_record_docs; the TakeOrdered coverage ranker:
-    # hybrid_rrf_search), and the 41 freed slots go to the oldest
-    # never-driver-checked r05-local entries in ledger order
-    # (chunk_documents_200 .. join_bloom_prefiltered_revenue).
-    # 39 r05-local entries remain for r11+.
-    "scalar_try_funcs": "r09",
-    "scalar_conditional_funcs": "r09",
-    "scalar_regexp_funcs": "r09",
-    "zorder_locality_orders": "r09",
-    "redact_pii_customers": "r09",
-    "sequence_pack_512": "r09",
-    "embedding_centroids": "r09",
-    "triangle_count_items": "r11-local",
-    "benford_screen_totalprice": "r09",
-    "ks_drift_totalprice": "r09",
-    "pca_two_components_embeddings": "r09",
-    "pca_top_component_embeddings": "r09",
-    "wasserstein_drift_totalprice": "r09",
-    "mannwhitney_urgent_totalprice": "r09",
-    "isotonic_calibration_doclen": "r09",
-    "cusum_adaptive_events": "r09",
-    "normalize_text_nfc": "r09",
-    "isotonic_calibration_by_source": "r09",
-    "wasserstein_drift_by_status": "r09",
-    "mannwhitney_by_status": "r09",
-    "ks_drift_by_status": "r09",
-    "dedup_cut_spans": "r09",
-    "benford_by_priority": "r09",
-    "kendall_tau_spend_frequency": "r09",
-    "zipf_fit_words": "r09",
-    "gopher_rules_screen": "r09",
-    "multimodal_phash_dedup": "r09",
-    "perplexity_buckets_ccnet": "r09",
-    "attribution_markov_removal": "r09",
-    "source_gram_containment": "r09",
-    "label_propagation_items": "r09",
-    "isotonic_decreasing_urgency": "r09",
-    "unimax_source_allocation": "r09",
-    "heaps_law_vocab_growth": "r09",
-    "ks_drift_user_cohort": "r09",
-    "w1_drift_user_cohort": "r09",
-    "fd_profile_cust_priority": "r09",
-    "wordpiece_encode_bpe_vocab": "r09",
-    "rendezvous_shards_docs": "r09",
-    "cuped_cohort_events": "r09",
-    "did_cohort_events": "r09",
-    "ppr_seeded_cooccurrence": "r09",
-    "kneser_ney_bigram_lm": "r09",
-    "rule_interest_measures": "r09",
-    "negative_sampling_unigram": "r09",
-    "shapley_attribution_events": "r09",
-    # Driver hash-match rows r10 (CORRECTNESS_r10.json, 50/50 green);
-    # rotated to the tail so the 45 never-sampled queries fill the head.
-    "collation_case_insensitive": "r10",
-    "mix_sources_weighted": "r10",
-    "curate_corpus_deduped": "r10",
-    "dedup_incremental_batch": "r10",
-    "ngram_jaccard_pairs": "r10",
-    "dedup_clusters": "r10",
-    "decontaminate_bloom": "r10",
-    "recursive_cte_doc_ancestry": "r10",
-    "vocab_build_min5": "r10",
-    "train_val_test_split": "r10",
-    "rollup_hour_day_compose": "r10",
-    "boilerplate_gram_screen": "r10",
-    "value_histogram_events": "r10",
-    "anomaly_zscore_events": "r10",
-    "window_percentile_norm": "r11-local",
-    "nearest_centroid_confusion": "r10",
-    "split_leakage_near_dup": "r10",
-    "funnel_view_click_purchase": "r10",
-    "countmin_word_freq": "r10",
-    "schema_evolution_union": "r10",
-    "chunk_documents_200": "r10",
-    "hybrid_rrf_search": "r10",
-    "dedup_cluster_canonical": "r10",
-    "source_kl_divergence": "r10",
-    "window_distinct_running_events": "r10",
-    "window_running_median_orders": "r10",
-    "kcore_peel_items": "r10",
-    "inverted_index_terms": "r10",
-    "embedding_quantize_int8": "r10",
-    "winsorize_values_events": "r10",
-    "stratified_split_by_source": "r10",
-    "pit_join_purchase_state": "r10",
-    "dq_suite_orders": "r10",
-    "event_paths_top3grams": "r10",
-    "dau_wau_events": "r10",
-    "nb_lang_confusion": "r10",
-    "snapshot_diff_orders": "r10",
-    "bpe_learn_merges": "r10",
-    "join_bloom_prefiltered_revenue": "r10",
-    "golden_record_docs": "r10",
-    "privacy_suppress_orders": "r10",
-    "dataset_fingerprints": "r10",
-    "calibration_curve_doclen": "r11-local",
-    "brier_decomposition_doclen": "r11-local",
-    "scan_edge_similarity_items": "r10",
-    "scan_clusters_items": "r10",
-    "truss_peel_items": "r11-local",
-    "clustering_coeff_items": "r10",
-    "graph_transitivity_items": "r10",
-    "qq_deciles_user_cohort": "r10",
+# The driver's CORRECTNESS gate checks the first 50 entries of queries(),
+# so the emission order decides which evidence the next driver round
+# refreshes. NEWEST_GREEN (generated by tools/evidence_ledger.py from the
+# CORRECTNESS_r*.json records) holds each query's newest green driver
+# round; _CHANGED holds the queries whose implementation changed since
+# that row, with the round that changed them. Remove an entry once a
+# record at or after that round is green for it (a test fails on a
+# stale one).
+_CHANGED = {
+    "kmeans_embeddings": 14,
+    "semantic_dedup_embeddings": 14,
+    "cluster_topics_embeddings": 14,
+    "record_linkage_em": 14,
+    "record_linkage_em_fit": 14,
+    "pca_top_component_embeddings": 14,
+    "pca_two_components_embeddings": 14,
+    "wordpiece_encode_bpe_vocab": 14,
+    "pagerank_cooccurrence": 14,
+    "ppr_seeded_cooccurrence": 14,
+    "label_propagation_items": 14,
+    "bfs_hops_items": 14,
+    "kcore_peel_items": 14,
+    "triangle_count_sampled": 14,
+    "triangle_count_items": 14,
+    "scan_edge_similarity_items": 14,
+    "scan_clusters_items": 14,
+    "clustering_coeff_items": 14,
+    "graph_transitivity_items": 14,
+    "truss_peel_items": 14,
+    "ngram_jaccard_pairs": 14,
+    "dedup_clusters": 14,
+    "dedup_cluster_canonical": 14,
+    "golden_record_docs": 14,
+    "doc_winnow_fingerprint_verified": 14,
+    "containment_near_dup": 14,
+    "containment_quotes_trigram": 14,
+    "normalize_text_nfc": 14,
 }
 
 
-# r11 driver window (CORRECTNESS_r11.json): 50/50 hash-match rows. Every
-# sampled entry moves to mark "r11"; the 11 still-never-driver-verified
-# entries (the 8 r10/r11-local additions plus calibration/brier/truss)
-# stay class 0 and lead the r12 window.
-_ROTATION_TAIL.update({
-        "activity_streaks_events": "r11",
-        "agg_approx_count_distinct": "r11",
-        "approx_percentile_gk_bounds": "r11",
-        "attribution_linear_credit": "r11",
-        "autocorr_hourly_events": "r11",
-        "bfs_hops_items": "r11",
-        "bootstrap_ci_totalprice": "r11",
-        "bpe_encode_vocab": "r11",
-        "burst_hourly_events": "r11",
-        "chi2_source_lang": "r11",
-        "cohort_retention_events": "r11",
-        "containment_near_dup": "r11",
-        "containment_quotes_trigram": "r11",
-        "diverse_sample_embeddings": "r11",
-        "embedding_pq_adc_topk": "r11",
-        "embedding_srp_lsh_topk": "r11",
-        "event_debounce_1d": "r11",
-        "ewma_value_events": "r11",
-        "gini_customer_spend": "r11",
-        "hll_sketch_partitioned_merge": "r11",
-        "incremental_agg_orders": "r11",
-        "jaccard_prefiltered": "r11",
-        "kaplan_meier_conversion": "r11",
-        "key_skew_report_orders": "r11",
-        "kmv_distinct_users": "r11",
-        "kmv_set_ops_view_purchase": "r11",
-        "mad_outlier_events": "r11",
-        "minhash_near_dup": "r11",
-        "multimodal_resize_verified": "r11",
-        "mutual_info_type_hour": "r11",
-        "ohlc_hourly_events": "r11",
-        "pmi_collocations": "r11",
-        "quantile_bins_orders": "r11",
-        "rfm_segmentation": "r11",
-        "roc_auc_doclen_lang": "r11",
-        "sample_quantiles_orders": "r11",
-        "scrub_repeated_segments": "r11",
-        "seasonal_hourly_events": "r11",
-        "session_bounce_rate_daily": "r11",
-        "set_ops_bag_semantics": "r11",
-        "simhash_near_dup": "r11",
-        "skyline_orders": "r11",
-        "streaming_dedup_within_watermark": "r11",
-        "streaming_session_append_watermark": "r11",
-        "streaming_tumbling_complete_events": "r11",
-        "target_encode_segment": "r11",
-        "triangle_count_items": "r11",
-        "triangle_count_sampled": "r11",
-        "window_percentile_norm": "r11",
-        "window_value_picks_events": "r11",
-})
+def evidence_due(name: str, newest_green: dict[str, int], changed: dict[str, int]) -> bool:
+    """True when name has no green driver row, or changed after its newest
+    one. A round's record covers that round's changes."""
+    green = newest_green.get(name)
+    return green is None or green < changed.get(name, 0)
 
-# Implementations touched in r12 (rotation rule: changed code re-enters
-# the window as never-verified-in-this-form). simhash_near_dup changed
-# SEMANTICS (fast-family property-bound report); the rest are
-# result-identical plan changes (localCheckpoint pins, the shared
-# exploded-signature helper, the drain single-batch assertion, the
-# empty-graph coalesce) re-verified out of caution.
-_ROTATION_TAIL.update({
-    "simhash_near_dup": "r12-local",
-    "simhash_near_dup_verified": "r12-local",
-    "jaccard_prefiltered": "r12-local",
-    "minhash_near_dup_verified": "r12-local",
-    "split_leakage_near_dup": "r12-local",
-    "containment_near_dup": "r12-local",
-    "containment_quotes_trigram": "r12-local",
-    "streaming_dedup_within_watermark": "r12-local",
-    "triangle_count_items": "r12-local",
-    # r12 (late): shared PCA scatter injection (kcore/triangle feed
-    # swap was A/B-tested and reverted — comments only); shared pinned
-    # symmetric co-occurrence edge list for the PageRank family
-    "pca_two_components_embeddings": "r12-local",
-    "pca_top_component_embeddings": "r12-local",
-    "pagerank_cooccurrence": "r12-local",
-    "label_propagation_items": "r12-local",
-    "ppr_seeded_cooccurrence": "r12-local",
-    # r12 (later): kcore/triangle_sampled joined the shared edge pin
-    # via the pre_canonical fast path
-    "kcore_peel_items": "r12-local",
-    "triangle_count_sampled": "r12-local",
-    # r12 (final session): three more pin-once-share families (all
-    # result-invisible — the DSIR log-weight table, the BPE
-    # _bpe_rounds pair, the duplicated-substring span table);
-    # re-verified out of caution like the pca/pagerank pins
-    "dsir_importance_en": "r12-local",
-    "dsir_select_gumbel100": "r12-local",
-    "dsir_weight_ess": "r12-local",
-    "bpe_learn_merges": "r12-local",
-    "bpe_encode_vocab": "r12-local",
-    "wordpiece_encode_bpe_vocab": "r12-local",
-    "dedup_substring_spans": "r12-local",
-    "dedup_cut_spans": "r12-local",
-    # r12 (final session): byte histogram moved from per-byte explode
-    # to an Arrow-batched mapInPandas bincount (guide §4.2) — output
-    # identical (reference test + oracle at all three SFs)
-    "entropy_screen_docs": "r12-local",
-})
 
-# Implementations touched in r14: the PCA pair shares one power loop
-# (pca_top_component is pca_components with n_components=1), PageRank
-# and personalized PageRank share one round loop, FS-EM lost its
-# relational twin and empty-pattern gate, scan_clusters validates its
-# eps rank, and truss_peel's tri0 pack fails loud out of range. All are
-# result-identical; re-verified like the r12 pins.
-_ROTATION_TAIL.update({
-    "pca_top_component_embeddings": "r14-local",
-    "pca_two_components_embeddings": "r14-local",
-    "pagerank_cooccurrence": "r14-local",
-    "ppr_seeded_cooccurrence": "r14-local",
-    "record_linkage_em": "r14-local",
-    "record_linkage_em_fit": "r14-local",
-    "scan_clusters_items": "r14-local",
-    "truss_peel_items": "r14-local",
-})
-
-# The k-means family runs on one path: the Arrow kernel took the whole
-# kmeans/SemDeDup contract (ragged seeds, any unit, any k x dim, any
-# cluster size) and the relational Lloyd loop, assignment and pair
-# screen were deleted. Result-identical on the registry inputs; their
-# newest recorded correctness rows are r07 (CORRECTNESS_r07.json).
-_ROTATION_TAIL.update({
-    "kmeans_embeddings": "r14-local",
-    "semantic_dedup_embeddings": "r14-local",
-    "cluster_topics_embeddings": "r14-local",
-})
-
-# Blocked set similarity runs one grouped Arrow kernel: jaccard_pairs
-# (the near_dup_pairs pin and its closure) and containment_pairs share
-# one verify path, and the self-join, the prefix filter and both verify
-# strategies were deleted. Result-identical on the registry inputs at
-# all three SFs.
-_ROTATION_TAIL.update({
-    "ngram_jaccard_pairs": "r14-local",
-    "dedup_clusters": "r14-local",
-    "dedup_cluster_canonical": "r14-local",
-    "golden_record_docs": "r14-local",
-    "doc_winnow_fingerprint_verified": "r14-local",
-    "containment_near_dup": "r14-local",
-    "containment_quotes_trigram": "r14-local",
-})
-
-# PCA and WordPiece run one exact path each: the PCA pair's power
-# iteration with deflation runs on the driver in exact integers over the
-# collected scatter, and WordPiece is one Arrow greedy kernel; both
-# folds, both relational round loops and both size gates were deleted.
-# Result-identical on the registry inputs at all three SFs.
-_ROTATION_TAIL.update({
-    "pca_top_component_embeddings": "r14-local",
-    "pca_two_components_embeddings": "r14-local",
-    "wordpiece_encode_bpe_vocab": "r14-local",
-})
-
-# The lineitem graph family runs on one node encoding: a pinned dense,
-# order-preserving dictionary (graph.node_codes) codes the shared edge
-# pin, the sigma pin reads it, and ids decode only in the outputs that
-# carry them; truss_peel has one packed round loop. Result-identical on
-# the registry inputs at all three SFs (PageRank, PPR, SCAN clusters and
-# truss carry their r14-local marks from above).
-_ROTATION_TAIL.update({
-    "label_propagation_items": "r14-local",
-    "bfs_hops_items": "r14-local",
-    "kcore_peel_items": "r14-local",
-    "triangle_count_sampled": "r14-local",
-    "triangle_count_items": "r14-local",
-    "scan_edge_similarity_items": "r14-local",
-    "clustering_coeff_items": "r14-local",
-    "graph_transitivity_items": "r14-local",
-})
-
-# Rows-only entries (`err = no_oracle`) whose last driver row is stale
-# (r03/r04). Their `_verified` oracle twins are green, but the judge wants
-# CURRENT driver rows acknowledging the rows-only contract, so they get a
-# priority class between "never verified" and "oldest mark" until the r12
-# driver records fresh rows.
-_ROWS_ONLY_REFRESH = {
-    "fpgrowth_itemsets",
-    "doc_winnow_fingerprint",
-    "multimodal_features",
-    "embedding_ivf_topk",
-}
+def evidence_order(
+    names: list[str], newest_green: dict[str, int], changed: dict[str, int]
+) -> list[str]:
+    """The ``evidence_due`` names first, in the given order; then the rest
+    by ascending newest green round (stable, so the given order breaks
+    ties)."""
+    due = {n for n in names if evidence_due(n, newest_green, changed)}
+    head = [n for n in names if n in due]
+    tail = sorted((n for n in names if n not in due), key=newest_green.__getitem__)
+    return head + tail
 
 
 def _ordered() -> dict[str, Query]:
-    """Registry order exposed to the driver. Priority classes:
-
-    1. queries never hash-verified by a driver round (``-local``
-       markers in ``_ROTATION_TAIL``, or absent from it) — these fill
-       the front so a head-biased correctness sample covers the
-       verification debt first;
-    2. rows-only entries in ``_ROWS_ONLY_REFRESH`` whose driver rows
-       are stale — their weaker rows-only check should be re-recorded;
-    3. queries whose last driver row is oldest (r03 before r10).
-    """
-
-    def rank(n: str) -> tuple[int, str]:
-        mark = _ROTATION_TAIL.get(n)
-        if mark is None or mark.endswith("-local"):
-            return (0, "")
-        if n in _ROWS_ONLY_REFRESH:
-            return (1, "")
-        return (2, mark)
-
-    names = sorted(REGISTRY, key=lambda n: (rank(n), 0))
-    # sorted() is stable: within a class, REGISTRY insertion order holds
+    """Registry order exposed to the driver (``evidence_order``)."""
+    names = evidence_order(list(REGISTRY), NEWEST_GREEN, _CHANGED)
     return {n: REGISTRY[n] for n in names}
 
 

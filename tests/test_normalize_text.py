@@ -1,6 +1,7 @@
 """normalize_text: NFC + zero-width/control/whitespace cleanup parity
 with an independent Python reference on adversarial unicode fixtures."""
 
+import re
 import unicodedata
 
 import pytest
@@ -8,6 +9,19 @@ import pytest
 from probability_of_buying_two_products_together_hadoop_project_spark.operators import (
     text as text_ops,
 )
+
+
+_ZW = dict.fromkeys(map(ord, "\u200b\u200c\u200d\ufeff"), None)
+_CTRL = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
+_WS = re.compile(r"[ \t\n\r\f\v]+")
+
+
+def ref(t):
+    """Pure-Python mirror of normalize_text's cleaning rule."""
+    if t is None:
+        return None
+    t = unicodedata.normalize("NFC", t).translate(_ZW).replace("\xa0", " ")
+    return _WS.sub(" ", _CTRL.sub(" ", t)).strip()
 
 
 CASES = [
@@ -69,16 +83,6 @@ def test_normalize_matches_python_unicodedata_on_random_junk(spark):
         "".join(rng.choice(pool) for _ in range(rng.randint(0, 80)))
         for _ in range(200)
     ]
-    import re
-
-    zw = dict.fromkeys(map(ord, "​‌‍﻿"), None)
-    ctrl = re.compile(r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]")
-    ws = re.compile(r"[ \t\n\r\f\v]+")
-
-    def ref(t):
-        t = unicodedata.normalize("NFC", t).translate(zw).replace("\xa0", " ")
-        return ws.sub(" ", ctrl.sub(" ", t)).strip()
-
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
@@ -88,9 +92,10 @@ def test_normalize_matches_python_unicodedata_on_random_junk(spark):
 
 
 def test_normalize_ascii_fast_path_equals_udf_path(spark):
-    # the JVM fast branch must be output-identical to the pandas-UDF
-    # branch on every row it claims (pure ASCII incl. control chars and
-    # the \x0B/\f oddballs), and the union must route each row once
+    # the JVM branch (pure ASCII incl. control chars and the \x0B/\f
+    # oddballs) and the pandas-UDF branch (non-ASCII rows) must both
+    # equal the pure-Python mirror on all four output columns, and the
+    # union must route each row once
     import random
 
     rng = random.Random(9)
@@ -102,16 +107,18 @@ def test_normalize_ascii_fast_path_equals_udf_path(spark):
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    fast = {
+    got = {
         r.doc_id: (r.text, r.n_chars_raw, r.n_chars_clean, r.changed)
-        for r in text_ops.normalize_text(df, ascii_fast_path=True).collect()
+        for r in text_ops.normalize_text(df).collect()
     }
-    slow = {
-        r.doc_id: (r.text, r.n_chars_raw, r.n_chars_clean, r.changed)
-        for r in text_ops.normalize_text(df, ascii_fast_path=False).collect()
-    }
-    assert fast == slow
-    assert len(fast) == len(texts)
+
+    def mirror(t):
+        if t is None:
+            return (None, None, None, None)
+        want = ref(t)
+        return (want, len(t), len(want), int(want != t))
+
+    assert got == {i: mirror(t) for i, t in enumerate(texts)}
 
 
 def test_normalize_fast_path_plan_has_no_exchange_and_splits_udf(spark, sf_oracle):
