@@ -13,13 +13,12 @@ Patterns shown, fastest first:
   surface) — the modern analog of the reference's hand-rolled Mapper
   emitting multiple records per input
   (/root/reference/src/CrystalBallPair.java:38-64).
-- plain ``udf``: row-at-a-time; kept only as the pattern of last resort.
+- plain ``udf``: row-at-a-time; the pattern of last resort, not used here.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import DoubleType
 
@@ -39,8 +38,9 @@ class WindowedPairsUDTF:
     """Python UDTF emitting the reference's windowed (item, neighbor)
     pairs for one basket — the same contract as
     /root/reference/src/CrystalBallPair.java:42-63, used as a semantics
-    cross-check for the native array-expression pipeline
-    (operators/basket.py:pairs_expr).
+    cross-check for the native generator pipeline
+    (operators/basket.py:basket_pairs). A NULL item never stops a window:
+    SQL equality never holds for NULL, as in ``array_position``.
 
     Use ``F.lateral_join`` / ``SELECT ... FROM t, WindowedPairsUDTF(items)``
     style invocation. Slow path: one Python call per basket.
@@ -53,25 +53,7 @@ class WindowedPairsUDTF:
         for i in range(n - 1):  # last item never a current item
             p = items[i]
             for j in range(i + 1, n):
-                if items[j] == p:  # window stops before re-occurrence
+                if p is not None and items[j] == p:  # stop before re-occurrence
                     break
                 yield p, items[j]
 
-
-def quality_score_udf_rowwise():
-    """Row-at-a-time UDF variant of a quality heuristic — deliberately the
-    anti-pattern (serialized per row, no vectorization); tests use it only
-    to document the equivalence and the cost difference."""
-
-    def score(text: str | None) -> float:
-        if not text:
-            return 0.0
-        toks = text.split()
-        n_tok = len(toks)
-        if n_tok == 0:
-            return 0.0
-        uniq = len(set(toks)) / n_tok
-        band = 1.0 if 20 <= n_tok <= 1000 else (0.5 if n_tok >= 5 else 0.0)
-        return 0.3 * band + 0.2 * uniq
-
-    return F.udf(score, DoubleType())

@@ -20,10 +20,13 @@ For a basket line ``customer p1 p2 ... pK`` (whitespace-delimited,
 
 Spark-first design (NOT a port):
 
-* Pair generation is a pure array-expression pipeline — ``transform`` /
-  ``slice`` / ``array_position`` higher-order functions build the per-basket
-  pair list inside whole-stage codegen. No self-join, no UDF, no basket id
-  needed: the stage is embarrassingly parallel (a narrow map over baskets).
+* Pair generation is two generators over plain array functions: explode
+  the current items' positions, then explode each one's window
+  (``slice`` cut at ``array_position``). No lambda and no per-pair struct,
+  so the whole stage runs in whole-stage codegen (a higher-order-function
+  lambda is evaluated interpreted: ``tests/test_plans.py`` pins this). No
+  self-join, no UDF, no basket id needed: the stage is embarrassingly
+  parallel (a narrow map over baskets).
 * The reference's in-mapper combining (/root/reference/src/CrystalBallPair.java:66-94)
   is subsumed by Catalyst's partial hash aggregation: ``groupBy(item,
   neighbor).count()`` does map-side combine automatically.
@@ -40,41 +43,8 @@ handles skewed hot items at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# Per-basket ordered pair generation over an `items: array<string>` column.
-# 0-based index i runs over current items (all but the last element, rule 1);
-# the window for items[i] is items[i+1..] truncated before the next
-# re-occurrence of items[i] (rule 2). `slice`/`element_at` are 1-based, hence
-# the +1/+2 offsets. array_position returns 0 when absent -> nullif/coalesce
-# turns that into "window runs to end of basket".
-_PAIRS_EXPR = """
-CASE WHEN size({items}) >= 2 THEN
-  flatten(
-    transform(
-      sequence(0, size({items}) - 2),
-      i -> transform(
-        slice(
-          {items},
-          i + 2,
-          coalesce(
-            nullif(array_position(slice({items}, i + 2, size({items})), element_at({items}, i + 1)), 0) - 1,
-            size({items})
-          )
-        ),
-        n -> struct(element_at({items}, i + 1) AS item, n AS neighbor)
-      )
-    )
-  )
-ELSE array() END
-"""
-
-
-def pairs_expr(items_col: str = "items") -> Column:
-    """Column of array<struct<item,neighbor>> — all windowed pairs of a basket."""
-    return F.expr(_PAIRS_EXPR.format(items=items_col))
-
 
 def baskets_from_text(df: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse reference-format basket lines into (customer, items).
@@ -114,6 +84,11 @@ def baskets_from_lineitem(lineitem: DataFrame) -> DataFrame:
     the (linenumber, partkey) struct sort because linenumber is the high
     bits. Range contract: l_linenumber < 2^23 and 0 <= l_partkey < 2^40
     (TPC-H linenumber <= 7; partkey stays < 2^40 beyond SF 100k).
+
+    The unpack is one ``transform`` lambda (interpreted), run once per
+    item before pair generation, not once per pair. Collecting
+    (linenumber, partkey) structs would avoid it at the cost of the wider
+    exchange above.
     """
     pack = F.col("l_linenumber").cast("long") * F.lit(1 << 40) + F.col("l_partkey")
     return (
@@ -128,10 +103,27 @@ def baskets_from_lineitem(lineitem: DataFrame) -> DataFrame:
 
 
 def basket_pairs(baskets: DataFrame, items_col: str = "items") -> DataFrame:
-    """All windowed (item, neighbor) occurrences, with multiplicity (O3)."""
-    return baskets.select(F.explode(pairs_expr(items_col)).alias("pr")).select(
-        F.col("pr.item").alias("item"), F.col("pr.neighbor").alias("neighbor")
+    """All windowed (item, neighbor) occurrences, with multiplicity (O3).
+
+    Two generators, no lambda: the first explodes the 0-based positions of
+    the current items (all but the last element, rule 1); the second
+    explodes each current item's window, ``items[i+1..]`` cut before the
+    next re-occurrence of ``items[i]`` (rule 2). ``slice``/``element_at``
+    are 1-based, hence the +1/+2 offsets. ``array_position`` returns 0
+    when the item does not recur (the window runs to the end of the
+    basket) and NULL for a NULL current item (same). Empty, single-item
+    and NULL baskets emit nothing.
+    """
+    n = F.size(items_col)
+    positions = F.when(n >= 2, F.sequence(F.lit(0), n - 2)).otherwise(F.array())
+    current = baskets.select(
+        F.col(items_col).alias("_items"), F.explode(positions).alias("_i")
     )
+    items, i, size = F.col("_items"), F.col("_i"), F.size("_items")
+    item = F.element_at(items, i + 1)
+    stop = F.array_position(F.slice(items, i + 2, size), item)
+    window = F.slice(items, i + 2, F.coalesce(F.nullif(stop, F.lit(0)) - 1, size))
+    return current.select(item.alias("item"), F.explode(window).alias("neighbor"))
 
 
 def cooccurrence_counts(baskets: DataFrame) -> DataFrame:

@@ -169,22 +169,6 @@ def running(
     return out
 
 
-def lag_lead(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    cols: dict[str, tuple[str, int]],
-) -> DataFrame:
-    """lag/lead projections: cols maps output name -> (source col, offset);
-    negative offset = lag, positive = lead."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    out = df
-    for name, (src, off) in cols.items():
-        fn = F.lag(src, -off) if off < 0 else F.lead(src, off)
-        out = out.withColumn(name, fn.over(w))
-    return out
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

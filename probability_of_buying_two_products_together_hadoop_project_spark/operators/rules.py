@@ -18,18 +18,33 @@ from pyspark.sql import functions as F
 
 def basket_item_sets(baskets: DataFrame, items_col: str = "items") -> DataFrame:
     """Distinct items per basket (presence, not multiplicity — the
-    FPGrowth/association-rules data model)."""
+    FPGrowth/association-rules data model), in ascending order.
+
+    ``sort_array``, not ``array_sort``: the latter's default comparator is
+    a lambda Spark evaluates interpreted. ``sort_array`` puts a NULL item
+    first, so it is the ``a`` side of its pairs and the inner join to the
+    item counts drops it: no pair holds a NULL item, as in the SQL form
+    ``a.item < b.item``."""
     return baskets.select(
-        F.array_sort(F.array_distinct(F.col(items_col))).alias("items")
+        F.sort_array(F.array_distinct(F.col(items_col))).alias("items")
     ).filter(F.size("items") > 0)
+
+
+def _set_pairs(sets: DataFrame) -> DataFrame:
+    """(a, b) for every unordered pair of a sorted item set, ``a`` before
+    ``b``: two generators, no lambda (``posexplode`` gives each item's
+    0-based position ``i``; its partners are ``items[i+1..]``)."""
+    return sets.select("items", F.posexplode("items").alias("_i", "a")).select(
+        "a", F.explode(F.slice("items", F.col("_i") + 2, F.size("items"))).alias("b")
+    )
 
 
 def pair_support_confidence(baskets: DataFrame, min_support_count: int = 1) -> DataFrame:
     """Supports + confidence for 1 -> 1 rules over co-present pairs.
 
     All counts are exact integers; confidence is a deterministic double
-    division. Pair generation is a per-basket array expression (all
-    unordered pairs of the distinct item set), then one groupBy.
+    division. Pair generation is ``_set_pairs`` (all unordered pairs of
+    the distinct item set), then one groupBy.
     """
     sets = basket_item_sets(baskets)
     # total basket count as a 1-row broadcast side, NOT a driver-side
@@ -41,15 +56,8 @@ def pair_support_confidence(baskets: DataFrame, min_support_count: int = 1) -> D
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("item_cnt"))
     )
-    pairs_expr = F.expr(
-        """
-        flatten(transform(items, (x, i) ->
-          transform(slice(items, i + 2, size(items)), y -> struct(x AS a, y AS b))))
-        """
-    )
     pair_cnt = (
-        sets.select(F.explode(pairs_expr).alias("p"))
-        .select("p.a", "p.b")
+        _set_pairs(sets)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
         .filter(F.col("pair_cnt") >= min_support_count)
@@ -105,9 +113,9 @@ def rule_interest_measures(
     and IEEE sqrt are correctly rounded — the temperature_mix rule), so
     all values are bit-exact cross-engine.
 
-    Plan: the pair_support_confidence shape — per-basket array pair
-    explode, one groupBy (map-side combined), item counts and the
-    1-row basket total broadcast back; both rule directions come from
+    Plan: the pair_support_confidence shape — ``_set_pairs``, one
+    groupBy (map-side combined), item counts and the 1-row basket total
+    broadcast back; both rule directions come from
     one canonical pair table (array explode, no second aggregation).
     """
     sets = basket_item_sets(baskets)
@@ -117,15 +125,8 @@ def rule_interest_measures(
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("_ic"))
     )
-    pairs_expr = F.expr(
-        """
-        flatten(transform(items, (x, i) ->
-          transform(slice(items, i + 2, size(items)), y -> struct(x AS a, y AS b))))
-        """
-    )
     pair_cnt = (
-        sets.select(F.explode(pairs_expr).alias("p"))
-        .select("p.a", "p.b")
+        _set_pairs(sets)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("_pc"))
         .filter(F.col("_pc") >= min_support_count)

@@ -15898,18 +15898,6 @@ _CHANGED = {
     "pca_top_component_embeddings": 14,
     "pca_two_components_embeddings": 14,
     "wordpiece_encode_bpe_vocab": 14,
-    "pagerank_cooccurrence": 14,
-    "ppr_seeded_cooccurrence": 14,
-    "label_propagation_items": 14,
-    "bfs_hops_items": 14,
-    "kcore_peel_items": 14,
-    "triangle_count_sampled": 14,
-    "triangle_count_items": 14,
-    "scan_edge_similarity_items": 14,
-    "scan_clusters_items": 14,
-    "clustering_coeff_items": 14,
-    "graph_transitivity_items": 14,
-    "truss_peel_items": 14,
     "ngram_jaccard_pairs": 14,
     "dedup_clusters": 14,
     "dedup_cluster_canonical": 14,
@@ -15918,6 +15906,29 @@ _CHANGED = {
     "containment_near_dup": 14,
     "containment_quotes_trigram": 14,
     "normalize_text_nfc": 14,
+    "cooccurrence_pairs": 15,
+    "cooccurrence_pairs_joined": 15,
+    "cooccurrence_pairs_skewed": 15,
+    "cooccurrence_stripes": 15,
+    "cooccurrence_topk": 15,
+    "cooccurrence_sessions": 15,
+    "pair_rules": 15,
+    "rule_interest_measures": 15,
+    "fpgrowth_itemsets": 15,
+    "fpgrowth_itemsets_pairs": 15,
+    "fpgrowth_rules_pairs": 15,
+    "pagerank_cooccurrence": 15,
+    "ppr_seeded_cooccurrence": 15,
+    "label_propagation_items": 15,
+    "bfs_hops_items": 15,
+    "kcore_peel_items": 15,
+    "triangle_count_sampled": 15,
+    "triangle_count_items": 15,
+    "scan_edge_similarity_items": 15,
+    "scan_clusters_items": 15,
+    "clustering_coeff_items": 15,
+    "graph_transitivity_items": 15,
+    "truss_peel_items": 15,
 }
 
 

@@ -23,10 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.text(path)
-
-
 def read_csv(
     spark: SparkSession, path: str, schema: str | None = None, sep: str = ",",
     header: bool = True,

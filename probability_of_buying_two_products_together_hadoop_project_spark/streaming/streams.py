@@ -93,16 +93,14 @@ def cooccurrence_stream(baskets: DataFrame) -> DataFrame:
     """Streaming Crystal Ball: incremental windowed-pair counts over a
     stream of baskets (customer, items array).
 
-    The pair generation is the SAME array expression as the batch operator
-    (operators/basket.py) — one logical plan, two execution modes; the
+    The pair generation is the batch operator's ``basket_pairs``
+    (operators/basket.py) — one pair path, two execution modes; the
     running groupBy count is classic streaming state. Downstream consumers
     normalize to probabilities per item (complete/update output modes).
     """
-    from ..operators.basket import pairs_expr
+    from ..operators.basket import basket_pairs
 
-    pairs = baskets.select(F.explode(pairs_expr("items")).alias("pr")).select(
-        F.col("pr.item").alias("item"), F.col("pr.neighbor").alias("neighbor")
-    )
+    pairs = basket_pairs(baskets)
     return pairs.groupBy("item", "neighbor").agg(F.count(F.lit(1)).alias("pair_cnt"))
 
 

@@ -17,13 +17,14 @@ from probability_of_buying_two_products_together_hadoop_project_spark.operators 
 def simulate_pairs(items):
     """Reference mapper loop re-implemented independently (the SURVEY's
     verified semantics): last token never current; window stops before the
-    next re-occurrence; multiplicity counted."""
+    next re-occurrence; multiplicity counted. SQL equality: a NULL item
+    never recurs, so its window runs to the end; a NULL basket has no pairs."""
     out = Counter()
-    K = len(items)
+    K = len(items or [])
     for i in range(K - 1):  # last item never current
         p = items[i]
         for j in range(i + 1, K):
-            if items[j] == p:
+            if p is not None and items[j] == p:
                 break
             out[(p, items[j])] += 1
     return out
@@ -33,10 +34,16 @@ item_ids = st.integers(min_value=10, max_value=25).map(str)
 baskets_strategy = st.lists(
     st.lists(item_ids, min_size=0, max_size=12), min_size=1, max_size=8
 )
+# NULL elements and NULL baskets beside the well-formed ones
+nullable_baskets_strategy = st.lists(
+    st.none() | st.lists(st.none() | item_ids, min_size=0, max_size=12),
+    min_size=1,
+    max_size=8,
+)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(baskets_strategy)
+@given(nullable_baskets_strategy)
 def test_pairs_match_simulator(spark, basket_lists):
     expected = Counter()
     for items in basket_lists:
@@ -70,8 +77,37 @@ def test_invariants(spark, basket_lists):
 
 
 def test_single_item_and_empty_baskets_emit_nothing(spark):
-    df = spark.createDataFrame([(["7"],), ([],)], "items: array<string>")
+    df = spark.createDataFrame([(["7"],), ([],), (None,)], "items: array<string>")
     assert basket.cooccurrence_counts(df).count() == 0
+
+
+def test_edge_baskets_pairs_match_simulator(spark):
+    """Every occurrence, not just the counts: NULL elements (a NULL current
+    item's window runs to the end; a NULL neighbor is a neighbor), a NULL
+    basket, empty and single-item baskets, and a current item that recurs
+    at the last position (its window stops just before it)."""
+    basket_lists = [
+        [None, "a", None, "a"],
+        [None, None],
+        None,
+        [],
+        ["7"],
+        ["a", "b", "c", "a"],
+        ["a", "b", "a", "b"],
+        ["x", "x"],
+    ]
+    df = spark.createDataFrame(
+        [(items,) for items in basket_lists], "items: array<string>"
+    )
+    got = Counter(
+        (r["item"], r["neighbor"]) for r in basket.basket_pairs(df).collect()
+    )
+    expected = Counter()
+    for items in basket_lists:
+        expected.update(simulate_pairs(items))
+    assert got == expected
+    assert expected[("a", "b")] == 3 and expected[("a", "c")] == 1
+    assert expected[(None, None)] == 2 and expected[("a", None)] == 1
 
 
 def test_text_parsing_roundtrip(spark):

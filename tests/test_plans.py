@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket
+from probability_of_buying_two_products_together_hadoop_project_spark.operators import basket, rules
 from probability_of_buying_two_products_together_hadoop_project_spark.plans import explain
 
 
@@ -42,6 +42,68 @@ def test_cooccurrence_single_pair_exchange(spark, sf_smoke):
     df = basket.cooccurrence_pairs(basket.baskets_from_lineitem(li))
     n = explain.count_exchanges(df)
     assert n == 3, f"flagship must be exactly 3 exchanges, got {n}"
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _expression_classes(plan):
+    """Simple class names of every expression in a logical plan tree."""
+    out, todo, nodes = set(), [], [plan]
+    while nodes:
+        node = nodes.pop()
+        todo += _seq(node.expressions())
+        nodes += _seq(node.children())
+    while todo:
+        e = todo.pop()
+        out.add(e.getClass().getSimpleName())
+        todo += _seq(e.children())
+    return out
+
+
+def _generates_in_codegen(plan):
+    """For each Generate node of an executed physical plan (AQE stages
+    unwrapped): whether a WholeStageCodegenExec holds it."""
+    out, todo = [], [(plan, False)]
+    while todo:
+        node, in_codegen = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append((node.executedPlan(), in_codegen))
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append((node.plan(), in_codegen))
+            continue
+        if name == "GenerateExec":
+            out.append(in_codegen)
+        # an exchange starts a new stage: codegen does not reach below it
+        below = in_codegen and "Exchange" not in name
+        below = below or name == "WholeStageCodegenExec"
+        todo += [(c, below) for c in _seq(node.children())]
+    return out
+
+
+def test_pair_generation_has_no_lambda_and_runs_in_codegen(spark):
+    """The windowed pairs (basket_pairs) and the rule pair counts are
+    generators over plain array functions: no higher-order-function lambda
+    (Spark evaluates those interpreted) and every Generate inside a
+    whole-stage-codegen stage."""
+    df = spark.createDataFrame(
+        [(["1", "2", "1", "3"],), (["2", "3"],), (["4"],), ([],), (None,)],
+        "items: array<string>",
+    )
+    for name, q in (
+        ("basket_pairs", basket.basket_pairs(df)),
+        ("cooccurrence_pairs", basket.cooccurrence_pairs(df)),
+        ("pair_support_confidence", rules.pair_support_confidence(df)),
+        ("rule_interest_measures", rules.rule_interest_measures(df, 1)),
+    ):
+        qe = q._jdf.queryExecution()
+        assert "LambdaFunction" not in _expression_classes(qe.analyzed()), name
+        assert q.collect()
+        in_codegen = _generates_in_codegen(qe.executedPlan())
+        assert in_codegen and all(in_codegen), (name, in_codegen)
 
 
 def test_cooccurrence_bucketed_layout_drops_basket_exchange(spark, sf_smoke, tmp_path):

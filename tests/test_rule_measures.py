@@ -49,3 +49,22 @@ def test_rule_measures_min_support_filter(spark):
     pairs = {(r.antecedent, r.consequent) for r in got}
     assert ("a", "b") in pairs and ("b", "a") in pairs
     assert ("a", "c") not in pairs  # pair_cnt 1 < 2
+
+
+def test_pair_support_confidence_pairs_and_null_items(spark):
+    """Unordered co-present pairs, ``a < b``, each counted once per basket:
+    duplicates collapse, a NULL item pairs with nothing (as the SQL
+    ``a.item < b.item`` join), and empty or NULL baskets add nothing."""
+    baskets = [
+        (["c", "a", "b", "a"],),
+        (["b", None, "a"],),
+        (["a"],),
+        ([],),
+        (None,),
+    ]
+    df = spark.createDataFrame(baskets, "items array<string>")
+    got = {
+        (r.a, r.b): (r.pair_cnt, r.a_cnt)
+        for r in rules.pair_support_confidence(df).collect()
+    }
+    assert got == {("a", "b"): (2, 3), ("a", "c"): (1, 3), ("b", "c"): (1, 2)}

@@ -21,15 +21,8 @@ def test_pandas_udf_token_count_matches_native(spark):
             assert r["n_udf"] == r["n_native"], r
 
 
-def test_udtf_pairs_match_native_expression(spark):
+def _udtf_and_native_counts(spark, baskets):
     spark.udtf.register("windowed_pairs", udfs.WindowedPairsUDTF)
-    lines = [
-        "Mary 34 56 29 12 34 56 92 29 34 12",
-        "Kelly 92 29 12 34 79 29 56 12 34 18",
-        "Bob 1 2 1 2 1",
-    ]
-    df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    baskets = basket.baskets_from_text(df)
     baskets.createOrReplaceTempView("b")
     got = (
         spark.sql("SELECT p.* FROM b, LATERAL windowed_pairs(items) p")
@@ -38,9 +31,39 @@ def test_udtf_pairs_match_native_expression(spark):
         .collect()
     )
     want = basket.cooccurrence_counts(baskets).collect()
-    assert {(r["item"], r["neighbor"]): r["count"] for r in got} == {
-        (r["item"], r["neighbor"]): r["pair_cnt"] for r in want
-    }
+    return (
+        {(r["item"], r["neighbor"]): r["count"] for r in got},
+        {(r["item"], r["neighbor"]): r["pair_cnt"] for r in want},
+    )
+
+
+def test_udtf_pairs_match_native_expression(spark):
+    lines = [
+        "Mary 34 56 29 12 34 56 92 29 34 12",
+        "Kelly 92 29 12 34 79 29 56 12 34 18",
+        "Bob 1 2 1 2 1",
+    ]
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    got, want = _udtf_and_native_counts(spark, basket.baskets_from_text(df))
+    assert got == want
+
+
+def test_udtf_pairs_match_native_on_edge_baskets(spark):
+    """NULL elements, a NULL basket, empty and single-item baskets, and a
+    current item recurring at the last position."""
+    baskets = spark.createDataFrame(
+        [
+            ([None, "a", None, "a"],),
+            (None,),
+            ([],),
+            (["7"],),
+            (["a", "b", "c", "a"],),
+        ],
+        "items: array<string>",
+    )
+    got, want = _udtf_and_native_counts(spark, baskets)
+    assert got == want
+    assert want[(None, None)] == 1 and want[("a", "b")] == 1
 
 
 def test_join_marginals_variant_equal(spark):
